@@ -14,8 +14,9 @@ Headline workload (mirrors the north-star pipeline at bench scale):
 * minhash_dedup        — MinHash-LSH near-dup pairs over replicated pages
 * ann_topk             — brute-force cosine top-k over sf embeddings
 * pricing_summary      — TPC-H-ish Q1 aggregation over sf lineitem
-* dup_clusters         — connected components (min-label + pointer doubling)
-                         over chain-shaped duplicate pairs
+* dup_clusters         — connected components (partition-local union-find
+                         + driver finish of the contracted residue) over
+                         chain-shaped duplicate pairs
 * lineage_resume       — no-op resume of a fully-committed lineage run:
                          manifest validation only, must be O(buckets) not
                          O(data) — the recovery-latency story at 100 TB
@@ -291,8 +292,7 @@ def main():
         """Connected components over chain-shaped pair edges: clusters of
         16 docs linked as diameter-15 chains — the worst realistic shape
         for label propagation (web dup clusters are small but chained
-        through near-dup intermediaries), converging in ~4 pointer-doubling
-        rounds. n nodes, ~15n/16 edges; every round is two shuffles."""
+        through near-dup intermediaries). n nodes, ~15n/16 edges."""
         from geocode_spark.operators.dedup import dup_clusters
 
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))

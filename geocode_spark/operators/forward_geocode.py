@@ -13,7 +13,7 @@ ops — no per-row Python anywhere:
   and the fact-side join becomes 1:1 broadcast — ZERO fact-side shuffle
 * partial-postcode fallback (cpo.py:217-228): likewise precomputed as a
   prefix-mean dimension over (outward, inward-prefix, prefix-len) for all
-  prefix lengths 0..3, again a 1:1 broadcast join (status 2)
+  prefix lengths 0..3 in one aggregation, a 1:1 broadcast join (status 2)
 * status codes: 1 full match, 2 partial, 0 failed (geocode.py:79-85)
 
 Physical plan at any scale: scan -> codegen'd normalize -> two
@@ -73,22 +73,17 @@ def exact_dim(cpo: DataFrame) -> DataFrame:
 def prefix_dim(cpo: DataFrame, max_len: int = 3) -> DataFrame:
     """(outward, inward-prefix, prefix-len) -> mean lat/lon over matching
     units, for every prefix length 0..max_len. The precomputed form of
-    geocode_one's filtered mean (cpo.py:217-228)."""
-    parts = []
-    for L in range(0, max_len + 1):
-        parts.append(
-            cpo.groupBy(
-                F.col("outward_postcode").alias("__ow"),
-                F.substring("inward_postcode", 1, L).alias("__iw") if L > 0
-                else F.lit("").alias("__iw"),
-            ).agg(F.avg("latitude").alias("__lat2"),
-                  F.avg("longitude").alias("__lon2"))
-            .withColumn("__iwlen", F.lit(L))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    geocode_one's filtered mean (cpo.py:217-228). Each CPO row is exploded
+    once per prefix length into ONE aggregation, so the CPO scan (and its
+    BNG UDF) runs once, not once per length."""
+    lens = F.explode(F.array(*map(F.lit, range(max_len + 1))))
+    iw = F.when(F.col("__iwlen") == 0, "").otherwise(
+        F.expr("substring(inward_postcode, 1, __iwlen)"))
+    return (cpo.select("*", lens.alias("__iwlen"))
+            .groupBy(F.col("outward_postcode").alias("__ow"),
+                     iw.alias("__iw"), "__iwlen")
+            .agg(F.avg("latitude").alias("__lat2"),
+                 F.avg("longitude").alias("__lon2")))
 
 
 def prepare_dims(cpo: DataFrame, max_len: int = 3

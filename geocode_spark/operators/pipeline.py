@@ -8,12 +8,11 @@ constituency / GSP regions (cell-index + ray-cast), and emit one row per
 (url, postcode) with cell/tile assignments. ``text`` passes through
 byte-identical per url (invariant).
 
-Plan shape: scan -> codegen'd extract+explode -> BroadcastHashJoin (CPO) ->
-groupBy(url, postcode) partial-agg -> mapInPandas (cell+PIP) -> sink. The
-only shuffle is the per-(url,postcode) aggregation of multi-unit matches;
-everything else pipelines with the scan — at 10^12 docs the job is
-embarrassingly parallel and skew-free (no hot join key ever shuffles:
-dimension sides are broadcast).
+Plan shape: scan -> codegen'd extract+explode -> two BroadcastHashJoins
+(exact and prefix CPO dimensions) -> mapInPandas (cell+PIP) -> sink. The
+fact side never shuffles; only the small CPO dimension aggregations do, on
+the broadcast side — at 10^12 docs the job is embarrassingly parallel and
+skew-free.
 """
 
 from __future__ import annotations
@@ -40,15 +39,18 @@ def geocode_documents(
     cpo: DataFrame,
     llsoa_prep: PreparedRegions | None = None,
     gsp_prep: PreparedRegions | None = None,
-    dedup_keys: bool = True,
 ) -> DataFrame:
     """Full pipeline. Returns one row per (url, extracted postcode) with
     latitude/longitude/match_status [+ llsoa [+ gsp, gsp_group]] and the
     point's cell_id (tile assignment) when a region set is given.
+    Mentions are forward-geocoded directly through the broadcast CPO
+    dimensions: one pass over the pages, no distinct-key pre-pass.
     """
+    # postcode first: keeps the public column order that
+    # test_geocode_documents_schema_unchanged pins
     mentions = extract_postcode_mentions(pages).select(
-        "url", "warc_ts", "lang", "postcode")
-    geo = forward_geocode(mentions, cpo, dedup_keys=dedup_keys)
+        "postcode", "url", "warc_ts", "lang")
+    geo = forward_geocode(mentions, cpo)
 
     def add_tile(df):
         # coarse tile assignment (raster partition key for sinks/rollups);

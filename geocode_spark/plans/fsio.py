@@ -189,11 +189,3 @@ class FsPath:
                 pa.PythonFile(raw, mode="r")).metadata.num_rows
         finally:
             raw.close()
-
-    def parquet_rows(self) -> int:
-        """Sum of footer ``num_rows`` over ``*.parquet`` children of this
-        DIRECTORY (0 when it does not exist)."""
-        if not self.exists():
-            return 0
-        return sum(self.child(name).parquet_file_rows()
-                   for name in self.list_names("*.parquet"))

@@ -278,7 +278,7 @@ class TestPipelineFixedCostCuts:
         out = geocode_documents(pages, cpo, llsoa, gsp)
         # the chained-call column order is the public schema; the fused
         # multi path must not reorder it
-        # (postcode leads after gsp: the dedup_keys join re-keys on it)
+        # (postcode leads after gsp: geocode_documents selects it first)
         assert out.columns == [
             "gsp", "postcode", "url", "warc_ts", "lang", "latitude",
             "longitude", "match_status", "llsoa", "cell_id", "tile_id",
