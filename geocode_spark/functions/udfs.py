@@ -10,6 +10,9 @@ GeoPandas-internal spatial index (utilities.py:267).
 
 from __future__ import annotations
 
+import sys
+import zipimport
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -25,9 +28,34 @@ _EN = StructType([StructField("easting", DoubleType()),
                   StructField("northing", DoubleType())])
 
 
+def settle_worker_imports() -> None:
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on CPython 3.11 each cached zipimporter then
+    re-reads its whole archive directory. A reused worker holds one per
+    package directory imported from ``pyspark.zip``, the Spark core jar and
+    ``py4j``: tens of thousands of central-directory entries per task. With
+    the entries gone, the next task's invalidation has no zip importer to
+    refresh, and a later import rebuilds the importer from
+    ``zipimport._zip_directory_cache`` without reading the archive again.
+
+    Skipping the re-read is safe because an archive on a worker's
+    ``sys.path`` does not change while that worker lives: Spark registers
+    each added file name once and refuses a second add of the same name
+    from a different path. Every function this package ships to Python
+    workers calls this first.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+
+
 @F.pandas_udf(_LATLON)
 def bng_to_latlon_udf(eastings: pd.Series, northings: pd.Series) -> pd.DataFrame:
     """EPSG:27700 -> WGS84 (utilities.py:365-391 bng2latlon), Arrow batch."""
+    settle_worker_imports()
     lat, lon = bng_to_latlon(eastings.to_numpy(np.float64),
                              northings.to_numpy(np.float64))
     return pd.DataFrame({"lat": lat, "lon": lon})
@@ -36,6 +64,7 @@ def bng_to_latlon_udf(eastings: pd.Series, northings: pd.Series) -> pd.DataFrame
 @F.pandas_udf(_EN)
 def latlon_to_bng_udf(lats: pd.Series, lons: pd.Series) -> pd.DataFrame:
     """WGS84 -> EPSG:27700 (utilities.py:335-362 latlon2bng), Arrow batch."""
+    settle_worker_imports()
     e, n = latlon_to_bng(lats.to_numpy(np.float64), lons.to_numpy(np.float64))
     return pd.DataFrame({"easting": e, "northing": n})
 
@@ -45,6 +74,7 @@ def cell_udf(res: int):
 
     @F.pandas_udf(LongType())
     def _cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
+        settle_worker_imports()
         return pd.Series(cell_of(lat.to_numpy(np.float64),
                                  lon.to_numpy(np.float64), res))
 
@@ -61,6 +91,7 @@ def cell_ij_udf(res: int):
 
     @F.pandas_udf(schema)
     def _ij(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+        settle_worker_imports()
         i, j = _ij_of(lat.to_numpy(np.float64), lon.to_numpy(np.float64), res)
         return pd.DataFrame({"i": i, "j": j})
 
@@ -72,6 +103,7 @@ def kring_udf(k: int):
 
     @F.pandas_udf(ArrayType(LongType()))
     def _kring(cell: pd.Series) -> pd.Series:
+        settle_worker_imports()
         return cell.map(lambda c: kring(int(c), k).tolist())
 
     return _kring

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
                                StructType)
 
+from ..functions.udfs import settle_worker_imports
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -112,6 +114,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
     @F.pandas_udf(ArrayType(LongType()))
     def sig(texts: pd.Series) -> pd.Series:
+        settle_worker_imports()
         # Round-6 note: a chunk-batched minimum.reduceat variant (one big
         # multiply + segmented min across docs) was implemented,
         # bit-verified and REJECTED on measurement: 1.05 s vs 0.70 s for
@@ -285,6 +288,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     n_bands, rpb = bands, rows_per_band
 
     def bucket_pairs(batches):
+        settle_worker_imports()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -488,6 +492,7 @@ def simhash(df: DataFrame, text_col: str = "text", seed: int = 42) -> DataFrame:
 
     @F.pandas_udf(LongType())
     def sh(texts: pd.Series) -> pd.Series:
+        settle_worker_imports()
         out = np.zeros(len(texts), dtype=np.int64)
         for i, t in enumerate(texts):
             toks = [w for w in splitter.split((t or "").lower()) if w]
@@ -654,6 +659,7 @@ def _local_contract(edges: DataFrame, id_type) -> DataFrame:
                          StructField("label", id_type)])
 
     def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         parent: dict = {}
 
         def find(x):

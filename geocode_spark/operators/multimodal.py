@@ -42,6 +42,7 @@ from ..functions.media import (MediaFormatError, avi_frames,
                                decode_media_meta, media_features,
                                mp3_frames, resize_image_payload, sniff,
                                wav_frames)
+from ..functions.udfs import settle_worker_imports
 
 MEDIA_META_SCHEMA = StructType([
     StructField("media_type", StringType()),
@@ -91,6 +92,7 @@ def with_media_meta(df: DataFrame, binary_col: str = "html",
                             + [StructField("media", MEDIA_META_SCHEMA)])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         for pdf in batches:
             metas = [fn(b) for b in pdf[binary_col]]
             out = pdf.copy()
@@ -114,6 +116,7 @@ def extract_features(df: DataFrame, binary_col: str = "html", dim: int = 16,
                             + [StructField("features", ArrayType(DoubleType()))])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         for pdf in batches:
             out = pdf.copy()
             out["features"] = [fn(b).tolist() for b in pdf[binary_col]]
@@ -156,6 +159,7 @@ def resize_media(df: DataFrame, binary_col: str = "html",
     ])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -206,6 +210,7 @@ def frame_sample(df: DataFrame, binary_col: str = "html", n_frames: int = 4,
     ])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -47,6 +47,7 @@ from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
 from ..cells import cell_to_ij, covering_cells
+from ..functions.udfs import settle_worker_imports
 
 
 def raster_schema(region_col: str = "region_id") -> StructType:
@@ -83,6 +84,7 @@ def rasterize_regions(regions: DataFrame, res: int,
     src = regions.select(region_col, xs_col, ys_col, offsets_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

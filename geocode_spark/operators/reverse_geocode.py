@@ -42,6 +42,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
 from ..cells import cell_of, cell_to_ij, cell_from_ij
+from ..functions.udfs import settle_worker_imports
 from ..geometry import (METERS_PER_DEG, PreparedPolygon,
                         dist_to_polygon_m_prepared, dist_to_polygon_prepared,
                         points_in_polygon_prepared)
@@ -488,6 +489,7 @@ def reverse_geocode(
         in_cols = [f.name for f in keep_fields]
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            settle_worker_imports()
             index = _get_index(b_cover.value, b_geoms.value)
             for pdf in batches:
                 if len(pdf) == 0:
@@ -586,9 +588,10 @@ def reverse_geocode_multi(
         out_fields = out_fields + [StructField("cell_id", LongType())]
     out_schema = StructType(out_fields)
     in_cols = [f.name for f in keep_fields]
-    cell_res = specs[0][2] if specs else None
+    cell_res = specs[0][2]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         # Build (or fetch) every spec's index ONCE per stage and hold
         # direct references across batches: with more specs than the
         # FIFO cache holds, per-batch _get_index calls would thrash the
@@ -638,6 +641,7 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
 
     @F.pandas_udf(LongType())
     def cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
+        settle_worker_imports()
         return pd.Series(cell_of(lat.to_numpy(np.float64),
                                  lon.to_numpy(np.float64), res))
 
@@ -687,6 +691,7 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     ])
 
     def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
         geoms = b_geoms.value
         pps = _get_prepared_geoms(geoms)
         for pdf in batches:

@@ -20,6 +20,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
+from ..functions.udfs import settle_worker_imports
+
 
 def _dot(a, b):
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
@@ -95,6 +97,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 qs.append((r[0], v, float(np.sqrt(sq))))
 
         def score(batches):
+            settle_worker_imports()
             for pdf in batches:
                 ids = pdf[id_col].to_numpy()
                 vecs = pdf[vec_col]
@@ -187,6 +190,7 @@ def lsh_buckets(df: DataFrame, dim: int, bits: int = 16,
 
     @F.pandas_udf(LongType())
     def sketch(vecs: pd.Series) -> pd.Series:
+        settle_worker_imports()
         m = np.stack(vecs.to_numpy())
         signs = (m @ H.T) > 0
         weights = (1 << np.arange(bits)).astype(np.int64)
@@ -290,6 +294,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     def assigner(n_lists: int):
         @F.pandas_udf(LongType())
         def nearest(vecs: pd.Series) -> pd.Series:
+            settle_worker_imports()
             m = np.stack(vecs.to_numpy())
             nm = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
             return pd.Series((nm @ cent.T).argmax(axis=1).astype(np.int64))
@@ -297,6 +302,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
 
     @F.pandas_udf("array<long>")
     def probe_lists(vecs: pd.Series) -> pd.Series:
+        settle_worker_imports()
         m = np.stack(vecs.to_numpy())
         nm = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         sims = nm @ cent.T

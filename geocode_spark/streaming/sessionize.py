@@ -18,6 +18,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType,
                                TimestampType)
 
+from ..functions.udfs import settle_worker_imports
+
 SESSION_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("session_start", TimestampType()),
@@ -43,6 +45,7 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
     gap_us = gap_seconds * 1_000_000
 
     def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        settle_worker_imports()
         (user_id,) = key
         if state.hasTimedOut:
             start_us, last_us, n, total = state.get
