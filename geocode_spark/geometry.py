@@ -269,6 +269,167 @@ def dist_to_polygon_m_prepared(px, py, pp: PreparedPolygon,
     return _dist_kernel_prepared(px, py, pp, chunk, metric=True)
 
 
+class EdgeTable:
+    """Many :class:`PreparedPolygon` y-bucket tables in one set of arrays.
+
+    Edge arrays ``x1 y1 y2 dx dy`` (plus the planar squared length
+    ``elen2``) hold every polygon's bucket-ordered edges, then every
+    polygon's plain edge list. Polygon ``p``'s bucket offsets are
+    ``boffs[bbase[p]:bbase[p] + nb[p] + 1]`` and its plain edges start at
+    ``ebase[p]`` (``ne[p]`` of them). One ragged gather then reaches the
+    edges of any mix of (point, polygon) pairs.
+    """
+
+    __slots__ = ("x1", "y1", "y2", "dx", "dy", "elen2",
+                 "by0", "bh", "nb", "bbase", "boffs", "ebase", "ne")
+
+    def __init__(self, polys: list):
+        live = [pp for pp in polys if pp.nb > 0]
+        self.nb = np.array([pp.nb for pp in polys], np.int64)
+        self.by0 = np.array([pp.by0 if pp.nb else 0.0 for pp in polys])
+        self.bh = np.array([pp.bh if pp.nb else 1.0 for pp in polys])
+        size = self.nb + (self.nb > 0)
+        self.bbase = np.cumsum(size) - size
+        bucketed = np.cumsum([0] + [pp.bx1.size for pp in live])
+        self.boffs = np.concatenate(
+            [np.empty(0, np.int64)]
+            + [pp.boffs + b for pp, b in zip(live, bucketed)])
+        self.ne = np.array([pp.x1.size for pp in polys], np.int64)
+        self.ebase = bucketed[-1] + np.cumsum(self.ne) - self.ne
+        for name, src, plain in (("x1", "bx1", "x1"), ("y1", "by1", "y1"),
+                                 ("y2", "by2", "y2"), ("dx", "bdx", "dx"),
+                                 ("dy", "bdy", "dy")):
+            setattr(self, name, np.concatenate(
+                [np.empty(0)] + [getattr(pp, src) for pp in live]
+                + [getattr(pp, plain) for pp in live]))
+        el2 = self.dx * self.dx + self.dy * self.dy
+        self.elen2 = np.where(el2 == 0.0, 1.0, el2)
+
+
+def _ragged(starts: np.ndarray, cnt: np.ndarray):
+    """(row, slot) over the ranges [starts[i], starts[i] + cnt[i])."""
+    tot = int(cnt.sum())
+    row = np.repeat(np.arange(cnt.size), cnt)
+    slot = np.repeat(starts - np.r_[np.int64(0), np.cumsum(cnt)[:-1]], cnt) \
+        + np.arange(tot, dtype=np.int64)
+    return row, slot
+
+
+def dist_to_polygons_pairs(px, py, poly, reach, et: EdgeTable, metric: bool,
+                           chunk: int = 1 << 16) -> np.ndarray:
+    """Distance from point ``i`` to polygon ``poly[i]``, many pairs at once.
+
+    Bounded by ``reach`` (per pair, in the output unit): a pair whose
+    distance is at most ``reach`` gets exactly the value
+    :func:`_dist_kernel_prepared` gives it; any other pair gets a value above
+    ``reach``, or ``inf``. Only edges whose y-span lies within ``reach`` of
+    the point's y can be that close (a segment is never nearer than its
+    y-gap, and metre distances leave y unscaled), so each pair gathers just
+    the y-buckets overlapping ``py +- reach`` (padded outward far beyond
+    rounding). Per (pair, edge) element the expression tree is the
+    per-polygon kernel's; a pair's minimum is taken over a subset that holds
+    its nearest edge, so the result is bit-identical. Containment is the
+    even-odd ray-cast over the point's own bucket (distance 0 inside).
+    ``chunk`` caps the (pair x edge) elements held at once.
+    """
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    out = np.full(px.shape[0], np.inf)
+    sel = np.flatnonzero(et.nb[poly] > 0)
+    if sel.size == 0:
+        return out
+    px, py, poly = px[sel], py[sel], poly[sel]
+    band = np.asarray(reach, np.float64)[sel]
+    if metric:
+        band = band / METERS_PER_DEG
+    band = band * (1.0 + 1e-9) + 1e-9
+    by0 = et.by0[poly]
+    bh = et.bh[poly]
+    top = et.nb[poly] - 1
+    base = et.bbase[poly]
+    lo = np.clip((py - band - by0) / bh, 0, top).astype(np.int64)
+    hi = np.clip((py + band - by0) / bh, 0, top).astype(np.int64)
+    ib = np.clip(((py - by0) / bh).astype(np.int64), 0, top)  # ray-cast bucket
+    d_start = et.boffs[base + lo]
+    d_cnt = et.boffs[base + hi + 1] - d_start
+    # edges spanning several buckets repeat in the bucketed order: once
+    # the buckets in reach hold more than the polygon, take its plain list
+    plain = d_cnt >= et.ne[poly]
+    d_start[plain] = et.ebase[poly[plain]]
+    d_cnt[plain] = et.ne[poly[plain]]
+    r_start = et.boffs[base + ib]
+    r_cnt = et.boffs[base + ib + 1] - r_start
+    cum = np.cumsum(d_cnt + r_cnt)
+    a = 0
+    while a < sel.size:
+        b = max(int(np.searchsorted(cum, (cum[a - 1] if a else 0) + chunk,
+                                    side="right")), a + 1)
+        out[sel[a:b]] = _pairs_chunk(px[a:b], py[a:b], d_start[a:b],
+                                     d_cnt[a:b], r_start[a:b], r_cnt[a:b],
+                                     et, metric)
+        a = b
+    return out
+
+
+def _pairs_chunk(px, py, d_start, d_cnt, r_start, r_cnt, et: EdgeTable,
+                 metric: bool) -> np.ndarray:
+    d2min = np.full(px.shape[0], np.inf)
+    has = np.flatnonzero(d_cnt)
+    if has.size:
+        # the per-polygon kernel's expression tree, evaluated in place
+        row, slot = _ragged(d_start, d_cnt)
+        ey = et.dy[slot]
+        dys = py[row]
+        dys -= et.y1[slot]
+        dxs = px[row]
+        dxs -= et.x1[slot]
+        if metric:
+            c = np.cos(np.radians(py))[row]
+            dxs *= c
+            exs = et.dx[slot]
+            exs *= c
+            el2 = exs * exs
+            np.multiply(ey, ey, out=c)
+            el2 += c
+            el2[el2 == 0.0] = 1.0
+        else:
+            exs = et.dx[slot]
+            el2 = et.elen2[slot]
+        t = dxs * exs
+        tmp = dys * ey
+        t += tmp
+        t /= el2
+        np.clip(t, 0.0, 1.0, out=t)
+        np.multiply(t, exs, out=tmp)
+        dxs -= tmp                             # qx
+        np.multiply(t, ey, out=tmp)
+        dys -= tmp                             # qy
+        dxs *= dxs
+        dys *= dys
+        dxs += dys
+        first = np.cumsum(d_cnt)[has] - d_cnt[has]
+        d2min[has] = np.minimum.reduceat(dxs, first)
+    d = np.sqrt(d2min)
+    if metric:
+        d = d * METERS_PER_DEG
+    row, slot = _ragged(r_start, r_cnt)
+    if slot.size:
+        y1 = et.y1[slot]
+        pyy = py[row]
+        c1 = y1 > pyy
+        c2 = et.y2[slot] > pyy
+        np.not_equal(c1, c2, out=c1)           # edge straddles the ray
+        t = pyy - y1
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t /= et.dy[slot]
+        t *= et.dx[slot]
+        t += et.x1[slot]
+        np.less(px[row], t, out=c2)
+        c2 &= c1
+        d[np.bincount(row[c2], minlength=px.shape[0]) % 2 == 1] = 0.0
+    return d
+
+
 def dist_to_polygon(px, py, xs, ys, ring_offsets, chunk: int = 2048) -> np.ndarray:
     """Min distance from each point to the polygon boundary (planar units).
 

@@ -11,7 +11,9 @@ Re-expresses the reference's computational core
   3. boundary-tie dedup keep-first                  -> min(region_seq) per row
      (region_seq = stable region input order, GeoPandas keep-first parity)
   4. bounded nearest for misses (sjoin_nearest)     -> k-ring expansion over
-     neighbour cells + exact point-to-polygon distance, take argmin
+     neighbour cells; each round scores its new (point, region) pairs in
+     one pass over an all-regions edge table (only the edges within reach
+     of each pair), exact point-to-polygon distance, take argmin
   5. NA -> None normalization                       -> SQL NULL natively
 
 Two physical strategies, both shuffle-free on the candidate side:
@@ -43,9 +45,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
 
 from ..cells import cell_of, cell_to_ij, cell_from_ij
 from ..functions.udfs import settle_worker_imports
-from ..geometry import (METERS_PER_DEG, PreparedPolygon,
-                        dist_to_polygon_m_prepared, dist_to_polygon_prepared,
-                        points_in_polygon_prepared)
+from ..geometry import (METERS_PER_DEG, EdgeTable, PreparedPolygon,
+                        dist_to_polygons_pairs, points_in_polygon_prepared)
 from ..regions import PreparedRegions
 
 
@@ -67,7 +68,7 @@ class _CoverIndex:
     """
 
     __slots__ = ("cover", "geoms", "cells", "starts", "cand_rid", "cand_seq",
-                 "cand_interior", "rids", "bbox", "_pp", "_knn")
+                 "cand_interior", "rids", "bbox", "_pp", "_knn", "_edges")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
         self.cover = cover    # strong refs pin the id()-based cache key
@@ -95,6 +96,7 @@ class _CoverIndex:
         self.bbox = [geoms[r][3] for r in self.rids]
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
         self._knn = None
+        self._edges = None
 
     def prepared(self, r: int) -> PreparedPolygon:
         pp = self._pp[r]
@@ -142,6 +144,13 @@ class _CoverIndex:
                              np.r_[first, len(sc)].astype(np.int64),
                              krid[order])
         return self._knn
+
+    def edge_table(self) -> EdgeTable:
+        """Every region's y-bucket edges in one table (kNN pair scoring)."""
+        if self._edges is None:
+            self._edges = EdgeTable([self.prepared(r)
+                                     for r in range(len(self.rids))])
+        return self._edges
 
 
 # Per-worker index cache: (id(cover), id(geoms)) -> _CoverIndex. Strong refs
@@ -233,24 +242,30 @@ def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
 
 def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
                   index: _CoverIndex, res: int, max_distance: float,
-                  max_k: int | None = None,
-                  metric: bool = False) -> pd.DataFrame:
+                  metric: bool = False):
     """Ring-expansion bounded nearest-region (sjoin_nearest semantics,
-    utilities.py:270-284).
+    utilities.py:270-284) -> ``(pos, region_id, dist)`` arrays for the
+    points of ``miss_pos`` that have a region within ``max_distance``.
 
     Distance unit: degrees (prep space) when ``metric=False``, METRES when
     ``metric=True`` (local equirectangular scaling — the reference's
     ``max_distance`` is in the regions' CRS units, which is metres for every
     BNG-sourced dataset, utilities.py:253-255).
 
-    Fully vectorized: each round k expands every unresolved point's
-    neighbour disc at once (broadcasted i/j grids), one searchsorted probe
-    against the index's (cell -> region) table, then per-region batched
-    exact distances. A point is final once its best distance is provably
-    inside the already-searched radius (no closer region can appear in a
-    later ring)."""
+    Each round k expands every unresolved point's ring of neighbour cells
+    at once and probes the index's (cell -> region) table. The round's
+    (point, region) pairs not scored in an earlier round (a re-score can
+    never win: updates need a strictly smaller distance) are scored in one
+    pass over the index's edge table, each pair only against the edges
+    within ``min(max_distance, the point's best so far)`` of it. Then each
+    point takes its nearest pair, equal distances going to the region that
+    first appears among all the round's pairs (rank), and keeps it if
+    strictly nearer than its best: the choice a visit of the regions in
+    rank order, updating on strictly smaller distances, makes. A point is
+    final once its best distance is provably inside the already-searched
+    radius (no closer region can appear in a later ring)."""
     n = np.int64(1) << res
-    out_rid = np.full(len(miss_pos), None, dtype=object)
+    out_rid = np.full(len(miss_pos), -1, np.int64)
     out_dist = np.full(len(miss_pos), np.inf)
     _, ci, cj = cell_to_ij(cell_of(py, px, res))
     unresolved = np.arange(len(miss_pos))
@@ -264,18 +279,17 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
         ring_scale = METERS_PER_DEG * np.minimum(1.0, 2.0 * cos_pt)
     else:
         ring_scale = np.ones(len(miss_pos))
-    if max_k is None:
-        # enough rings that safe_radius(max_k) >= max_distance for the
-        # slowest point: a region inside the bound can never be missed by
-        # early exhaustion (sjoin_nearest(max_distance) parity)
-        worst = float(ring_scale.min()) if len(miss_pos) else 1.0
-        max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
-        max_k = min(max(max_k, 1), 4096)
+    # enough rings that safe_radius(max_k) >= max_distance for the slowest
+    # point: a region inside the bound can never be missed by early
+    # exhaustion (sjoin_nearest(max_distance) parity)
+    worst = float(ring_scale.min()) if len(miss_pos) else 1.0
+    max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
+    max_k = min(max(max_k, 1), 4096)
     kcells, kstarts, krid = index.knn_table()
     n_rids = max(len(index.rids), 1)
-    dist_fn = dist_to_polygon_m_prepared if metric else dist_to_polygon_prepared
+    seen = np.empty(0, np.int64)   # sorted keys of the pairs scored so far
     for k in range(1, max_k + 1):
-        if len(unresolved) == 0:
+        if len(unresolved) == 0 or len(kcells) == 0:
             break
         # probe only the NEW cells of round k: the full 3x3 disc on the
         # first round, the 8k-cell perimeter ring afterwards. Best distances
@@ -286,19 +300,16 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
             dij = np.stack(np.meshgrid(di, di, indexing="ij"), -1).reshape(-1, 2)
         else:
             side = np.arange(-k, k + 1)
-            edge = np.concatenate([
+            dij = np.concatenate([
                 np.stack([np.full(2 * k + 1, -k), side], 1),
                 np.stack([np.full(2 * k + 1, k), side], 1),
                 np.stack([side[1:-1], np.full(2 * k - 1, -k)], 1),
                 np.stack([side[1:-1], np.full(2 * k - 1, k)], 1),
             ])
-            dij = edge
         ii = (ci[unresolved, None] + dij[None, :, 0]) % n
         jj = np.clip(cj[unresolved, None] + dij[None, :, 1], 0, n - 1)
         u_rep = np.broadcast_to(unresolved[:, None], ii.shape).ravel()
         ring_cells = cell_from_ij(ii.ravel(), jj.ravel(), res)
-        if len(kcells) == 0:
-            break
         loc = np.searchsorted(kcells, ring_cells)
         np.minimum(loc, len(kcells) - 1, out=loc)
         h = np.flatnonzero(kcells[loc] == ring_cells)
@@ -308,42 +319,33 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
             tot = int(cnt.sum())
             kslot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]],
                               cnt) + np.arange(tot, dtype=np.int64)
-            pu = np.repeat(u_rep[h], cnt)
             prid = krid[kslot]
-            # dedup (point, region) keep-first; then visit regions in
-            # first-appearance order — equal-distance ties resolve exactly
-            # as the previous pandas groupby(sort=False) iteration did
-            key = pu * n_rids + prid
-            _, fidx = np.unique(key, return_index=True)
-            fidx.sort()
-            pu = pu[fidx]
-            prid = prid[fidx]
+            # visit order: regions ranked by first appearance in the round
             urf, rfirst = np.unique(prid, return_index=True)
             rank = np.empty(n_rids, np.int64)
             rank[urf[np.argsort(rfirst)]] = np.arange(len(urf))
-            order = np.argsort(rank[prid], kind="stable")
-            ps = prid[order]
-            gb = np.flatnonzero(np.r_[True, ps[1:] != ps[:-1]])
-            ge = np.r_[gb[1:], len(ps)]
-            for g0, g1 in zip(gb, ge):
-                rows = order[g0:g1]
-                r = int(ps[g0])
-                uu = pu[rows]
-                d = dist_fn(px[uu], py[uu], index.prepared(r))
-                better = d < out_dist[uu]
-                upd = uu[better]
-                out_dist[upd] = d[better]
-                out_rid[upd] = index.rids[r]
+            key = np.unique(np.repeat(u_rep[h], cnt) * n_rids + prid)
+            if seen.size:
+                at = np.searchsorted(seen, key)
+                np.minimum(at, seen.size - 1, out=at)
+                key = key[seen[at] != key]
+            seen = np.sort(np.concatenate([seen, key]))
+            pu, prid = np.divmod(key, n_rids)
+            d = dist_to_polygons_pairs(
+                px[pu], py[pu], prid, np.minimum(max_distance, out_dist[pu]),
+                index.edge_table(), metric)
+            # nearest pair per point (pu is ascending), ties to lower rank
+            o = np.lexsort((rank[prid], d, pu))
+            o = o[np.diff(pu[o], prepend=-1) != 0]
+            o = o[d[o] < out_dist[pu[o]]]
+            out_dist[pu[o]] = d[o]
+            out_rid[pu[o]] = prid[o]
         safe_radius = (k - 0.5) * cell_deg * 0.5 * ring_scale[unresolved]
         done = (out_dist[unresolved]
                 <= np.minimum(max_distance, safe_radius))
         unresolved = unresolved[~done]
     valid = out_dist <= max_distance
-    return pd.DataFrame({
-        "__pos": miss_pos[valid],
-        "region_id": out_rid[valid],
-        "dist": out_dist[valid],
-    })
+    return miss_pos[valid], index.rids[out_rid[valid]], out_dist[valid]
 
 
 # (SparkContext id, PreparedRegions id) -> (sc, prep, cover b., geoms b.).
@@ -506,12 +508,11 @@ def reverse_geocode(
                 if max_distance is not None:
                     miss = np.flatnonzero(pd.isna(rid) & finite)
                     if len(miss):
-                        near = _knn_fallback(miss, lon_all[miss], lat_all[miss],
-                                             index, res, max_distance,
-                                             metric=metric)
-                        npos = near["__pos"].to_numpy()
-                        rid[npos] = near["region_id"].to_numpy()
-                        kdist[npos] = near["dist"].to_numpy()
+                        npos, nrid, ndist = _knn_fallback(
+                            miss, lon_all[miss], lat_all[miss], index, res,
+                            max_distance, metric=metric)
+                        rid[npos] = nrid
+                        kdist[npos] = ndist
                 out = pdf[in_cols].copy()
                 out[out_col] = rid
                 if keep_distance:
@@ -614,11 +615,10 @@ def reverse_geocode_multi(
                 if max_d is not None:
                     miss = np.flatnonzero(pd.isna(rid) & finite)
                     if len(miss):
-                        near = _knn_fallback(
+                        npos, nrid, _ = _knn_fallback(
                             miss, lon_all[miss], lat_all[miss],
                             index, res, max_d, metric=metric)
-                        rid[near["__pos"].to_numpy()] = \
-                            near["region_id"].to_numpy()
+                        rid[npos] = nrid
                 out[out_col] = rid
             if keep_cell:
                 cid = np.full(len(pdf), None, dtype=object)

@@ -309,7 +309,7 @@ class TestLineageSinglePass:
         # partitionBy layout: bucket=<i> dirs under one write root
         assert sorted(p.name for p in out.glob("bucket=*")) == [
             f"bucket={i}" for i in range(4)]
-        # manifests carry footer-derived counts
+        # manifests carry the counts observed on the write
         m = json.loads((out / "_lineage" / "bucket=0.json").read_text())
         assert m["rows"] == res[0].rows and m["committed"]
         # round-trip: partition column readable
