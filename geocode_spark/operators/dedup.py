@@ -203,35 +203,22 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     recomputes (slower, correct). ``clear_signature_cache()`` drops
     everything eagerly (benchmarks use it to measure cold runs).
 
-    Round-6 plan (guide §2.3/2.4 — fewer exchanges, aggregate instead of
-    self-join): signatures ride the band explode into ONE hash shuffle on
+    Plan: signatures ride the band explode into ONE hash shuffle on
     ``(band, band_hash)``; a sorted-partition Arrow pass then generates
     each bucket's pairs AND verifies their signature-estimated Jaccard in
     numpy in the same breath, and only PASSING pairs flow into the final
-    distinct. The previous plan self-joined the banded table (8.7M raw
-    candidate rows at bench scale for 1.56M distinct pairs), ran a
-    separate hot-bucket aggregate+join, deduped the 8.7M rows, then
-    re-joined signatures twice and evaluated an interpreted 64-element
-    zip_with per pair — five exchanges and two join builds where one
-    shuffle + one distinct now suffice. Verification arithmetic is
-    bit-identical (integer match count / num_hashes in float64, the same
-    IEEE division the old Catalyst expression performed), and the
-    candidate/cap semantics are unchanged: a bucket larger than
-    ``max_bucket_size`` contributes nothing, pairs are id_a < id_b within
-    a bucket. Scale note: the old verification depended on the planner
-    broadcasting the signature table (impossible at corpus scale, where
-    it would degrade to sort-merge joins of full signatures); the new
-    shape shuffles each signature exactly ``bands`` times and nothing
-    else — the standard distributed MinHash-LSH layout.
+    distinct. Verification is the integer match count / num_hashes in
+    float64. A bucket larger than ``max_bucket_size`` contributes nothing;
+    pairs are id_a < id_b within a bucket. Each signature is shuffled
+    exactly ``bands`` times and nothing depends on broadcasting the
+    signature table — the standard distributed MinHash-LSH layout.
 
     The bucket walk is ``mapInArrow`` (guide §4.2): the signature and
     band-hash list columns are reshaped straight off the Arrow values
     buffers into (n, num_hashes)/(n, bands) numpy matrices and ids stay
     Arrow arrays end to end (pairs gathered with ``pyarrow.compute.take``)
-    — no per-row object materialization anywhere in the pass. Measured
-    interleaved A/B vs the previous mapInPandas walk at bench scale:
-    pass-only noop 1.50 -> 1.20 s, output verified row-identical
-    (exceptAll both directions empty on the 1,560,346-row bench output)."""
+    — no per-row object materialization anywhere in the pass. The
+    measurements behind this plan are in OPTIMIZATION_r06.md §2 and §2a."""
     if bands * rows_per_band > num_hashes:
         raise ValueError(
             f"bands({bands}) * rows_per_band({rows_per_band}) exceeds the "

@@ -53,27 +53,6 @@ MEDIA_META_SCHEMA = StructType([
 ])
 
 
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic TEST DOUBLE (the pre-round-4 stub, kept so plumbing
-    tests can run without constructing valid media bytes): derives
-    metadata purely from payload byte counts. Production default is the
-    real ``functions.media.decode_media_meta``."""
-    if payload is None:
-        return {"media_type": None, "n_bytes": 0, "width": None,
-                "height": None, "duration_ms": None}
-    n = len(payload)
-    head = bytes(payload[:4])
-    if head.startswith(b"\x89PN") or head.startswith(b"\xff\xd8"):
-        mt = "image"
-    elif head.startswith(b"RIFF") or head.startswith(b"ID3"):
-        mt = "audio"
-    else:
-        mt = "binary"
-    return {"media_type": mt, "n_bytes": n,
-            "width": int(n % 1920) + 1, "height": int((n * 7) % 1080) + 1,
-            "duration_ms": int(n % 60000)}
-
-
 def with_media_meta(df: DataFrame, binary_col: str = "html",
                     decode_fn: Callable[[bytes], dict] | None = None,
                     strict: bool = False) -> DataFrame:

@@ -20,10 +20,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import extract_postcodes
+from ..functions.udfs import cell_udf, extract_postcodes
 from ..regions import PreparedRegions
 from .forward_geocode import forward_geocode
-from .reverse_geocode import reverse_geocode, reverse_geocode_multi
+from .reverse_geocode import reverse_geocode_multi
 
 
 def extract_postcode_mentions(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -41,10 +41,12 @@ def geocode_documents(
     gsp_prep: PreparedRegions | None = None,
 ) -> DataFrame:
     """Full pipeline. Returns one row per (url, extracted postcode) with
-    latitude/longitude/match_status [+ llsoa [+ gsp, gsp_group]] and the
-    point's cell_id (tile assignment) when a region set is given.
+    latitude/longitude/match_status, plus llsoa/cell_id/tile_id when
+    ``llsoa_prep`` is given and gsp/gsp_group when ``gsp_prep`` is.
     Mentions are forward-geocoded directly through the broadcast CPO
-    dimensions: one pass over the pages, no distinct-key pre-pass.
+    dimensions (one pass over the pages, no distinct-key pre-pass); every
+    given region set is assigned in one reverse_geocode_multi pass, so the
+    points cross the JVM/Python boundary once.
     """
     # postcode first: keeps the public column order that
     # test_geocode_documents_schema_unchanged pins
@@ -52,33 +54,23 @@ def geocode_documents(
         "postcode", "url", "warc_ts", "lang")
     geo = forward_geocode(mentions, cpo)
 
-    def add_tile(df):
-        # coarse tile assignment (raster partition key for sinks/rollups);
-        # cell_id is the fine-resolution index cell
-        from ..functions.udfs import cell_udf
-
-        return df.withColumn(
-            "tile_id",
-            F.when(F.col("latitude").isNotNull(),
-                   cell_udf(8)(F.col("latitude"), F.col("longitude"))))
-
-    if llsoa_prep is not None and gsp_prep is not None:
-        # both lookups in ONE Arrow pass (reverse_geocode_multi): the
-        # points cross the JVM/Python boundary once instead of twice —
-        # at 10^12 docs that's a full pipeline stage saved. Output columns
-        # reordered to the chained-call schema for parity.
-        base_cols = geo.columns
-        geo = reverse_geocode_multi(
-            geo, [(llsoa_prep, "llsoa"), (gsp_prep, "gsp")], keep_cell=True)
-        geo = add_tile(geo).select(
-            *base_cols, "llsoa", "cell_id", "tile_id", "gsp")
-    else:
+    assignments = [(p, c) for p, c in ((llsoa_prep, "llsoa"),
+                                       (gsp_prep, "gsp")) if p is not None]
+    if assignments:
+        cols = geo.columns
+        geo = reverse_geocode_multi(geo, assignments,
+                                    keep_cell=llsoa_prep is not None)
         if llsoa_prep is not None:
-            geo = reverse_geocode(geo, llsoa_prep, out_col="llsoa",
-                                  keep_cell=True)
-            geo = add_tile(geo)
+            # coarse tile assignment (raster partition key for sinks/
+            # rollups); cell_id is the fine-resolution index cell
+            geo = geo.withColumn("tile_id", F.when(
+                F.col("latitude").isNotNull(),
+                cell_udf(8)(F.col("latitude"), F.col("longitude"))))
+            cols = cols + ["llsoa", "cell_id", "tile_id"]
         if gsp_prep is not None:
-            geo = reverse_geocode(geo, gsp_prep, out_col="gsp")
+            cols = cols + ["gsp"]
+        # the chained-call column order is the public schema
+        geo = geo.select(*cols)
     if gsp_prep is not None and gsp_prep.attrs is not None:
         attrs = geo.sparkSession.createDataFrame(
             gsp_prep.attrs.rename(columns={"GSPs": "gsp",

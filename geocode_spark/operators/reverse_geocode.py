@@ -21,9 +21,11 @@ Two physical strategies, both shuffle-free on the candidate side:
 * ``fused`` (default): one ``mapInPandas`` pass per partition — cell encode,
   candidate probe against the broadcast cover map, ray-cast, dedup, and kNN
   fallback all inside a single Arrow batch. Zero shuffles; the plan is
-  scan -> mapInPandas -> (sink). Skew-proof: no shuffle keys exist.
+  scan -> mapInPandas -> (sink). Skew-proof: no shuffle keys exist. Single-
+  and multi-set calls run the same batch loop (``_fused``, one spec per set).
 * ``join``: Catalyst-visible BroadcastHashJoin of points vs the covering-cell
-  map, then mapInPandas PIP on candidates, then one aggregation shuffle per
+  map, then mapInPandas PIP on candidates (against the same per-worker
+  ``_CoverIndex`` the fused loop probes), then one aggregation shuffle per
   row_id. Useful when the candidate set should be materialized / audited.
 
 At 100 TB the fused path streams straight off the scan with per-partition
@@ -54,21 +56,21 @@ class _CoverIndex:
     """Executor-side probe structure over one broadcast (cover, geoms) pair,
     built ONCE per python worker and reused across every Arrow batch.
 
-    The previous per-batch ``pandas.merge`` against the cover DataFrame
-    re-factorized the FULL cover map for every ~10k-row batch (work and
-    memory traffic proportional to |cover|, not |batch|) and materialized
-    object-dtype candidate frames. This index pays one sort at build time,
-    then probes are ``searchsorted`` + ragged gathers over int arrays:
-    per-batch work proportional to the batch, no per-batch pandas objects,
-    and region geometry is edge-decomposed once (PreparedPolygon y-bucket
-    tables) instead of per call.
+    Cover rows are sorted by cell once at build time; a probe is a
+    ``searchsorted`` + ragged gather over int arrays, so per-batch work is
+    proportional to the batch, not to the cover map. Regions are addressed
+    by position: ``rids[i]`` is the id, ``code`` maps id -> i. Each
+    region's geometry is edge-decomposed lazily, once (PreparedPolygon
+    y-bucket tables). Both strategies probe it: the fused loop for the
+    whole lookup, the join strategy for its ray-casts.
 
     Everything is derived from the broadcast values, so the index is pure
     cache: same candidates, same keep-first ordering, same kernels.
     """
 
     __slots__ = ("cover", "geoms", "cells", "starts", "cand_rid", "cand_seq",
-                 "cand_interior", "rids", "bbox", "_pp", "_knn", "_edges")
+                 "cand_interior", "rids", "code", "bbox", "_pp", "_knn",
+                 "_edges")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
         self.cover = cover    # strong refs pin the id()-based cache key
@@ -93,6 +95,7 @@ class _CoverIndex:
             self.cand_rid = np.asarray(codes, np.int64)[order]
             self.cand_seq = cover["region_seq"].to_numpy(np.int64)[order]
             self.cand_interior = cover["interior"].to_numpy(bool)[order]
+        self.code = {r: i for i, r in enumerate(self.rids)}
         self.bbox = [geoms[r][3] for r in self.rids]
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
         self._knn = None
@@ -135,8 +138,7 @@ class _CoverIndex:
             else:
                 small = self.cover[["cell", "region_id"]].drop_duplicates()
                 kcells = small["cell"].to_numpy(np.int64)
-                rmap = {r: i for i, r in enumerate(self.rids)}
-                krid = small["region_id"].map(rmap).to_numpy(np.int64)
+                krid = small["region_id"].map(self.code).to_numpy(np.int64)
                 order = np.argsort(kcells, kind="stable")
                 sc = kcells[order]
                 first = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
@@ -160,22 +162,6 @@ class _CoverIndex:
 # when a worker serves many distinct region sets.
 _INDEX_CACHE: OrderedDict = OrderedDict()
 _INDEX_CACHE_SIZE = 4
-
-
-def _get_prepared_geoms(geoms: dict) -> dict:
-    """Per-worker lazy {region_id -> PreparedPolygon} cache for code paths
-    that carry only the geometry broadcast (join strategy). Same FIFO bound
-    and id-pinning discipline as _get_index."""
-    key = ("geoms", id(geoms))
-    hit = _INDEX_CACHE.get(key)
-    if hit is not None and hit[0] is geoms:
-        _INDEX_CACHE.move_to_end(key)
-        return hit[1]
-    entry = (geoms, {})
-    _INDEX_CACHE[key] = entry
-    while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
-        _INDEX_CACHE.popitem(last=False)
-    return entry[1]
 
 
 def _get_index(cover: pd.DataFrame, geoms: dict) -> _CoverIndex:
@@ -418,6 +404,88 @@ def _broadcast_prep(sc, prep: "PreparedRegions"):
     return b_cover, b_geoms
 
 
+def _spec(sc, prep: PreparedRegions, out_col: str,
+          max_distance: float | None, distance_unit: str | None,
+          dist_col: str | None = None) -> tuple:
+    """One fused-loop lookup: ``(b_cover, b_geoms, res, out_col,
+    max_distance, metric, dist_col)``. The unit defaults to the regions'
+    source CRS units (utilities.py:253-255)."""
+    if distance_unit is None:
+        distance_unit = "m" if prep.crs == "EPSG:27700" else "deg"
+    if distance_unit not in ("m", "deg"):
+        raise ValueError("distance_unit must be 'm' or 'deg'")
+    b_cover, b_geoms = _broadcast_prep(sc, prep)
+    return (b_cover, b_geoms, prep.res, out_col, max_distance,
+            distance_unit == "m", dist_col)
+
+
+def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
+           output_cols: list[str] | None, keep_cell: bool) -> DataFrame:
+    """The fused batch loop: every spec's lookup in ONE mapInPandas pass,
+    coordinates decoded once per batch. Columns: the kept input columns,
+    every ``out_col``, ``cell_id`` (first spec's resolution) when
+    ``keep_cell``, every ``dist_col`` (matched to the schema by name)."""
+    keep_fields = (points.schema.fields if output_cols is None else
+                   [f for f in points.schema.fields
+                    if f.name in output_cols])
+    out_fields = (keep_fields
+                  + [StructField(s[3], StringType()) for s in specs])
+    if keep_cell:
+        out_fields = out_fields + [StructField("cell_id", LongType())]
+    out_fields = out_fields + [StructField(s[6], DoubleType())
+                               for s in specs if s[6] is not None]
+    out_schema = StructType(out_fields)
+    in_cols = [f.name for f in keep_fields]
+    cell_res = specs[0][2]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        settle_worker_imports()
+        # Build (or fetch) every spec's index ONCE per stage and hold
+        # direct references across batches: with more specs than the
+        # FIFO cache holds, per-batch _get_index calls would thrash the
+        # cache and re-sort every cover map on every batch.
+        indexes = [_get_index(s[0].value, s[1].value) for s in specs]
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out = pdf[in_cols].copy()
+            lat_all = pdf[lat_col].to_numpy(np.float64)
+            lon_all = pdf[lon_col].to_numpy(np.float64)
+            finite = np.isfinite(lat_all) & np.isfinite(lon_all)
+            vpos = np.flatnonzero(finite)
+            for (_, _, res, out_col, max_d, metric, dist_col), index in zip(
+                    specs, indexes):
+                rid = np.full(len(pdf), None, dtype=object)
+                if vpos.size:
+                    rid[vpos] = _assign_batch(index, lat_all[vpos],
+                                              lon_all[vpos], res)
+                kdist = np.full(len(pdf), np.nan)
+                if max_d is not None:
+                    miss = np.flatnonzero(pd.isna(rid) & finite)
+                    if len(miss):
+                        npos, nrid, ndist = _knn_fallback(
+                            miss, lon_all[miss], lat_all[miss],
+                            index, res, max_d, metric=metric)
+                        rid[npos] = nrid
+                        kdist[npos] = ndist
+                out[out_col] = rid
+                if dist_col is not None:
+                    # nullable Float64 so no-match rows surface as SQL NULL
+                    # (a plain float column would ship NaN through Arrow)
+                    kd = pd.array(kdist, dtype="Float64")
+                    kd[np.isnan(kdist)] = pd.NA
+                    out[dist_col] = kd
+            if keep_cell:
+                cid = np.full(len(pdf), None, dtype=object)
+                if finite.any():
+                    cid[finite] = cell_of(lat_all[finite], lon_all[finite],
+                                          cell_res)
+                out["cell_id"] = pd.array(cid, dtype="Int64")
+            yield out
+
+    return points.mapInPandas(run, schema=out_schema)
+
+
 def reverse_geocode(
     points: DataFrame,
     prep: PreparedRegions,
@@ -439,7 +507,8 @@ def reverse_geocode(
     the assignment); adds ``out_col`` (and ``cell_id`` when ``keep_cell``,
     ``knn_dist`` when ``keep_distance`` — NULL for direct PIP hits).
     Equivalent of utilities.reverse_geocode + the dataset adapters' rename
-    (ons_nrs.py:384, neso.py:298, eurostat.py:151).
+    (ons_nrs.py:384, neso.py:298, eurostat.py:151). The fused strategy is
+    the one-spec case of :func:`reverse_geocode_multi`.
 
     ``max_distance`` unit follows the reference's contract — the REGIONS'
     source CRS units (utilities.py:253-255): metres when the prepared set
@@ -454,17 +523,9 @@ def reverse_geocode(
     has no shuffle of its own, so skew only enters through input layout;
     salting rebalances it at the cost of one explicit shuffle.
     """
-    spark = points.sparkSession
-    sc = spark.sparkContext
-    b_cover, b_geoms = _broadcast_prep(sc, prep)
-    res = prep.res
-
-    if distance_unit is None:
-        # reference parity: unit = the regions' source CRS units
-        distance_unit = "m" if prep.crs == "EPSG:27700" else "deg"
-    if distance_unit not in ("m", "deg"):
-        raise ValueError("distance_unit must be 'm' or 'deg'")
-    metric = distance_unit == "m"
+    spec = _spec(points.sparkSession.sparkContext, prep, out_col,
+                 max_distance, distance_unit,
+                 "knn_dist" if keep_distance else None)
 
     if salt_partitions:
         # deterministic salt key only: a nondeterministic component (e.g.
@@ -479,56 +540,8 @@ def reverse_geocode(
                                     F.col(lat_col), F.col(lon_col))
 
     if strategy == "fused":
-        keep_fields = (points.schema.fields if output_cols is None else
-                       [f for f in points.schema.fields
-                        if f.name in output_cols])
-        out_fields = keep_fields + [StructField(out_col, StringType())]
-        if keep_cell:
-            out_fields = out_fields + [StructField("cell_id", LongType())]
-        if keep_distance:
-            out_fields = out_fields + [StructField("knn_dist", DoubleType())]
-        out_schema = StructType(out_fields)
-        in_cols = [f.name for f in keep_fields]
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            settle_worker_imports()
-            index = _get_index(b_cover.value, b_geoms.value)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lat_all = pdf[lat_col].to_numpy(np.float64)
-                lon_all = pdf[lon_col].to_numpy(np.float64)
-                finite = np.isfinite(lat_all) & np.isfinite(lon_all)
-                rid = np.full(len(pdf), None, dtype=object)
-                vpos = np.flatnonzero(finite)
-                if vpos.size:
-                    rid[vpos] = _assign_batch(index, lat_all[vpos],
-                                              lon_all[vpos], res)
-                kdist = np.full(len(pdf), np.nan)
-                if max_distance is not None:
-                    miss = np.flatnonzero(pd.isna(rid) & finite)
-                    if len(miss):
-                        npos, nrid, ndist = _knn_fallback(
-                            miss, lon_all[miss], lat_all[miss], index, res,
-                            max_distance, metric=metric)
-                        rid[npos] = nrid
-                        kdist[npos] = ndist
-                out = pdf[in_cols].copy()
-                out[out_col] = rid
-                if keep_distance:
-                    # nullable Float64 so no-match rows surface as SQL NULL
-                    # (a plain float column would ship NaN through Arrow)
-                    kd = pd.array(kdist, dtype="Float64")
-                    kd[np.isnan(kdist)] = pd.NA
-                    out["knn_dist"] = kd
-                if keep_cell:
-                    cid = np.full(len(pdf), None, dtype=object)
-                    if finite.any():
-                        cid[finite] = cell_of(lat_all[finite], lon_all[finite], res)
-                    out["cell_id"] = pd.array(cid, dtype="Int64")
-                yield out
-
-        return points.mapInPandas(run, schema=out_schema)
+        return _fused(points, [spec], lat_col, lon_col, output_cols,
+                      keep_cell)
 
     if strategy == "join":
         if max_distance is not None or output_cols is not None or keep_distance:
@@ -552,14 +565,15 @@ def reverse_geocode_multi(
     """Assign each point a region id from EVERY prepared set in ONE Arrow
     pass. ``assignments`` is a list of ``(prep, out_col)`` or
     ``(prep, out_col, opts)`` with opts keys ``max_distance`` /
-    ``distance_unit`` (same semantics as :func:`reverse_geocode`).
+    ``distance_unit`` (same semantics as :func:`reverse_geocode`); any
+    other key is rejected on the driver.
 
-    At 100 TB this is the difference between k full-data passes (chained
-    reverse_geocode calls: k mapInPandas stages, the points crossing the
-    JVM/Python boundary and re-decoding coordinates k times) and one: a
-    single Python stage reuses the decoded coordinate arrays for every
-    lookup. Same per-lookup kernels (_assign_batch / _knn_fallback over the
-    shared _CoverIndex), so assignments match the chained form exactly.
+    One Python stage decodes each batch's coordinates once and runs every
+    lookup on them (_assign_batch / _knn_fallback over each set's
+    _CoverIndex), where chained reverse_geocode calls would be k
+    mapInPandas stages, the points crossing the JVM/Python boundary k
+    times. It is the same batch loop a single-set reverse_geocode runs,
+    so assignments match the chained form exactly.
 
     ``keep_cell`` adds one ``cell_id`` column at the FIRST assignment's
     resolution (the chained equivalent of keep_cell on the first call)."""
@@ -567,68 +581,19 @@ def reverse_geocode_multi(
         # fail on the driver, not inside an executor task (keep_cell=True
         # would otherwise call cell_of(..., res=None) at run time)
         raise ValueError("assignments must name at least one prepared set")
-    spark = points.sparkSession
-    sc = spark.sparkContext
+    sc = points.sparkSession.sparkContext
     specs = []
     for a in assignments:
         prep, out_col = a[0], a[1]
         opts = a[2] if len(a) > 2 else {}
-        unit = opts.get("distance_unit") or (
-            "m" if prep.crs == "EPSG:27700" else "deg")
-        if unit not in ("m", "deg"):
-            raise ValueError("distance_unit must be 'm' or 'deg'")
-        b_cover, b_geoms = _broadcast_prep(sc, prep)
-        specs.append((b_cover, b_geoms, prep.res, (prep.name, prep.crs),
-                      out_col, opts.get("max_distance"), unit == "m"))
-    keep_fields = (points.schema.fields if output_cols is None else
-                   [f for f in points.schema.fields
-                    if f.name in output_cols])
-    out_fields = (keep_fields
-                  + [StructField(s[4], StringType()) for s in specs])
-    if keep_cell:
-        out_fields = out_fields + [StructField("cell_id", LongType())]
-    out_schema = StructType(out_fields)
-    in_cols = [f.name for f in keep_fields]
-    cell_res = specs[0][2]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        # Build (or fetch) every spec's index ONCE per stage and hold
-        # direct references across batches: with more specs than the
-        # FIFO cache holds, per-batch _get_index calls would thrash the
-        # cache and re-sort every cover map on every batch.
-        indexes = [_get_index(s[0].value, s[1].value) for s in specs]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[in_cols].copy()
-            lat_all = pdf[lat_col].to_numpy(np.float64)
-            lon_all = pdf[lon_col].to_numpy(np.float64)
-            finite = np.isfinite(lat_all) & np.isfinite(lon_all)
-            vpos = np.flatnonzero(finite)
-            for (b_cover, b_geoms, res, (name, crs), out_col, max_d,
-                 metric), index in zip(specs, indexes):
-                rid = np.full(len(pdf), None, dtype=object)
-                if vpos.size:
-                    rid[vpos] = _assign_batch(index, lat_all[vpos],
-                                              lon_all[vpos], res)
-                if max_d is not None:
-                    miss = np.flatnonzero(pd.isna(rid) & finite)
-                    if len(miss):
-                        npos, nrid, _ = _knn_fallback(
-                            miss, lon_all[miss], lat_all[miss],
-                            index, res, max_d, metric=metric)
-                        rid[npos] = nrid
-                out[out_col] = rid
-            if keep_cell:
-                cid = np.full(len(pdf), None, dtype=object)
-                if finite.any():
-                    cid[finite] = cell_of(lat_all[finite], lon_all[finite],
-                                          cell_res)
-                out["cell_id"] = pd.array(cid, dtype="Int64")
-            yield out
-
-    return points.mapInPandas(run, schema=out_schema)
+        unknown = sorted(set(opts) - {"max_distance", "distance_unit"})
+        if unknown:
+            # a misspelt key would otherwise silently drop the fallback
+            raise ValueError(f"unknown option(s) {unknown} for {out_col!r}: "
+                             "expected max_distance / distance_unit")
+        specs.append(_spec(sc, prep, out_col, opts.get("max_distance"),
+                           opts.get("distance_unit")))
+    return _fused(points, specs, lat_col, lon_col, output_cols, keep_cell)
 
 
 def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
@@ -636,7 +601,7 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     min(region_seq) aggregation per input row."""
     spark = points.sparkSession
     sc = spark.sparkContext
-    _, b_geoms = _broadcast_prep(sc, prep)
+    b_cover, b_geoms = _broadcast_prep(sc, prep)
     res = prep.res
 
     @F.pandas_udf(LongType())
@@ -692,8 +657,7 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
 
     def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         settle_worker_imports()
-        geoms = b_geoms.value
-        pps = _get_prepared_geoms(geoms)
+        index = _get_index(b_cover.value, b_geoms.value)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -708,14 +672,11 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
                 b = sub[bnd]
                 okk = np.zeros(len(b), dtype=bool)
                 for rid, grp in b.groupby("region_id", sort=False):
-                    pp = pps.get(rid)
-                    if pp is None:
-                        xs, ys, offs, _bbox = geoms[rid]
-                        pp = pps[rid] = PreparedPolygon(xs, ys, offs)
                     px = grp[lon_col].to_numpy(np.float64)
                     py = grp[lat_col].to_numpy(np.float64)
                     okk[b.index.get_indexer(grp.index)] = \
-                        points_in_polygon_prepared(px, py, pp)
+                        points_in_polygon_prepared(
+                            px, py, index.prepared(index.code[rid]))
                 keep[bnd] = okk
             inside = sub[keep]
             yield pd.DataFrame({

@@ -5,6 +5,7 @@ manifests."""
 import gc
 import json
 
+import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
@@ -284,6 +285,95 @@ class TestPipelineFixedCostCuts:
             "longitude", "match_status", "llsoa", "cell_id", "tile_id",
             "gsp_group"]
         assert out.count() > 0
+
+    def test_geocode_documents_column_lists(self, spark, fixture_dir):
+        """Every prep combination keeps the chained-call column order, and
+        single-set values equal a direct reverse_geocode of the same
+        forward-geocoded mentions."""
+        from collections import Counter
+
+        from geocode_spark.operators.forward_geocode import (forward_geocode,
+                                                             prepare_cpo)
+        from geocode_spark.operators.pipeline import (
+            extract_postcode_mentions, geocode_documents)
+        from geocode_spark.operators.reverse_geocode import reverse_geocode
+        from geocode_spark.regions import load_prepared
+
+        cpo = prepare_cpo(
+            spark.read.parquet(str(fixture_dir / "cpo_raw.parquet")))
+        llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+        gsp = load_prepared("gsp", fixture_dir / "prepared")
+        pages = spark.read.parquet(str(fixture_dir / "pages.parquet")) \
+            .where(F.xxhash64("url") % 20 == 0)
+        base = ["postcode", "url", "warc_ts", "lang", "latitude",
+                "longitude", "match_status"]
+        want = {
+            (True, True): ["gsp", *base, "llsoa", "cell_id", "tile_id",
+                           "gsp_group"],
+            (True, False): [*base, "llsoa", "cell_id", "tile_id"],
+            (False, True): ["gsp", *base, "gsp_group"],
+            (False, False): base,
+        }
+        outs = {}
+        for (use_llsoa, use_gsp), cols in want.items():
+            out = geocode_documents(pages, cpo, llsoa if use_llsoa else None,
+                                    gsp if use_gsp else None)
+            assert out.columns == cols, (use_llsoa, use_gsp)
+            outs[use_llsoa, use_gsp] = out
+
+        geo = forward_geocode(extract_postcode_mentions(pages).select(
+            "postcode", "url", "warc_ts", "lang"), cpo)
+        direct_llsoa = reverse_geocode(geo, llsoa, out_col="llsoa",
+                                       keep_cell=True)
+        direct_gsp = reverse_geocode(geo, gsp, out_col="gsp")
+        for out, direct in ((outs[True, False], direct_llsoa),
+                            (outs[False, True], direct_gsp)):
+            cols = [c for c in out.columns if c in direct.columns]
+            got = Counter(map(tuple, out.select(cols).collect()))
+            exp = Counter(map(tuple, direct.select(cols).collect()))
+            assert got == exp and sum(got.values()) > 0
+        assert any(r.llsoa is not None for r in
+                   outs[True, False].select("llsoa").collect())
+        assert any(r.gsp is not None for r in
+                   outs[False, True].select("gsp").collect())
+
+    def test_single_set_fused_contract(self, spark, fixture_dir):
+        """Column list, types and NULL semantics of a single-set fused
+        call with every option on: interior hit, metre kNN hit, a point
+        beyond the bound, and non-finite / NULL coordinates."""
+        from geocode_spark.cells import cell_of
+        from geocode_spark.operators.reverse_geocode import reverse_geocode
+        from geocode_spark.regions import load_prepared
+
+        llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+        pts = spark.createDataFrame(
+            [(0, 51.575, -0.065),       # inside E01002050
+             (1, 51.575, -0.042),       # ~1246 m east of E01002050
+             (2, 10.0, 10.0),           # no region within 2 km
+             (3, float("nan"), -0.065),
+             (4, 51.575, None)],
+            "row_id long, latitude double, longitude double")
+        out = reverse_geocode(pts, llsoa, keep_cell=True, keep_distance=True,
+                              max_distance=2000.0, distance_unit="m",
+                              output_cols=["row_id"])
+        assert [(f.name, f.dataType.simpleString())
+                for f in out.schema.fields] == [
+            ("row_id", "bigint"), ("region_id", "string"),
+            ("cell_id", "bigint"), ("knn_dist", "double")]
+        rows = {r.row_id: r for r in out.collect()}
+        assert len(rows) == 5
+        assert rows[0].region_id == "E01002050"
+        assert rows[0].knn_dist is None
+        assert rows[0].cell_id == int(cell_of(
+            np.array([51.575]), np.array([-0.065]), llsoa.res)[0])
+        assert rows[1].region_id == "E01002050"
+        assert rows[1].knn_dist == pytest.approx(1246.0, abs=5.0)
+        assert rows[1].cell_id is not None
+        assert rows[2].region_id is None and rows[2].knn_dist is None
+        assert rows[2].cell_id is not None
+        for i in (3, 4):
+            assert (rows[i].region_id, rows[i].cell_id, rows[i].knn_dist) \
+                == (None, None, None)
 
 
 class TestBroadcastPrepCache:

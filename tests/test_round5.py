@@ -100,6 +100,19 @@ class TestDriverSideValidation:
         with pytest.raises(ValueError, match="assignments"):
             reverse_geocode_multi(pts, [], keep_cell=True)
 
+    def test_reverse_geocode_multi_unknown_option_rejected(self, spark):
+        """A misspelt opts key used to be ignored, silently dropping the
+        kNN fallback it meant to configure."""
+        from geocode_spark.operators.reverse_geocode import (
+            reverse_geocode_multi)
+        from geocode_spark.regions import load_prepared
+
+        prep = load_prepared("llsoa", f"{FIX}/prepared")
+        pts = spark.createDataFrame([(51.5, -0.1)],
+                                    "latitude double, longitude double")
+        with pytest.raises(ValueError, match="max_dist"):
+            reverse_geocode_multi(pts, [(prep, "x", {"max_dist": 2000})])
+
 
 class TestBroadcastCacheBounds:
     def test_concurrent_calls_no_corruption(self, spark):
