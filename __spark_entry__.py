@@ -391,9 +391,9 @@ def q_exact_dup_groups(spark, sf_dir):
 
 
 def q_dup_clusters(spark, sf_dir):
-    """Connected components over exact-dup pairs (iterative label
-    propagation — the non-SQL-native op the DuckDB oracle reproduces with a
-    recursive CTE)."""
+    """Connected components over exact-dup pairs (local union-find
+    contraction plus a driver finish — the non-SQL-native op the DuckDB
+    oracle reproduces with a recursive CTE)."""
     from geocode_spark.operators.dedup import dup_clusters
 
     pages = spark.read.parquet(f"{FIX}/pages.parquet")

@@ -47,7 +47,6 @@ def noop(df):
 def main():
     from geocode_spark.operators.dedup import (clear_signature_cache,
                                                dup_clusters,
-                                               lsh_candidate_pairs,
                                                minhash_dedup_pairs,
                                                minhash_signatures)
     from geocode_spark.operators.forward_geocode import (forward_geocode,
@@ -90,13 +89,6 @@ def main():
                      .select("url", "signature"))
             run_sig()
             timed("minhash_signatures_noop", run_sig, spark)
-            sigs = minhash_signatures(corpus, "text", "url", 64, 8) \
-                .select("url", "signature").persist()
-            sigs.count()
-            timed("lsh_candidates_warm_sigs",
-                  lambda: lsh_candidate_pairs(
-                      sigs, "url", 8, 8, 64, sig_len=64).count(), spark)
-            sigs.unpersist()
         if "minhash" in pieces:
             def run_mh():
                 clear_signature_cache()

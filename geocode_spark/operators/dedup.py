@@ -7,9 +7,9 @@ shuffle-minimal:
 
 * exact_dedup          — hash-groupBy on a content fingerprint (one shuffle)
 * minhash_signatures   — shingle -> minhash inside a pandas UDF (no shuffle)
-* lsh_candidate_pairs  — band -> bucket self-join (shuffle on band-hash; the
-                         classic MinHash-LSH plan: only bucket-colliding
-                         pairs are ever materialized)
+* minhash_dedup_pairs  — banded MinHash-LSH: one shuffle on band-hash, each
+                         bucket's pairs generated and verified in one pass
+* dup_clusters         — connected components over duplicate pairs
 * simhash              — 64-bit simhash of token multiset (no shuffle)
 * ngram_jaccard_pairs  — exact verification of candidate pairs
 * embedding_cosine_pairs — near-dup via cosine over an embedding column
@@ -129,55 +129,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         return pd.Series(out)
 
     return df.withColumn("signature", sig(F.col(text_col)))
-
-
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
-                        bands: int = 16, rows_per_band: int = 4,
-                        max_bucket_size: int | None = None,
-                        sig_len: int | None = None) -> DataFrame:
-    """MinHash-LSH: band the signature, bucket-join, emit candidate pairs
-    (a < b). Shuffle key = (band, band_hash) — uniform by construction.
-
-    ``max_bucket_size`` is the skew guard: buckets larger than the cap are
-    dropped before the self-join (pair blowup per bucket is quadratic; a
-    boilerplate-heavy web corpus can put millions of near-identical docs in
-    one bucket — the standard practice is to drop or sub-sample stop-buckets
-    and let the remaining bands recover the pairs).
-
-    ``sig_len``, when given, validates that the banding actually covers real
-    signature positions — slicing past the end of the signature array would
-    give every document an identical empty-band hash (a corpus-wide bucket
-    and an O(n^2) join)."""
-    if sig_len is not None and bands * rows_per_band > sig_len:
-        raise ValueError(
-            f"bands({bands}) * rows_per_band({rows_per_band}) exceeds the "
-            f"signature length {sig_len}: out-of-range bands hash every "
-            "document into one bucket")
-    assert bands * rows_per_band <= 1024
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(F.lit(i), F.slice("signature", i * rows_per_band + 1,
-                                             rows_per_band))
-                for i in range(bands)
-            ])
-        ).alias("band", "band_hash"),
-    )
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, ["band", "band_hash"],
-                                   max_bucket_size)
-    l = banded.alias("l")
-    r = banded.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.band_hash") == F.col("r.band_hash"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return pairs
 
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
@@ -501,8 +452,8 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     """Near-dup pairs by simhash Hamming distance, blocked on 16-bit chunks
     (pigeonhole: distance<=3 pairs share at least one of 4 chunks).
 
-    ``max_bucket_size`` is the same skew guard as
-    ``lsh_candidate_pairs``: (chunk_pos, chunk) buckets larger than the cap
+    ``max_bucket_size`` is the ``_drop_hot_buckets`` skew guard:
+    (chunk_pos, chunk) buckets larger than the cap
     are dropped BEFORE the self-join, because pair blowup per bucket is
     quadratic — a boilerplate-heavy web corpus concentrates near-identical
     simhashes, and at 10^12 docs an average 16-bit bucket would hold
@@ -630,11 +581,37 @@ def ngram_jaccard_all_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
+def _union_find(pairs) -> dict:
+    """Components of the graph given as ``(a, b)`` edges: ``{node: min id
+    of its component}`` for every node an edge touches. Union-by-min with
+    path compression, dict-based so any orderable id type works (the
+    declared query clusters string urls)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    return {k: find(k) for k in parent}
+
+
 def _local_contract(edges: DataFrame, id_type) -> DataFrame:
-    """Partition-local union-find contraction: for every node appearing in
-    a partition's ``(src, dst)`` edges, emit ``(src=node, label=min id of
-    the node's PARTITION-LOCAL component)``. Union-by-min with path
-    compression — exact min labels, O(alpha) amortized per edge.
+    """Partition-local contraction: for every node appearing in a
+    partition's ``(src, dst)`` edges, emit ``(src=node, label=min id of the
+    node's PARTITION-LOCAL component)`` (``_union_find`` over the
+    partition's edges).
 
     The emitted rows preserve global connectivity exactly: every original
     edge (a, b) in partition p collapses to (a, l_p) and (b, l_p) through
@@ -647,41 +624,21 @@ def _local_contract(edges: DataFrame, id_type) -> DataFrame:
 
     def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         settle_worker_imports()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-        if parent:
-            keys = list(parent)
-            yield pd.DataFrame({"src": keys, "label": [find(k) for k in keys]})
+        labels = _union_find(
+            pair for pdf in batches
+            for pair in zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+        if labels:
+            yield pd.DataFrame({"src": list(labels),
+                                "label": list(labels.values())})
 
     return edges.mapInPandas(contract, schema)
 
 
 def _propagate_loop(nodes_ids: DataFrame, pairs: DataFrame,
-                    max_iters: int, strict: bool,
-                    convergence_check_every: int) -> DataFrame:
-    """Distributed min-label propagation with pointer-doubling shortcut —
-    the pre-round-6 dup_clusters inner loop, now the fallback for graphs
-    whose CONTRACTED form is still too big for the driver.
+                    max_iters: int) -> DataFrame:
+    """Distributed min-label propagation with a pointer-doubling shortcut:
+    ``dup_clusters``' fallback for graphs whose contracted residue is too
+    big for the driver.
 
     ``nodes_ids`` has one column ``src``; ``pairs`` has ``src``/``dst``
     (asymmetric — symmetrized here). Returns ``(src, label)``.
@@ -689,30 +646,21 @@ def _propagate_loop(nodes_ids: DataFrame, pairs: DataFrame,
     label'(v) = min(label(v), min_u label(u), label(label(v))) — the last
     term jumps each node to its current representative's representative, so
     long chains converge in O(log diameter) rounds instead of O(diameter)
-    (the large-star/small-star idea). Each round is two shuffles keyed by
-    node id / label.
+    (the large-star/small-star idea). Each round is one aggregation and two
+    joins, then one changed-count action; a round that changes nothing is
+    the fixpoint. Raises ``RuntimeError`` when labels still change after
+    ``max_iters`` rounds plus one verifying round.
 
     Each round's labels are ``localCheckpoint``-ed: persist() alone keeps
     the LOGICAL plan growing (round k re-analyzes k rounds of joins —
     measured super-linear: 1 s/round -> 33 s/round by round 5 at 40k
     nodes), while a checkpoint truncates the plan so every round costs the
     same. On a real cluster localCheckpoint trades fault-tolerance for
-    speed — the right trade for a minutes-long O(log d)-round loop.
+    speed — the right trade for a minutes-long O(log d)-round loop."""
 
-    SESSION-LEVEL SIDE EFFECT: the loop disables AQE
-    (``spark.sql.adaptive.enabled``) for its duration and restores the
-    prior value on exit — Spark offers no narrower scope for that conf
-    (re-planning latency is a pure per-round serial floor with nothing to
-    buy: aggregation fan-in is bounded by node degree + 1). A driver that
-    submits OTHER queries on the same SparkSession from other threads
-    while this runs will briefly plan them without AQE (correct results,
-    possibly slower plans); concurrent-query drivers should use
-    ``spark.newSession()``."""
-    import warnings
-
-    def _propagate(cur):
-        """One lazy propagation round: cur(src, label) ->
-        new(src, label, prev), checkpoint deferred to the next action."""
+    def _round(cur):
+        """One propagation round: cur(src, label) -> (new labels, number
+        of labels that changed)."""
         # pointer doubling WITHOUT its own join: the label-edge
         # (src=label(v), dst=v) makes v receive label(label(v)) through
         # the same neighbor aggregation that delivers real-neighbor
@@ -729,68 +677,43 @@ def _propagate_loop(nodes_ids: DataFrame, pairs: DataFrame,
                                F.coalesce("nbr_label", "prev"))
                        .alias("label"),
                        "prev")).localCheckpoint(eager=False)
-        return new
-
-    def _round(cur, k):
-        """k batched propagation rounds, then one changed-count action
-        (counts the LAST round's changes — 0 there means fixpoint)."""
-        new = _propagate(cur)
-        for _ in range(k - 1):
-            new = _propagate(new.select("src", "label"))
         n = new.filter(F.col("label") != F.col("prev")).count()
         return new.select("src", "label"), n
 
-    spark = nodes_ids.sparkSession
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_prev = spark.conf.get(aqe_key, "true")
-    spark.conf.set(aqe_key, "false")
-    try:
-        # edges materialized once, hash-partitioned on src: every round's
-        # propagate join reuses this partitioning (checkpoint preserves
-        # outputPartitioning) instead of re-shuffling the 2x|pairs| edge
-        # table per round.
-        sym = (pairs.unionByName(pairs.select(F.col("dst").alias("src"),
-                                              F.col("src").alias("dst")))
-               .repartition("src").localCheckpoint(eager=True))
-        labels = nodes_ids.select("src", F.col("src").alias("label")) \
-            .repartition("src").localCheckpoint(eager=True)
-        changed = 0
-        rounds_left = max_iters
-        while rounds_left > 0:
-            k = min(convergence_check_every, rounds_left)
-            labels, changed = _round(labels, k)
-            rounds_left -= k
-            if changed == 0:
-                break
-        if changed != 0:
-            # the LAST allowed round may itself have reached the fixpoint —
-            # verify with one extra round before declaring failure, and
-            # KEEP that round's labels either way
-            labels, would_change = _round(labels, 1)
-            if would_change != 0:
-                msg = (f"dup_clusters did not converge in {max_iters} "
-                       f"rounds ({would_change} labels still changing): "
-                       "some clusters are split — raise max_iters")
-                if strict:
-                    raise RuntimeError(msg)
-                warnings.warn(msg)
-    finally:
-        spark.conf.set(aqe_key, aqe_prev)
+    # edges materialized once, hash-partitioned on src: every round's
+    # propagate join reuses this partitioning (checkpoint preserves
+    # outputPartitioning) instead of re-shuffling the 2x|pairs| edge
+    # table per round.
+    sym = (pairs.unionByName(pairs.select(F.col("dst").alias("src"),
+                                          F.col("src").alias("dst")))
+           .repartition("src").localCheckpoint(eager=True))
+    labels = nodes_ids.select("src", F.col("src").alias("label")) \
+        .repartition("src").localCheckpoint(eager=True)
+    for _ in range(max_iters):
+        labels, changed = _round(labels)
+        if changed == 0:
+            return labels
+    # the LAST allowed round may itself have reached the fixpoint — verify
+    # with one extra round, and KEEP that round's labels
+    labels, changed = _round(labels)
+    if changed != 0:
+        raise RuntimeError(
+            f"dup_clusters did not converge in {max_iters} rounds "
+            f"({changed} labels still changing): some clusters are split "
+            "— raise max_iters")
     return labels
 
 
 def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                 max_iters: int = 20, strict: bool = True,
-                 convergence_check_every: int = 1) -> DataFrame:
+                 max_iters: int = 20) -> DataFrame:
     """Connected components over duplicate pairs: every node gets
     ``cluster_id`` = min id reachable through pair edges (its own id when
     unpaired). The representative-per-cluster is then ``id == cluster_id``.
-    Pairs with an endpoint absent from ``nodes`` are ignored (as the
-    pre-round-6 per-round join did implicitly — now an explicit semi-join).
+    Pairs with an endpoint absent from ``nodes`` (or null) are ignored.
 
-    Round-6 two-phase plan (the round-5 loop spent ~1.5 s/round of mostly
-    scheduling latency over ~6 rounds at bench scale — guide §1.2: fix the
-    algorithm, not the config):
+    Two-phase plan — local contraction, then a small remainder finished
+    in one place (Kiveris et al., "Connected Components in MapReduce and
+    Beyond", SoCC 2014):
 
     1. **Partition-local contraction** — edges are range-partitioned by
        ``src`` (duplicate-pair endpoints are id-correlated in practice, so
@@ -804,97 +727,55 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
        partition-boundary links).
     3. **Solve the residue** — if the contracted edge count is within
        ``$GEOCODE_CC_DRIVER_MAX_EDGES`` (default 2M; a bounded
-       ``limit(cap+1)`` probe, never an unbounded collect), a driver-side
-       union-find finishes it in one pass — the standard two-phase CC
-       design (local contraction + small-remainder finish, cf. Kiveris et
-       al., "Connected Components in MapReduce and Beyond"). Larger
-       residues fall back to the previous distributed pointer-doubling
-       loop (``_propagate_loop``) on the CONTRACTED graph, so the
-       worst-case plan is never worse than round 5's.
+       ``limit(cap+1)`` probe collected as Arrow, never an unbounded
+       collect), ``_union_find`` finishes it on the driver in one pass.
+       Larger residues fall back to the distributed pointer-doubling loop
+       (``_propagate_loop``) on the CONTRACTED graph.
 
-    ``max_iters``/``strict``/``convergence_check_every`` govern the
-    fallback loop only; the driver finish is exact and always converges
-    (a diameter-limited non-convergence can therefore no longer happen on
-    graphs whose contracted residue fits the driver cap)."""
+    ``max_iters`` bounds the fallback loop only, which raises
+    ``RuntimeError`` if it does not converge; the driver finish is exact
+    and always converges. No session config is changed."""
     import os
-
-    if convergence_check_every < 1:
-        raise ValueError("convergence_check_every must be >= 1")
 
     spark = nodes.sparkSession
     id_type = nodes.schema[id_col].dataType
 
-    # legacy semantics guard: edges touching ids absent from ``nodes``
-    # must not relay labels (the old loop's join dropped them for free;
-    # contraction would happily connect THROUGH them). Broadcast-friendly
-    # semi-joins; also drops null endpoints, as the old joins did.
-    # AQE re-planning buys nothing on this phase's small bounded shuffles
-    # (fan-in is bounded by per-node partition appearances) and its
-    # per-stage re-planning latency is pure serial time — measured
-    # interleaved A/B at bench scale: AQE-off is ~0.2 s faster with half
-    # the run-to-run variance. Same documented session-level side effect
-    # (and restore) as the pre-round-6 loop had.
-    aqe_key = "spark.sql.adaptive.enabled"
-    aqe_prev = spark.conf.get(aqe_key, "true")
-    spark.conf.set(aqe_key, "false")
-    try:
-        ids_a = nodes.select(F.col(id_col).alias("id_a"))
-        ids_b = nodes.select(F.col(id_col).alias("id_b"))
-        edges = (pairs.select("id_a", "id_b")
-                 .join(ids_a, "id_a", "leftsemi")
-                 .join(ids_b, "id_b", "leftsemi")
-                 .select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst")))
+    # edges touching ids absent from ``nodes`` must not relay labels
+    # (contraction would happily connect THROUGH them): broadcast-friendly
+    # semi-joins, which also drop null endpoints
+    ids_a = nodes.select(F.col(id_col).alias("id_a"))
+    ids_b = nodes.select(F.col(id_col).alias("id_b"))
+    edges = (pairs.select("id_a", "id_b")
+             .join(ids_a, "id_a", "leftsemi")
+             .join(ids_b, "id_b", "leftsemi")
+             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
 
-        # phase 1: one range shuffle + partition-local union-find. Ranges
-        # (not hash) so id-correlated duplicate chains land whole in one
-        # task. (The range sampling pass recomputes the edge pipeline once;
-        # measured CHEAPER than materializing it with a checkpoint first.)
-        M = _local_contract(edges.repartitionByRange(F.col("src")), id_type) \
-            .localCheckpoint(eager=False)
-        lab0 = M.groupBy("src").agg(F.min("label").alias("__lbl0"))
+    # phase 1: one range shuffle + partition-local union-find. Ranges
+    # (not hash) so id-correlated duplicate chains land whole in one
+    # task. (The range sampling pass recomputes the edge pipeline once;
+    # measured CHEAPER than materializing it with a checkpoint first.)
+    M = _local_contract(edges.repartitionByRange(F.col("src")), id_type) \
+        .localCheckpoint(eager=False)
+    lab0 = M.groupBy("src").agg(F.min("label").alias("__lbl0"))
 
-        # phase 2: residual links between local roots — (node min root,
-        # other appearance root) for every node seen in >1 partition. NOT
-        # deduplicated: the driver union-find dedupes for free and a
-        # distinct here costs an extra exchange (the cap below therefore
-        # counts appearance rows, a conservative over-estimate).
-        resid = (M.join(lab0, "src")
-                 .filter(F.col("label") != F.col("__lbl0"))
-                 .select(F.col("__lbl0").alias("src"),
-                         F.col("label").alias("dst")))
+    # phase 2: residual links between local roots — (node min root, other
+    # appearance root) for every node seen in >1 partition. NOT
+    # deduplicated: the driver union-find dedupes for free and a distinct
+    # here costs an extra exchange (the cap below therefore counts
+    # appearance rows, a conservative over-estimate).
+    resid = (M.join(lab0, "src")
+             .filter(F.col("label") != F.col("__lbl0"))
+             .select(F.col("__lbl0").alias("src"),
+                     F.col("label").alias("dst")))
 
-        # phase 3: bounded probe — driver finish when the residue is small
-        # (the overwhelmingly common case), distributed loop otherwise.
-        cap = int(os.environ.get("GEOCODE_CC_DRIVER_MAX_EDGES", "2000000"))
-        probe = resid.limit(cap + 1).collect()
-    finally:
-        spark.conf.set(aqe_key, aqe_prev)
-    if len(probe) <= cap:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in probe:
-            a, b = r[0], r[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-        remap = [(k, find(k)) for k in parent]
-        remap = [(k, v) for k, v in remap if k != v]
+    # phase 3: bounded probe — driver finish when the residue is small
+    # (the overwhelmingly common case), distributed loop otherwise.
+    cap = int(os.environ.get("GEOCODE_CC_DRIVER_MAX_EDGES", "2000000"))
+    probe = resid.limit(cap + 1).toArrow()
+    if probe.num_rows <= cap:
+        found = _union_find(zip(probe.column("src").to_pylist(),
+                                probe.column("dst").to_pylist()))
+        remap = [(k, v) for k, v in found.items() if k != v]
         if remap:
             rdf = spark.createDataFrame(
                 remap, StructType([StructField("__lbl0", id_type),
@@ -907,8 +788,7 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     else:
         roots = (resid.select("src").unionByName(
             resid.select(F.col("dst").alias("src"))).distinct())
-        rlab = _propagate_loop(roots, resid, max_iters, strict,
-                               convergence_check_every)
+        rlab = _propagate_loop(roots, resid, max_iters)
         labels = (lab0.join(rlab.withColumnsRenamed(
                       {"src": "__lbl0", "label": "__cl"}), "__lbl0", "left")
                   .select("src",

@@ -233,19 +233,12 @@ def run_with_lineage(
             "bucket", _bucket_col(key_col, n_buckets)).observe(
             obs, *[F.count_if(F.col("bucket") == b).alias(str(b))
                    for b in todo])
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            # ONE distributed write job for every outstanding bucket;
-            # dynamic overwrite touches only the partitions being written
-            bucketed.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(str(out))
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+        # ONE distributed write job for every outstanding bucket; dynamic
+        # overwrite (a writer option, so the session's own mode is left
+        # alone) touches only the partitions being written
+        bucketed.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("bucket").parquet(str(out))
         dt = time.time() - t0
         counts = obs.get
         for b in todo:

@@ -207,10 +207,8 @@ class TestDedupGuards:
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(5)], "src long, dst long")
         with pytest.raises(RuntimeError, match="converge"):
-            _propagate_loop(nodes, chain, max_iters=1, strict=True,
-                            convergence_check_every=1)
-        loop_ok = _propagate_loop(nodes, chain, max_iters=10, strict=True,
-                                  convergence_check_every=1)
+            _propagate_loop(nodes, chain, max_iters=1)
+        loop_ok = _propagate_loop(nodes, chain, max_iters=10)
         assert {r.label for r in loop_ok.collect()} == {0}
 
         pub = dup_clusters(

@@ -162,27 +162,6 @@ class TestIdentifierQuoting:
         assert pages_snapshot_id(spark, "evil`.x--") is None
 
 
-class TestDupClustersBatchedRounds:
-    def test_batched_convergence_identical_labels(self, spark):
-        from geocode_spark.operators.dedup import dup_clusters
-
-        import pyspark.sql.functions as F
-        nodes = spark.range(64).select(F.col("id").alias("doc_id"))
-        # chains of 8: diameter 7, several doubling rounds
-        pairs = (spark.range(63).filter((F.col("id") + 1) % 8 != 0)
-                 .select(F.col("id").alias("id_a"),
-                         (F.col("id") + 1).alias("id_b")))
-        base = {(r.doc_id, r.cluster_id) for r in
-                dup_clusters(nodes, pairs, max_iters=10).collect()}
-        for k in (2, 3):
-            got = {(r.doc_id, r.cluster_id) for r in
-                   dup_clusters(nodes, pairs, max_iters=10,
-                                convergence_check_every=k).collect()}
-            assert got == base
-        with pytest.raises(ValueError, match="convergence_check_every"):
-            dup_clusters(nodes, pairs, convergence_check_every=0)
-
-
 class TestPreparedPolygonParity:
     """The y-bucketed PreparedPolygon ray-cast must be BIT-identical to the
     naive dense all-edges kernel (reimplemented inline here, independent of

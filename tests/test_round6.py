@@ -83,9 +83,10 @@ class TestFusedMinhashEquivalence:
     def test_exactly_once_emission(self, spark):
         """Pre-distinct output must already be duplicate-free on a corpus
         with no band-hash collisions (the distinct is then a no-op)."""
-        from pyspark.sql import DataFrame
+        from pyspark.sql.classic.dataframe import DataFrame
 
         df = self._corpus(spark)
+        assert isinstance(df, DataFrame)  # the patch reaches this plan
         orig = DataFrame.distinct
         try:
             DataFrame.distinct = lambda self: self
