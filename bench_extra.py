@@ -3,8 +3,9 @@ this file holds the extra isolation measurements the optimization round
 needs — guide §1.4/1.5: noop sinks + labeled jobs, min-of-N timing).
 
 Usage: python bench_extra.py [piece ...]
-Pieces: dup minhash sig ann stream_batch pipeline reverse pricing
-(default: all). Prints one JSON line per piece.
+Pieces: dup minhash sig ann stream_batch pipeline reverse
+(default: all). Prints one JSON line per piece; an unknown piece name
+exits non-zero.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ FIX = bench.FIX
 SF_DIR = bench.SF_DIR
 CPUS = bench.CPUS
 REPEATS = int(os.environ.get("BENCH_REPEATS", "3"))
+PIECES = ["dup", "minhash", "sig", "ann", "stream_batch", "pipeline",
+          "reverse"]
 
 
 def timed(label, fn, spark):
@@ -59,8 +62,10 @@ def main():
     from geocode_spark.regions import load_prepared
     from geocode_spark.session import get_spark
 
-    pieces = sys.argv[1:] or ["dup", "minhash", "sig", "ann", "stream_batch",
-                              "pipeline", "reverse"]
+    pieces = sys.argv[1:] or PIECES
+    unknown = sorted(set(pieces) - set(PIECES))
+    if unknown:
+        sys.exit(f"unknown piece(s) {unknown}; valid: {' '.join(PIECES)}")
     spark = get_spark(app_name="geocode-spark-bench-extra",
                       master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,8 +7,9 @@ A Z-order (Morton) cell index over an equirectangular lat/lon grid:
 * ``cell_of(lat, lon, r)`` returns a single int64 encoding
   ``(r << 58) | morton(i, j)`` so cells at different resolutions never
   collide in a join key;
-* ``kring(cell, k)`` returns the square ring/disc of neighbours for the
-  ring-expansion kNN fallback (SURVEY.md §2.3 J5);
+* ``kring(cell, k)`` returns the square disc of neighbours within
+  Chebyshev distance ``k`` (the kNN fallback's ring expansion builds its
+  own ring perimeters from ``cell_to_ij``/``cell_from_ij``);
 * ``covering_cells(xs, ys, ...)`` rasterizes one polygon into the set of
   cells intersecting it, classifying each as *interior* (entirely inside, so
   points in it skip the exact point-in-polygon test — the Raptor-style
@@ -104,15 +105,6 @@ def kring(cell: int, k: int) -> np.ndarray:
     jj = np.clip(j[0] + dj.ravel(), 0, n - 1)
     out = cell_from_ij(ii, jj, res)
     return np.unique(out)
-
-
-def kring_shell(cell: int, k: int) -> np.ndarray:
-    """Only the cells at exactly Chebyshev distance k (ring expansion)."""
-    if k == 0:
-        return np.asarray([cell], dtype=np.int64)
-    disc = set(kring(cell, k).tolist())
-    inner = set(kring(cell, k - 1).tolist())
-    return np.asarray(sorted(disc - inner), dtype=np.int64)
 
 
 def pick_resolution(bbox_w: float, bbox_h: float, target_cells_across: int = 8) -> int:

@@ -16,10 +16,9 @@ import zipimport
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..cells import cell_of, kring
+from ..cells import _RES_SHIFT, cell_of
 from ..crs import bng_to_latlon, latlon_to_bng
 
 _LATLON = StructType([StructField("lat", DoubleType()),
@@ -81,6 +80,20 @@ def cell_udf(res: int):
     return _cell
 
 
+def cell_parent(cell_col: str, res: int, parent_res: int):
+    """Catalyst expression: the resolution-``parent_res`` ancestor of the
+    resolution-``res`` cell ids in ``cell_col`` (NULL stays NULL). Equal to
+    ``cell_of(lat, lon, parent_res)`` for every point of the cell: the grid
+    steps are powers of two, so dropping the low morton bits is exact,
+    clipped edges included."""
+    if not 0 <= parent_res <= res:
+        raise ValueError(f"parent resolution {parent_res} must be in "
+                         f"[0, {res}] (the cell resolution)")
+    morton = F.col(cell_col).bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
+    return F.shiftright(morton, 2 * (res - parent_res)).bitwiseOR(
+        F.lit(parent_res << _RES_SHIFT))
+
+
 def cell_ij_udf(res: int):
     """(lat, lon) -> struct(i, j) grid coordinates at ``res`` — the
     SQL-checkable decomposition of the Morton cell id."""
@@ -96,17 +109,6 @@ def cell_ij_udf(res: int):
         return pd.DataFrame({"i": i, "j": j})
 
     return _ij
-
-
-def kring_udf(k: int):
-    """kring(cell) -> array<long> of the (2k+1)^2 neighbour disc."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _kring(cell: pd.Series) -> pd.Series:
-        settle_worker_imports()
-        return cell.map(lambda c: kring(int(c), k).tolist())
-
-    return _kring
 
 
 # UK postcode grammar (public GOV.UK spec): outward = area letters + district,

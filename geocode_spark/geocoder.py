@@ -379,6 +379,13 @@ class GeocoderSpark:
 
     # --- list helpers: positional contract parity (geocode.py README usage) --
 
+    def _latlon_df(self, latlons: list[tuple]) -> DataFrame:
+        """``(lat, lon)`` list -> ``row_id long, latitude double, longitude
+        double`` frame, ``row_id`` the list position."""
+        return self.spark.createDataFrame(
+            [(i, la, lo) for i, (la, lo) in enumerate(latlons)],
+            "row_id long, latitude double, longitude double")
+
     def geocode_postcode_list(self, postcodes: list[str]) -> list[tuple]:
         df = self.spark.createDataFrame(
             [(i, p) for i, p in enumerate(postcodes)],
@@ -388,16 +395,12 @@ class GeocoderSpark:
 
     def reverse_geocode_llsoa_list(self, latlons: list[tuple], dz: bool = True
                                    ) -> list:
-        df = self.spark.createDataFrame(
-            [(i, la, lo) for i, (la, lo) in enumerate(latlons)],
-            "row_id long, latitude double, longitude double")
+        df = self._latlon_df(latlons)
         rows = self.reverse_geocode_llsoa(df, dz=dz).orderBy("row_id").collect()
         return [r.llsoa for r in rows]
 
     def reverse_geocode_gsp_list(self, latlons: list[tuple]) -> list[tuple]:
-        df = self.spark.createDataFrame(
-            [(i, la, lo) for i, (la, lo) in enumerate(latlons)],
-            "row_id long, latitude double, longitude double")
+        df = self._latlon_df(latlons)
         rows = self.reverse_geocode_gsp(df).orderBy("row_id").collect()
         return [(r.gsp, r.gsp_group) for r in rows]
 
@@ -435,9 +438,7 @@ class GeocoderSpark:
                                   year: int = 2021, **kw) -> list:
         """Positional parity with the reference's reverse_geocode_nuts
         (geocode.py:169-175: List[(lat, lon)] -> List[str])."""
-        df = self.spark.createDataFrame(
-            [(i, la, lo) for i, (la, lo) in enumerate(latlons)],
-            "row_id long, latitude double, longitude double")
+        df = self._latlon_df(latlons)
         rows = self.reverse_geocode_nuts(df, level=level, year=year,
                                          **kw).orderBy("row_id").collect()
         return [r.nuts for r in rows]
@@ -446,9 +447,7 @@ class GeocoderSpark:
                              **kw) -> list:
         """Generic entity dispatch on coordinate lists (geocode.py:283
         parity) — covers dno and every other prepared entity."""
-        df = self.spark.createDataFrame(
-            [(i, la, lo) for i, (la, lo) in enumerate(latlons)],
-            "row_id long, latitude double, longitude double")
+        df = self._latlon_df(latlons)
         out = self.reverse_geocode(df, entity, **kw).orderBy("row_id")
         out_col = [c for c in out.columns
                    if c not in ("row_id", "latitude", "longitude")][0]

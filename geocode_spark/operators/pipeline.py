@@ -9,10 +9,10 @@ constituency / GSP regions (cell-index + ray-cast), and emit one row per
 byte-identical per url (invariant).
 
 Plan shape: scan -> codegen'd extract+explode -> two BroadcastHashJoins
-(exact and prefix CPO dimensions) -> mapInPandas (cell+PIP) -> sink. The
-fact side never shuffles; only the small CPO dimension aggregations do, on
-the broadcast side — at 10^12 docs the job is embarrassingly parallel and
-skew-free.
+(exact and prefix CPO dimensions) -> one MapInArrow (cell+PIP) -> codegen'd
+tile_id -> sink. The fact side never shuffles; only the small CPO dimension
+aggregations do, on the broadcast side — at 10^12 docs the job is
+embarrassingly parallel and skew-free.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.udfs import cell_udf, extract_postcodes
+from ..functions.udfs import cell_parent, extract_postcodes
 from ..regions import PreparedRegions
 from .forward_geocode import forward_geocode
 from .reverse_geocode import reverse_geocode_multi
@@ -46,7 +46,10 @@ def geocode_documents(
     Mentions are forward-geocoded directly through the broadcast CPO
     dimensions (one pass over the pages, no distinct-key pre-pass); every
     given region set is assigned in one reverse_geocode_multi pass, so the
-    points cross the JVM/Python boundary once.
+    points cross the JVM/Python boundary once. ``tile_id`` is the
+    resolution-8 ancestor of ``cell_id``, derived in Catalyst (NULL where
+    ``cell_id`` is), so ``llsoa_prep`` must have resolution >= 8
+    (ValueError otherwise).
     """
     # postcode first: keeps the public column order that
     # test_geocode_documents_schema_unchanged pins
@@ -63,9 +66,8 @@ def geocode_documents(
         if llsoa_prep is not None:
             # coarse tile assignment (raster partition key for sinks/
             # rollups); cell_id is the fine-resolution index cell
-            geo = geo.withColumn("tile_id", F.when(
-                F.col("latitude").isNotNull(),
-                cell_udf(8)(F.col("latitude"), F.col("longitude"))))
+            geo = geo.withColumn("tile_id",
+                                 cell_parent("cell_id", llsoa_prep.res, 8))
             cols = cols + ["llsoa", "cell_id", "tile_id"]
         if gsp_prep is not None:
             cols = cols + ["gsp"]

@@ -16,15 +16,18 @@ Re-expresses the reference's computational core
      of each pair), exact point-to-polygon distance, take argmin
   5. NA -> None normalization                       -> SQL NULL natively
 
-Two physical strategies, both shuffle-free on the candidate side:
+Two physical strategies, both shuffle-free on the candidate side, both
+``mapInArrow`` end to end (input columns pass through as the batch's own
+Arrow arrays, never through pandas) over one ray-cast helper,
+``_ray_cast``:
 
-* ``fused`` (default): one ``mapInPandas`` pass per partition — cell encode,
+* ``fused`` (default): one ``mapInArrow`` pass per partition — cell encode,
   candidate probe against the broadcast cover map, ray-cast, dedup, and kNN
   fallback all inside a single Arrow batch. Zero shuffles; the plan is
-  scan -> mapInPandas -> (sink). Skew-proof: no shuffle keys exist. Single-
+  scan -> MapInArrow -> (sink). Skew-proof: no shuffle keys exist. Single-
   and multi-set calls run the same batch loop (``_fused``, one spec per set).
 * ``join``: Catalyst-visible BroadcastHashJoin of points vs the covering-cell
-  map, then mapInPandas PIP on candidates (against the same per-worker
+  map, then mapInArrow PIP on candidates (against the same per-worker
   ``_CoverIndex`` the fused loop probes), then one aggregation shuffle per
   row_id. Useful when the candidate set should be materialized / audited.
 
@@ -40,13 +43,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
 from ..cells import cell_of, cell_to_ij, cell_from_ij
-from ..functions.udfs import settle_worker_imports
+from ..functions.udfs import cell_udf, settle_worker_imports
 from ..geometry import (METERS_PER_DEG, EdgeTable, PreparedPolygon,
                         dist_to_polygons_pairs, points_in_polygon_prepared)
 from ..regions import PreparedRegions
@@ -177,43 +182,48 @@ def _get_index(cover: pd.DataFrame, geoms: dict) -> _CoverIndex:
     return idx
 
 
+def _ray_cast(index: _CoverIndex, px: np.ndarray, py: np.ndarray,
+              code: np.ndarray) -> np.ndarray:
+    """Exact point-in-polygon of each point ``(px[i], py[i])`` against the
+    region ``code[i]`` indexes: a bbox prefilter, then one bucketed
+    ray-cast batch per region."""
+    ok = np.zeros(len(code), dtype=bool)
+    if len(code) == 0:
+        return ok
+    order = np.argsort(code, kind="stable")
+    rs = code[order]
+    gb = np.flatnonzero(np.r_[True, rs[1:] != rs[:-1]])
+    ge = np.r_[gb[1:], len(rs)]
+    for g0, g1 in zip(gb, ge):
+        rows = order[g0:g1]
+        r = int(rs[g0])
+        bb = index.bbox[r]
+        pxg = px[rows]
+        pyg = py[rows]
+        in_bbox = ((pxg >= bb[0]) & (pxg <= bb[2])
+                   & (pyg >= bb[1]) & (pyg <= bb[3]))
+        if in_bbox.any():
+            ok[rows[in_bbox]] = points_in_polygon_prepared(
+                pxg[in_bbox], pyg[in_bbox], index.prepared(r))
+    return ok
+
+
 def _assign_batch(index: _CoverIndex, lat: np.ndarray, lon: np.ndarray,
                   res: int) -> np.ndarray:
     """One batch of finite points -> object array of region ids (None=miss).
 
-    Same pipeline as before, all-numpy: covering-cell probe, interior-cell
-    raster shortcut, bbox prefilter + bucketed ray-cast per region for
-    boundary candidates, keep-first (min region_seq) per point — GeoPandas
-    keep-first parity (utilities.py:268-269)."""
+    Covering-cell probe, interior-cell raster shortcut, ray-cast
+    (:func:`_ray_cast`) for boundary candidates, keep-first (min
+    region_seq) per point — GeoPandas keep-first parity
+    (utilities.py:268-269)."""
     rid_out = np.full(len(lat), None, dtype=object)
     pt, slot = index.lookup(cell_of(lat, lon, res))
     if len(pt) == 0:
         return rid_out
     inside = index.cand_interior[slot].copy()
     bnd = np.flatnonzero(~inside)
-    if bnd.size:
-        ridb = index.cand_rid[slot[bnd]]
-        px = lon[pt[bnd]]
-        py = lat[pt[bnd]]
-        ok = np.zeros(bnd.size, dtype=bool)
-        order = np.argsort(ridb, kind="stable")
-        rs = ridb[order]
-        gb = np.flatnonzero(np.r_[True, rs[1:] != rs[:-1]])
-        ge = np.r_[gb[1:], len(rs)]
-        for g0, g1 in zip(gb, ge):         # one ray-cast batch per polygon
-            rows = order[g0:g1]
-            r = int(rs[g0])
-            bb = index.bbox[r]
-            pxg = px[rows]
-            pyg = py[rows]
-            in_bbox = ((pxg >= bb[0]) & (pxg <= bb[2])
-                       & (pyg >= bb[1]) & (pyg <= bb[3]))
-            m = np.zeros(rows.size, dtype=bool)
-            if in_bbox.any():
-                m[in_bbox] = points_in_polygon_prepared(
-                    pxg[in_bbox], pyg[in_bbox], index.prepared(r))
-            ok[rows] = m
-        inside[bnd] = ok
+    inside[bnd] = _ray_cast(index, lon[pt[bnd]], lat[pt[bnd]],
+                            index.cand_rid[slot[bnd]])
     hit = np.flatnonzero(inside)
     if hit.size == 0:
         return rid_out
@@ -421,45 +431,50 @@ def _spec(sc, prep: PreparedRegions, out_col: str,
 
 def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
            output_cols: list[str] | None, keep_cell: bool) -> DataFrame:
-    """The fused batch loop: every spec's lookup in ONE mapInPandas pass,
-    coordinates decoded once per batch. Columns: the kept input columns,
-    every ``out_col``, ``cell_id`` (first spec's resolution) when
-    ``keep_cell``, every ``dist_col`` (matched to the schema by name)."""
-    keep_fields = (points.schema.fields if output_cols is None else
-                   [f for f in points.schema.fields
-                    if f.name in output_cols])
-    out_fields = (keep_fields
+    """The fused batch loop: every spec's lookup in ONE mapInArrow pass,
+    coordinates decoded once per batch. Columns, in this order: the kept
+    input columns (the batch's own Arrow arrays, untouched), every
+    ``out_col``, ``cell_id`` (first spec's resolution) when ``keep_cell``,
+    every ``dist_col``. Arrow matches the output to the schema by position.
+    """
+    fields = points.schema.fields
+    keep = [i for i, f in enumerate(fields)
+            if output_cols is None or f.name in output_cols]
+    out_fields = ([fields[i] for i in keep]
                   + [StructField(s[3], StringType()) for s in specs])
     if keep_cell:
         out_fields = out_fields + [StructField("cell_id", LongType())]
     out_fields = out_fields + [StructField(s[6], DoubleType())
                                for s in specs if s[6] is not None]
     out_schema = StructType(out_fields)
-    in_cols = [f.name for f in keep_fields]
     cell_res = specs[0][2]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         settle_worker_imports()
         # Build (or fetch) every spec's index ONCE per stage and hold
         # direct references across batches: with more specs than the
         # FIFO cache holds, per-batch _get_index calls would thrash the
         # cache and re-sort every cover map on every batch.
         indexes = [_get_index(s[0].value, s[1].value) for s in specs]
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out = pdf[in_cols].copy()
-            lat_all = pdf[lat_col].to_numpy(np.float64)
-            lon_all = pdf[lon_col].to_numpy(np.float64)
+            # NULL -> NaN, so the finite test covers both
+            lat_all = rb.column(lat_col).cast(pa.float64()).to_numpy(
+                zero_copy_only=False)
+            lon_all = rb.column(lon_col).cast(pa.float64()).to_numpy(
+                zero_copy_only=False)
             finite = np.isfinite(lat_all) & np.isfinite(lon_all)
             vpos = np.flatnonzero(finite)
-            for (_, _, res, out_col, max_d, metric, dist_col), index in zip(
+            cols = [rb.column(i) for i in keep]
+            dist_cols = []
+            for (_, _, res, _, max_d, metric, dist_col), index in zip(
                     specs, indexes):
-                rid = np.full(len(pdf), None, dtype=object)
+                rid = np.full(rb.num_rows, None, dtype=object)
                 if vpos.size:
                     rid[vpos] = _assign_batch(index, lat_all[vpos],
                                               lon_all[vpos], res)
-                kdist = np.full(len(pdf), np.nan)
+                kdist = np.full(rb.num_rows, np.nan)
                 if max_d is not None:
                     miss = np.flatnonzero(pd.isna(rid) & finite)
                     if len(miss):
@@ -468,22 +483,18 @@ def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
                             index, res, max_d, metric=metric)
                         rid[npos] = nrid
                         kdist[npos] = ndist
-                out[out_col] = rid
+                cols.append(pa.array(rid, pa.string()))
                 if dist_col is not None:
-                    # nullable Float64 so no-match rows surface as SQL NULL
-                    # (a plain float column would ship NaN through Arrow)
-                    kd = pd.array(kdist, dtype="Float64")
-                    kd[np.isnan(kdist)] = pd.NA
-                    out[dist_col] = kd
+                    dist_cols.append(pa.array(kdist, mask=np.isnan(kdist)))
             if keep_cell:
-                cid = np.full(len(pdf), None, dtype=object)
-                if finite.any():
-                    cid[finite] = cell_of(lat_all[finite], lon_all[finite],
-                                          cell_res)
-                out["cell_id"] = pd.array(cid, dtype="Int64")
-            yield out
+                cid = np.zeros(rb.num_rows, np.int64)
+                cid[finite] = cell_of(lat_all[finite], lon_all[finite],
+                                      cell_res)
+                cols.append(pa.array(cid, mask=~finite))
+            yield pa.RecordBatch.from_arrays(cols + dist_cols,
+                                             names=out_schema.names)
 
-    return points.mapInPandas(run, schema=out_schema)
+    return points.mapInArrow(run, schema=out_schema)
 
 
 def reverse_geocode(
@@ -568,12 +579,12 @@ def reverse_geocode_multi(
     ``distance_unit`` (same semantics as :func:`reverse_geocode`); any
     other key is rejected on the driver.
 
-    One Python stage decodes each batch's coordinates once and runs every
-    lookup on them (_assign_batch / _knn_fallback over each set's
-    _CoverIndex), where chained reverse_geocode calls would be k
-    mapInPandas stages, the points crossing the JVM/Python boundary k
-    times. It is the same batch loop a single-set reverse_geocode runs,
-    so assignments match the chained form exactly.
+    One mapInArrow stage decodes each batch's coordinates once and runs
+    every lookup on them (_assign_batch / _knn_fallback over each set's
+    _CoverIndex), where chained reverse_geocode calls would be k Python
+    stages, the points crossing the JVM/Python boundary k times. It is the
+    same batch loop a single-set reverse_geocode runs, so assignments match
+    the chained form exactly.
 
     ``keep_cell`` adds one ``cell_id`` column at the FIRST assignment's
     resolution (the chained equivalent of keep_cell on the first call)."""
@@ -602,13 +613,6 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     spark = points.sparkSession
     sc = spark.sparkContext
     b_cover, b_geoms = _broadcast_prep(sc, prep)
-    res = prep.res
-
-    @F.pandas_udf(LongType())
-    def cell_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        settle_worker_imports()
-        return pd.Series(cell_of(lat.to_numpy(np.float64),
-                                 lon.to_numpy(np.float64), res))
 
     cover_df = spark.createDataFrame(prep.cover)
     # Deterministic per-row key: xxhash64 of the hashable columns under two
@@ -644,7 +648,8 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     pts = (points
            .withColumn("__rg_row", F.xxhash64(*in_cols))
            .withColumn("__rg_row2", F.xxhash64(F.lit(1), *in_cols)))
-    pts = pts.withColumn("cell_id", cell_udf(F.col(lat_col), F.col(lon_col)))
+    pts = pts.withColumn("cell_id",
+                         cell_udf(prep.res)(F.col(lat_col), F.col(lon_col)))
     cand = pts.join(F.broadcast(cover_df),
                     pts["cell_id"] == cover_df["cell"], "left")
 
@@ -655,41 +660,28 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
         StructField("region_seq", LongType()),
     ])
 
-    def pip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pip(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         settle_worker_imports()
         index = _get_index(b_cover.value, b_geoms.value)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            has_cand = pdf["region_id"].notna()
-            sub = pdf[has_cand]
-            keep = np.zeros(len(sub), dtype=bool)
-            interior = np.where(sub["interior"].isna(), False,
-                                sub["interior"]).astype(bool)
-            keep |= interior
-            bnd = ~interior
-            if bnd.any():
-                b = sub[bnd]
-                okk = np.zeros(len(b), dtype=bool)
-                for rid, grp in b.groupby("region_id", sort=False):
-                    px = grp[lon_col].to_numpy(np.float64)
-                    py = grp[lat_col].to_numpy(np.float64)
-                    okk[b.index.get_indexer(grp.index)] = \
-                        points_in_polygon_prepared(
-                            px, py, index.prepared(index.code[rid]))
-                keep[bnd] = okk
-            inside = sub[keep]
-            yield pd.DataFrame({
-                "__rg_row": inside["__rg_row"].astype(np.int64),
-                "__rg_row2": inside["__rg_row2"].astype(np.int64),
-                "region_id": inside["region_id"],
-                "region_seq": inside["region_seq"].astype(np.int64),
-            })
+        rids = pa.array(index.rids, pa.string())
+        for rb in batches:
+            # no candidate (left join miss): NULL region_id and interior
+            keep = pc.fill_null(rb.column("interior"), False).to_numpy(
+                zero_copy_only=False, writable=True)
+            code = pc.fill_null(pc.index_in(rb.column("region_id"),
+                                            value_set=rids), -1).to_numpy()
+            bnd = np.flatnonzero(~keep & (code >= 0))
+            px = rb.column(lon_col).cast(pa.float64()).to_numpy(
+                zero_copy_only=False)
+            py = rb.column(lat_col).cast(pa.float64()).to_numpy(
+                zero_copy_only=False)
+            keep[bnd] = _ray_cast(index, px[bnd], py[bnd], code[bnd])
+            yield rb.select(pip_schema.names).filter(pa.array(keep))
 
     assignments = (
         cand.select("__rg_row", "__rg_row2", lat_col, lon_col, "region_id",
                     "region_seq", "interior")
-        .mapInPandas(pip, schema=pip_schema)
+        .mapInArrow(pip, schema=pip_schema)
         .groupBy("__rg_row", "__rg_row2")
         .agg(F.min_by("region_id", "region_seq").alias(out_col))
     )

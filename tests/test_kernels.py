@@ -7,7 +7,7 @@ from hypothesis import strategies as st
 
 from geocode_spark.cells import (cell_bounds, cell_from_ij, cell_of,
                                  cell_to_ij, covering_cells, kring,
-                                 kring_shell, pick_resolution)
+                                 pick_resolution)
 from geocode_spark.crs import bng_to_latlon, latlon_to_bng, _en_to_osgb36
 from geocode_spark.geometry import (dist_to_polygon, points_in_polygon,
                                     polygon_bbox)
@@ -72,8 +72,6 @@ class TestCells:
         c = int(cell_of(np.array([53.0]), np.array([-2.0]), 15)[0])
         assert len(kring(c, 0)) == 1
         assert len(kring(c, 1)) == 9
-        assert len(kring_shell(c, 1)) == 8
-        assert len(kring_shell(c, 3)) == 24
 
     def test_covering_complete(self):
         xs = np.array([-2.1, -2.0, -2.0, -2.1])

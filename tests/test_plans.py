@@ -1,7 +1,7 @@
 """Physical-plan regression tests: the engine's scale guarantees, asserted
 on `.explain` output so a refactor can't silently reintroduce a shuffle.
 
-* fused reverse_geocode: ZERO exchanges (scan -> mapInPandas)
+* fused reverse_geocode: ZERO exchanges (scan -> mapInArrow)
 * forward_geocode: no fact-side exchange — every Exchange in the plan sits
   under a BroadcastExchange/dimension aggregation, never on the fact side
 * parquet scans: filters pushed down, columns pruned
@@ -31,8 +31,7 @@ def test_fused_reverse_geocode_has_no_shuffle(spark, fixture_dir):
         (F.col("id") * 0.001 - 1.0).alias("longitude"))
     plan = plan_of(reverse_geocode(pts, prep))
     assert "Exchange" not in plan
-    assert "FlatMapsInPandas" in plan.replace("MapInPandas", "FlatMapsInPandas") \
-        or "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_forward_geocode_fact_side_never_shuffles(spark, fixture_dir):
