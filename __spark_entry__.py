@@ -894,7 +894,7 @@ def q_raster_tiling(spark, sf_dir):
     """Raster<->vector tiling (north-rule surface), three labeled parts
     in one result:
 
-    * 'cell'  — distributed VECTOR->RASTER (mapInPandas covering-cells
+    * 'cell'  — distributed VECTOR->RASTER (Arrow-map covering-cells
       over the 64-polygon complex geoms table): (i, j, interior) per
       covering cell.
     * 'span'  — RASTER->VECTOR dissolve into maximal scanline runs

@@ -301,10 +301,10 @@ def main():
                  .select(F.col("id").alias("id_a"),
                          (F.col("id") + 1).alias("id_b"))
                  .repartition(CPUS * 2))
-        # convergence_check_every=1 (default) measured best here at BOTH
-        # core counts: batching rounds (k=2/3) saves driver latency but
-        # pays extra post-fixpoint shuffle rounds, a bad trade on this
-        # ~5-round chain workload (probe: 26.4s vs 29.4s at 2 cores)
+        # at the default size the residue left by the partition-local
+        # contraction fits GEOCODE_CC_DRIVER_MAX_EDGES, so the driver's
+        # union-find finishes it; max_iters bounds only the distributed
+        # fallback loop (set the cap to 0 to time that loop instead)
         return dup_clusters(nodes, pairs, max_iters=12).count()
 
     # ---- lineage no-op resume: recovery latency, not throughput --------

@@ -50,10 +50,10 @@ proven against HAND-CONSTRUCTED spec bytes in tests (built with
 struct/zlib, not these encoders).
 
 Scale note: decode is necessarily per-payload Python — it runs inside
-Arrow-batched ``mapInPandas`` stages so the payload crosses the
-JVM/Python boundary exactly once, and the only per-byte Python loops are
-the rare PNG filter types 3/4 (the common filters 0/1/2 and every other
-codec path are vectorized numpy).
+one Arrow pass-through map per operator (``functions.udfs.arrow_map``),
+so the payload crosses the JVM/Python boundary exactly once, and the
+only per-byte Python loops are the rare PNG filter types 3/4 (the
+common filters 0/1/2 and every other codec path are vectorized numpy).
 """
 
 from __future__ import annotations

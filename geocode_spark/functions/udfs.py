@@ -1,7 +1,8 @@
-"""Arrow-vectorized pandas UDFs — the engine's entire Python surface.
+"""Arrow-vectorized UDFs — the engine's entire Python surface.
 
 Per BASELINE.json input_hint: "no per-row Python". Each UDF is a thin Arrow
-batch wrapper over the numpy kernels in crs.py / cells.py; everything else
+batch wrapper over the numpy kernels in crs.py / cells.py, and every
+worker-side operator map runs through :func:`arrow_map`; everything else
 in the engine is Catalyst expressions (whole-stage codegen).
 
 Replaces the reference's pyproj calls (utilities.py:335-391) and the
@@ -15,7 +16,9 @@ import zipimport
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..cells import _RES_SHIFT, cell_of
@@ -49,6 +52,42 @@ def settle_worker_imports() -> None:
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del cache[path]
+
+
+def arrow_map(df, body, new_fields, keep=None):
+    """Run ``body`` over every non-empty Arrow batch of ``df`` and append
+    its new columns to the kept input columns.
+
+    ``body(rb)`` returns ``(take, arrays)``, or ``None`` to emit nothing.
+    ``arrays`` holds one column per ``new_fields`` entry: an Arrow array, or
+    a sequence converted to the field's Arrow type. ``take`` is ``None``
+    for one output row per input row; otherwise output row ``i`` copies
+    input row ``take[i]`` (an explode, or a filter when ``arrays`` is
+    empty). The ``keep`` input columns (all by default), in input order,
+    pass through as the batch's own Arrow arrays, so no value crosses a
+    pandas dtype. Output schema: the kept fields, then ``new_fields``.
+    """
+    fields = df.schema.fields
+    idx = [i for i, f in enumerate(fields) if keep is None or f.name in keep]
+    schema = StructType([fields[i] for i in idx] + list(new_fields))
+    types = [to_arrow_type(f.dataType) for f in new_fields]
+
+    def run(batches):
+        settle_worker_imports()
+        for rb in batches:
+            got = body(rb) if rb.num_rows else None
+            if got is None:
+                continue
+            take, arrays = got
+            kept = rb.select(idx)
+            if take is not None:
+                kept = kept.take(take)
+            yield pa.RecordBatch.from_arrays(
+                kept.columns + [a if isinstance(a, pa.Array) else pa.array(a, t)
+                                for a, t in zip(arrays, types)],
+                names=schema.names)
+
+    return df.mapInArrow(run, schema)
 
 
 @F.pandas_udf(_LATLON)

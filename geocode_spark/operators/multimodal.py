@@ -21,19 +21,18 @@ ship PIL/ffmpeg.
 raise ``MediaFormatError`` instead of downgrading to ``binary`` —
 quarantine-vs-continue is the caller's pipeline policy.
 
-At 100 TB: binary payloads dominate partition size, so the operators are
-built on Arrow-batched ``mapInPandas`` — the payload crosses the
-JVM/Python boundary exactly once, rows stay columnar, and output
-assembly is vectorized (no per-row pandas objects).
+At 100 TB: binary payloads dominate partition size, so every operator is
+one :func:`~geocode_spark.functions.udfs.arrow_map` pass — the payload
+crosses the JVM/Python boundary exactly once, and the input columns
+pass through as the batch's own Arrow arrays (exact values, no pandas
+dtype round trip).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
@@ -42,7 +41,7 @@ from ..functions.media import (MediaFormatError, avi_frames,
                                decode_media_meta, media_features,
                                mp3_frames, resize_image_payload, sniff,
                                wav_frames)
-from ..functions.udfs import settle_worker_imports
+from ..functions.udfs import arrow_map
 
 MEDIA_META_SCHEMA = StructType([
     StructField("media_type", StringType()),
@@ -67,18 +66,11 @@ def with_media_meta(df: DataFrame, binary_col: str = "html",
         fn = lambda payload: decode_media_meta(payload, strict=strict)  # noqa: E731
     else:
         fn = decode_fn
-    out_schema = StructType(df.schema.fields
-                            + [StructField("media", MEDIA_META_SCHEMA)])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        for pdf in batches:
-            metas = [fn(b) for b in pdf[binary_col]]
-            out = pdf.copy()
-            out["media"] = metas
-            yield out
+    def body(rb):
+        return None, [[fn(b) for b in rb.column(binary_col).to_pylist()]]
 
-    return df.mapInPandas(run, schema=out_schema)
+    return arrow_map(df, body, [StructField("media", MEDIA_META_SCHEMA)])
 
 
 def extract_features(df: DataFrame, binary_col: str = "html", dim: int = 16,
@@ -91,17 +83,13 @@ def extract_features(df: DataFrame, binary_col: str = "html", dim: int = 16,
     byte histogram for unrecognized payloads (functions.media
     .media_features). All normalized to sum 1, all deterministic."""
     fn = feature_fn or (lambda payload: media_features(payload, dim))
-    out_schema = StructType(df.schema.fields
-                            + [StructField("features", ArrayType(DoubleType()))])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        for pdf in batches:
-            out = pdf.copy()
-            out["features"] = [fn(b).tolist() for b in pdf[binary_col]]
-            yield out
+    def body(rb):
+        return None, [[fn(b).tolist()
+                       for b in rb.column(binary_col).to_pylist()]]
 
-    return df.mapInPandas(run, schema=out_schema)
+    return arrow_map(df, body,
+                     [StructField("features", ArrayType(DoubleType()))])
 
 
 def resize_media(df: DataFrame, binary_col: str = "html",
@@ -131,24 +119,14 @@ def resize_media(df: DataFrame, binary_col: str = "html",
                 raise
             return None
 
-    out_schema = StructType(df.schema.fields + [
-        StructField(out_col, BinaryType()),
-        StructField("resized_width", IntegerType()),
-        StructField("resized_height", IntegerType()),
-    ])
+    def body(rb):
+        n = rb.num_rows
+        return None, [[guarded(p) for p in rb.column(binary_col).to_pylist()],
+                      np.full(n, width, np.int32), np.full(n, height, np.int32)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf.copy()
-            out[out_col] = [guarded(p) for p in pdf[binary_col].tolist()]
-            out["resized_width"] = np.int32(width)
-            out["resized_height"] = np.int32(height)
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return arrow_map(df, body, [StructField(out_col, BinaryType()),
+                                StructField("resized_width", IntegerType()),
+                                StructField("resized_height", IntegerType())])
 
 
 def _default_frames(payload: bytes, n: int) -> list:
@@ -183,31 +161,15 @@ def frame_sample(df: DataFrame, binary_col: str = "html", n_frames: int = 4,
         # MediaFormatError downgrade policy and would fail the whole task
         raise ValueError(f"n_frames must be >= 1, got {n_frames}")
     fn = frame_fn or _default_frames
-    out_schema = StructType(df.schema.fields + [
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_bytes", BinaryType()),
-    ])
+    def body(rb):
+        # frame extraction runs per payload (the pluggable hook is
+        # payload-granular); the explode is one take of the kept columns
+        frames = [fn(p, n_frames) for p in rb.column(binary_col).to_pylist()]
+        counts = np.fromiter((len(f) for f in frames), dtype=np.int64,
+                             count=len(frames))
+        return np.repeat(np.arange(len(frames)), counts), [
+            np.concatenate([np.arange(c, dtype=np.int32) for c in counts]),
+            [fb for f in frames for fb in f]]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # columnar explode: frame extraction runs per payload (the
-            # pluggable decode hook is payload-granular by nature), but row
-            # materialization is a single vectorized take + two appended
-            # columns — no per-row pandas objects
-            frames = [fn(p, n_frames) for p in pdf[binary_col].tolist()]
-            counts = np.fromiter((len(f) for f in frames), dtype=np.int64,
-                                 count=len(frames))
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            out = pdf.iloc[np.repeat(np.arange(len(pdf)), counts)] \
-                     .reset_index(drop=True)
-            out["frame_idx"] = np.concatenate(
-                [np.arange(c, dtype=np.int32) for c in counts])
-            out["frame_bytes"] = [fb for f in frames for fb in f]
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return arrow_map(df, body, [StructField("frame_idx", IntegerType()),
+                                StructField("frame_bytes", BinaryType())])

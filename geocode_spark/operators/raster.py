@@ -10,7 +10,8 @@ Three first-class operators over the engine's Z-order cell grid
   (region_id, xs, ys, ring_offsets) into a cell raster
   (region_id, cell_id, cell_i, cell_j, interior). Distributed: each
   executor rasterizes the polygons of its own input partition inside one
-  Arrow-batched ``mapInPandas`` stage — no shuffle, no driver collect, so
+  :func:`~geocode_spark.functions.udfs.arrow_map` pass that explodes each
+  region row into its cells — no shuffle, no driver collect, so
   a 10^6-polygon national boundary table rasterizes with the same plan
   shape as the 64-polygon fixture. ``interior`` marks cells wholly inside
   their region (no boundary edge crosses them): downstream joins on those
@@ -37,27 +38,23 @@ grids) is the big side and is only ever touched by one cell-keyed join.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import BooleanType, LongType, StructField
 
 from ..cells import cell_to_ij, covering_cells
-from ..functions.udfs import settle_worker_imports
+from ..functions.udfs import arrow_map
 
 
-def raster_schema(region_col: str = "region_id") -> StructType:
-    return StructType([
-        StructField(region_col, StringType()),
-        StructField("cell_id", LongType()),
-        StructField("cell_i", LongType()),
-        StructField("cell_j", LongType()),
-        StructField("interior", BooleanType()),
-    ])
+def _row_views(col: pa.ListArray, dtype) -> list:
+    """Per-row numpy views of a list column, cut at its offsets (absolute
+    into ``col.values``; ``flatten()`` drops the values behind null lists,
+    which would misalign the cuts)."""
+    vals = col.values.cast(dtype).to_numpy(zero_copy_only=False)
+    offs = col.offsets.to_numpy()
+    return [vals[a:b] for a, b in zip(offs[:-1], offs[1:])]
 
 
 def rasterize_regions(regions: DataFrame, res: int,
@@ -80,45 +77,24 @@ def rasterize_regions(regions: DataFrame, res: int,
     """
     if not 0 <= res <= 26:
         raise ValueError(f"resolution must be in [0, 26], got {res}")
-    out_schema = raster_schema(region_col)
-    src = regions.select(region_col, xs_col, ys_col, offsets_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        settle_worker_imports()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # accumulate numpy per polygon, materialize ONE frame per
-            # Arrow batch: per-polygon DataFrame construction would
-            # dominate when polygons are small and numerous (parcels)
-            rids, counts, cell_arrs, int_arrs = [], [], [], []
-            for rid, xs, ys, offs in zip(pdf.iloc[:, 0].values,
-                                         pdf.iloc[:, 1].values,
-                                         pdf.iloc[:, 2].values,
-                                         pdf.iloc[:, 3].values):
-                cells, interior = covering_cells(
-                    np.asarray(xs, np.float64), np.asarray(ys, np.float64),
-                    np.asarray(offs, np.int64), res)
-                if len(cells) == 0:
-                    continue
-                rids.append(rid)
-                counts.append(len(cells))
-                cell_arrs.append(cells)
-                int_arrs.append(interior)
-            if not cell_arrs:
-                continue
-            cells = np.concatenate(cell_arrs)
-            _, ci, cj = cell_to_ij(cells)
-            yield pd.DataFrame({
-                region_col: np.repeat(np.asarray(rids, dtype=object),
-                                      counts),
-                "cell_id": cells.astype(np.int64),
-                "cell_i": ci.astype(np.int64),
-                "cell_j": cj.astype(np.int64),
-                "interior": np.concatenate(int_arrs),
-            })
+    def body(rb):
+        # one covering per region row; the region id column repeats once
+        # per cell through the explode's take
+        cov = [covering_cells(xs, ys, offs, res) for xs, ys, offs in zip(
+            _row_views(rb.column(xs_col), pa.float64()),
+            _row_views(rb.column(ys_col), pa.float64()),
+            _row_views(rb.column(offsets_col), pa.int64()))]
+        cells = np.concatenate([c for c, _ in cov]).astype(np.int64)
+        _, ci, cj = cell_to_ij(cells)
+        return np.repeat(np.arange(len(cov)), [len(c) for c, _ in cov]), [
+            cells, ci.astype(np.int64), cj.astype(np.int64),
+            np.concatenate([i for _, i in cov])]
 
-    return src.mapInPandas(run, schema=out_schema)
+    return arrow_map(
+        regions.select(region_col, xs_col, ys_col, offsets_col), body,
+        [StructField(c, LongType()) for c in ("cell_id", "cell_i", "cell_j")]
+        + [StructField("interior", BooleanType())], keep=[region_col])
 
 
 def raster_to_spans(raster: DataFrame,

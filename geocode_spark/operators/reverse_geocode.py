@@ -17,8 +17,8 @@ Re-expresses the reference's computational core
   5. NA -> None normalization                       -> SQL NULL natively
 
 Two physical strategies, both shuffle-free on the candidate side, both
-``mapInArrow`` end to end (input columns pass through as the batch's own
-Arrow arrays, never through pandas) over one ray-cast helper,
+one ``functions.udfs.arrow_map`` pass (input columns pass through as the
+batch's own Arrow arrays, never through pandas) over one ray-cast helper,
 ``_ray_cast``:
 
 * ``fused`` (default): one ``mapInArrow`` pass per partition — cell encode,
@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import threading
 from collections import OrderedDict
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,11 +46,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField
 
 from ..cells import cell_of, cell_to_ij, cell_from_ij
-from ..functions.udfs import cell_udf, settle_worker_imports
+from ..functions.udfs import arrow_map, cell_udf
 from ..geometry import (METERS_PER_DEG, EdgeTable, PreparedPolygon,
                         dist_to_polygons_pairs, points_in_polygon_prepared)
 from ..regions import PreparedRegions
@@ -431,70 +429,59 @@ def _spec(sc, prep: PreparedRegions, out_col: str,
 
 def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
            output_cols: list[str] | None, keep_cell: bool) -> DataFrame:
-    """The fused batch loop: every spec's lookup in ONE mapInArrow pass,
-    coordinates decoded once per batch. Columns, in this order: the kept
-    input columns (the batch's own Arrow arrays, untouched), every
-    ``out_col``, ``cell_id`` (first spec's resolution) when ``keep_cell``,
-    every ``dist_col``. Arrow matches the output to the schema by position.
+    """The fused batch loop: every spec's lookup in ONE
+    :func:`~geocode_spark.functions.udfs.arrow_map` pass, coordinates
+    decoded once per batch. Adds, after the kept input columns (all, or
+    those in ``output_cols``): every ``out_col``, ``cell_id`` (first spec's
+    resolution) when ``keep_cell``, every ``dist_col``.
     """
-    fields = points.schema.fields
-    keep = [i for i, f in enumerate(fields)
-            if output_cols is None or f.name in output_cols]
-    out_fields = ([fields[i] for i in keep]
-                  + [StructField(s[3], StringType()) for s in specs])
+    new_fields = [StructField(s[3], StringType()) for s in specs]
     if keep_cell:
-        out_fields = out_fields + [StructField("cell_id", LongType())]
-    out_fields = out_fields + [StructField(s[6], DoubleType())
-                               for s in specs if s[6] is not None]
-    out_schema = StructType(out_fields)
+        new_fields.append(StructField("cell_id", LongType()))
+    new_fields += [StructField(s[6], DoubleType())
+                   for s in specs if s[6] is not None]
     cell_res = specs[0][2]
+    # Every spec's index is fetched on a task's first batch and held: with
+    # more specs than the FIFO cache holds, per-batch _get_index calls
+    # would thrash it and re-sort every cover map on every batch.
+    indexes = []
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        settle_worker_imports()
-        # Build (or fetch) every spec's index ONCE per stage and hold
-        # direct references across batches: with more specs than the
-        # FIFO cache holds, per-batch _get_index calls would thrash the
-        # cache and re-sort every cover map on every batch.
-        indexes = [_get_index(s[0].value, s[1].value) for s in specs]
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            # NULL -> NaN, so the finite test covers both
-            lat_all = rb.column(lat_col).cast(pa.float64()).to_numpy(
-                zero_copy_only=False)
-            lon_all = rb.column(lon_col).cast(pa.float64()).to_numpy(
-                zero_copy_only=False)
-            finite = np.isfinite(lat_all) & np.isfinite(lon_all)
-            vpos = np.flatnonzero(finite)
-            cols = [rb.column(i) for i in keep]
-            dist_cols = []
-            for (_, _, res, _, max_d, metric, dist_col), index in zip(
-                    specs, indexes):
-                rid = np.full(rb.num_rows, None, dtype=object)
-                if vpos.size:
-                    rid[vpos] = _assign_batch(index, lat_all[vpos],
-                                              lon_all[vpos], res)
-                kdist = np.full(rb.num_rows, np.nan)
-                if max_d is not None:
-                    miss = np.flatnonzero(pd.isna(rid) & finite)
-                    if len(miss):
-                        npos, nrid, ndist = _knn_fallback(
-                            miss, lon_all[miss], lat_all[miss],
-                            index, res, max_d, metric=metric)
-                        rid[npos] = nrid
-                        kdist[npos] = ndist
-                cols.append(pa.array(rid, pa.string()))
-                if dist_col is not None:
-                    dist_cols.append(pa.array(kdist, mask=np.isnan(kdist)))
-            if keep_cell:
-                cid = np.zeros(rb.num_rows, np.int64)
-                cid[finite] = cell_of(lat_all[finite], lon_all[finite],
-                                      cell_res)
-                cols.append(pa.array(cid, mask=~finite))
-            yield pa.RecordBatch.from_arrays(cols + dist_cols,
-                                             names=out_schema.names)
+    def body(rb):
+        if not indexes:
+            indexes.extend(_get_index(s[0].value, s[1].value) for s in specs)
+        # NULL -> NaN, so the finite test covers both
+        lat_all = rb.column(lat_col).cast(pa.float64()).to_numpy(
+            zero_copy_only=False)
+        lon_all = rb.column(lon_col).cast(pa.float64()).to_numpy(
+            zero_copy_only=False)
+        finite = np.isfinite(lat_all) & np.isfinite(lon_all)
+        vpos = np.flatnonzero(finite)
+        cols, dist_cols = [], []
+        for (_, _, res, _, max_d, metric, dist_col), index in zip(
+                specs, indexes):
+            rid = np.full(rb.num_rows, None, dtype=object)
+            if vpos.size:
+                rid[vpos] = _assign_batch(index, lat_all[vpos],
+                                          lon_all[vpos], res)
+            kdist = np.full(rb.num_rows, np.nan)
+            if max_d is not None:
+                miss = np.flatnonzero(pd.isna(rid) & finite)
+                if len(miss):
+                    npos, nrid, ndist = _knn_fallback(
+                        miss, lon_all[miss], lat_all[miss],
+                        index, res, max_d, metric=metric)
+                    rid[npos] = nrid
+                    kdist[npos] = ndist
+            cols.append(rid)
+            if dist_col is not None:
+                dist_cols.append(pa.array(kdist, mask=np.isnan(kdist)))
+        if keep_cell:
+            cid = np.zeros(rb.num_rows, np.int64)
+            cid[finite] = cell_of(lat_all[finite], lon_all[finite], cell_res)
+            cols.append(pa.array(cid, mask=~finite))
+        return None, cols + dist_cols
 
-    return points.mapInArrow(run, schema=out_schema)
+    return arrow_map(points, body, new_fields, keep=output_cols)
 
 
 def reverse_geocode(
@@ -653,35 +640,31 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     cand = pts.join(F.broadcast(cover_df),
                     pts["cell_id"] == cover_df["cell"], "left")
 
-    pip_schema = StructType([
-        StructField("__rg_row", LongType()),
-        StructField("__rg_row2", LongType()),
-        StructField("region_id", StringType()),
-        StructField("region_seq", LongType()),
-    ])
+    held = []   # (index, its region ids), fetched on a task's first batch
 
-    def pip(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        settle_worker_imports()
-        index = _get_index(b_cover.value, b_geoms.value)
-        rids = pa.array(index.rids, pa.string())
-        for rb in batches:
-            # no candidate (left join miss): NULL region_id and interior
-            keep = pc.fill_null(rb.column("interior"), False).to_numpy(
-                zero_copy_only=False, writable=True)
-            code = pc.fill_null(pc.index_in(rb.column("region_id"),
-                                            value_set=rids), -1).to_numpy()
-            bnd = np.flatnonzero(~keep & (code >= 0))
-            px = rb.column(lon_col).cast(pa.float64()).to_numpy(
-                zero_copy_only=False)
-            py = rb.column(lat_col).cast(pa.float64()).to_numpy(
-                zero_copy_only=False)
-            keep[bnd] = _ray_cast(index, px[bnd], py[bnd], code[bnd])
-            yield rb.select(pip_schema.names).filter(pa.array(keep))
+    def pip(rb):
+        if not held:
+            ix = _get_index(b_cover.value, b_geoms.value)
+            held.append((ix, pa.array(ix.rids, pa.string())))
+        index, rids = held[0]
+        # no candidate (left join miss): NULL region_id and interior
+        keep = pc.fill_null(rb.column("interior"), False).to_numpy(
+            zero_copy_only=False, writable=True)
+        code = pc.fill_null(pc.index_in(rb.column("region_id"),
+                                        value_set=rids), -1).to_numpy()
+        bnd = np.flatnonzero(~keep & (code >= 0))
+        px = rb.column(lon_col).cast(pa.float64()).to_numpy(
+            zero_copy_only=False)
+        py = rb.column(lat_col).cast(pa.float64()).to_numpy(
+            zero_copy_only=False)
+        keep[bnd] = _ray_cast(index, px[bnd], py[bnd], code[bnd])
+        return np.flatnonzero(keep), []
 
+    cand = cand.select("__rg_row", "__rg_row2", lat_col, lon_col,
+                       "region_id", "region_seq", "interior")
     assignments = (
-        cand.select("__rg_row", "__rg_row2", lat_col, lon_col, "region_id",
-                    "region_seq", "interior")
-        .mapInArrow(pip, schema=pip_schema)
+        arrow_map(cand, pip, [], keep=["__rg_row", "__rg_row2", "region_id",
+                                       "region_seq"])
         .groupBy("__rg_row", "__rg_row2")
         .agg(F.min_by("region_id", "region_seq").alias(out_col))
     )

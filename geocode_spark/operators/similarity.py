@@ -1,8 +1,9 @@
 """Similarity search over an embedding column (array<float>).
 
-* brute_force_topk — exact cosine top-k per query vector: broadcast the
-  queries (small side), score every corpus row JVM-side with zip_with /
-  aggregate (no Python), window top-k. The correctness baseline.
+* brute_force_topk — exact cosine top-k per query vector: the queries
+  (small side) ride in the task closure, each corpus Arrow batch is scored
+  in numpy and emits its local top-k per query, a window ranks the
+  candidates. The correctness baseline.
 * lsh_buckets / lsh_topk — random-hyperplane LSH: bucket corpus and queries
   by an s-bit sign sketch, candidate = same bucket (or Hamming<=r probe),
   exact cosine re-rank inside buckets only. The 100 TB path: corpus pass is
@@ -16,11 +17,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
+from pyspark.sql.types import DoubleType, LongType, StructField
 
-from ..functions.udfs import settle_worker_imports
+from ..functions.udfs import arrow_map, settle_worker_imports
 
 
 def _dot(a, b):
@@ -58,116 +61,75 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      query_id_col: str = "query_id") -> DataFrame:
     """Exact cosine top-k: (query_id, vec_id, cosine, rank).
 
-    Round-6 plan (guide §4.2 — batch the heavy math in native code): the
-    queries (the broadcast-small side; previously collected to the driver
-    anyway to build the broadcast relation) are collected once and shipped
-    in the task closure; one ``mapInPandas`` pass scores every corpus
-    partition against ALL queries in numpy and emits only each Arrow
-    batch's local top-k per query, so the final exact window ranks
-    ``O(batches x queries x k)`` candidate rows instead of the previous
-    ``|corpus| x |queries|`` crossJoin with per-element Catalyst lambdas
-    (the crossJoin plan also duplicated every embedding array |queries|
-    times through the join). Cosines are BIT-IDENTICAL to the old plan:
-    ``_seq_dot`` reproduces the JVM aggregate's exact operation order, and
-    the null/ragged corner cases reproduce the old expression semantics
-    (null or zero-norm vector -> 0.0; length-mismatched vector -> NULL
-    cosine, ranked after non-nulls exactly as the window always did)."""
+    The queries (the small side) are collected once and shipped in the
+    task closure. One :func:`~geocode_spark.functions.udfs.arrow_map` pass
+    scores each corpus Arrow batch against every query in numpy and emits
+    only the batch's local top-k per query (the id passes through as the
+    batch's own Arrow array); a window over those ``O(batches x queries x
+    k)`` candidates ranks the exact result. Batch candidates are chosen in
+    the window's order (cosine DESC with NaN largest, then id ASC with
+    NULL first), so the global top-k is inside their union for any batch
+    split. Cosines equal Catalyst's ``aggregate(zip_with(...))`` form bit
+    for bit (``_seq_dot``); a null or zero-norm vector scores 0.0, and a
+    length-mismatched pair scores NULL, ranked after every non-null."""
     q_rows = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
-    spark = corpus.sparkSession
-    id_f = corpus.schema[id_col]
-    qid_f = queries.schema[query_id_col]
-    out_schema = StructType([
-        StructField(query_id_col, qid_f.dataType),
-        StructField(id_col, id_f.dataType),
-        StructField("cosine", DoubleType()),
-    ])
-    if not q_rows:
-        cand = spark.createDataFrame([], out_schema)
-    else:
-        qs = []
-        for r in q_rows:
-            vec = r[1]
-            if vec is None:
-                qs.append((r[0], None, 0.0))
-            else:
-                v = np.asarray(vec, dtype=np.float64)
-                sq = 0.0
-                for x in v.tolist():          # left-to-right, like the JVM
-                    sq = sq + x * x
-                qs.append((r[0], v, float(np.sqrt(sq))))
+    qs = []
+    for qid, vec in q_rows:
+        if vec is None:
+            qs.append((qid, None, 0.0))
+        else:
+            v = np.asarray(vec, dtype=np.float64)
+            sq = 0.0
+            for x in v.tolist():          # left-to-right, like the JVM
+                sq = sq + x * x
+            qs.append((qid, v, float(np.sqrt(sq))))
 
-        def score(batches):
-            settle_worker_imports()
-            for pdf in batches:
-                ids = pdf[id_col].to_numpy()
-                vecs = pdf[vec_col]
-                lens = np.fromiter(
-                    ((-1 if v is None else len(v)) for v in vecs),
-                    dtype=np.int64, count=len(vecs))
-                out_q, out_id, out_cos = [], [], []
-                for L in np.unique(lens):
-                    sel = lens == L
-                    gids = ids[sel]
-                    if L < 0:
-                        # NULL vector: old plan scored it 0.0 for every
-                        # query (when-condition null -> otherwise branch)
-                        for qid, _, _ in qs:
-                            take = np.sort(gids)[:k]
-                            out_q += [qid] * len(take)
-                            out_id += take.tolist()
-                            out_cos += [0.0] * len(take)
-                        continue
-                    mat = np.stack(
-                        [np.asarray(v, dtype=np.float64)
-                         for v in vecs[sel]]) if L else \
-                        np.zeros((int(sel.sum()), 0))
-                    na = np.sqrt(_seq_sqnorm(mat))
-                    for qid, qv, nb in qs:
-                        if qv is None or len(qv) != L or nb <= 0:
-                            if qv is not None and len(qv) != L:
-                                # zip_with pads -> null product -> NULL
-                                # cosine (only when both norms > 0; zero
-                                # norms still hit the otherwise-0.0 branch)
-                                cos = np.where((na > 0) & (nb > 0),
-                                               np.nan, 0.0)
-                                nulls = np.isnan(cos)
-                                # nulls rank AFTER all non-nulls: keep the
-                                # k smallest-id null rows as candidates
-                                nz = gids[~nulls]
-                                take = np.sort(nz)[:k]
-                                out_q += [qid] * len(take)
-                                out_id += take.tolist()
-                                out_cos += [0.0] * len(take)
-                                nid = np.sort(gids[nulls])[:k]
-                                out_q += [qid] * len(nid)
-                                out_id += nid.tolist()
-                                out_cos += [None] * len(nid)
-                            else:
-                                take = np.sort(gids)[:k]
-                                out_q += [qid] * len(take)
-                                out_id += take.tolist()
-                                out_cos += [0.0] * len(take)
-                            continue
-                        dot = _seq_dot(mat, qv)
-                        denom = na * nb
-                        with np.errstate(invalid="ignore",
-                                         divide="ignore"):
-                            cos = np.where(na > 0, dot / denom, 0.0)
-                        # Spark sorts NaN as LARGEST in desc order: treat
-                        # NaN as +inf for candidate selection only (the
-                        # emitted value stays NaN, and the final window
-                        # re-ranks with Spark's own NaN ordering)
-                        skey = np.where(np.isnan(cos), np.inf, cos)
-                        take = np.lexsort((gids, -skey))[:k]
-                        out_q += [qid] * len(take)
-                        out_id += gids[take].tolist()
-                        out_cos += cos[take].tolist()
-                if out_q:
-                    yield pd.DataFrame({query_id_col: out_q, id_col: out_id,
-                                        "cosine": out_cos})
+    def body(rb):
+        ids, vecs = rb.column(id_col), rb.column(vec_col)
+        rank = pc.rank(ids, "ascending", null_placement="at_start").to_numpy()
+        lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+        off = vecs.offsets.to_numpy()
+        flat = vecs.values.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        take, out_q, out_cos = [], [], []
 
-        cand = corpus.select(F.col(id_col), F.col(vec_col)) \
-            .mapInPandas(score, out_schema)
+        def emit(qid, rows, cos):
+            take.append(rows)
+            out_q.extend([qid] * len(rows))
+            out_cos.extend(cos if isinstance(cos, list) else
+                           [cos] * len(rows))
+
+        for L in np.unique(lens):
+            rows = np.flatnonzero(lens == L)
+            rows = rows[np.argsort(rank[rows])]     # id ASC, NULL first
+            if L < 0:
+                for qid, _, _ in qs:
+                    emit(qid, rows[:k], 0.0)
+                continue
+            mat = flat[off[rows][:, None] + np.arange(L)]
+            na = np.sqrt(_seq_sqnorm(mat))
+            for qid, qv, nb in qs:
+                if qv is not None and len(qv) != L and nb > 0:
+                    # zip_with pads -> null product -> NULL cosine when both
+                    # norms are > 0; NULLs rank after every non-null
+                    nul = na > 0
+                    emit(qid, rows[~nul][:k], 0.0)
+                    emit(qid, rows[nul][:k], None)
+                elif qv is None or len(qv) != L or nb <= 0:
+                    emit(qid, rows[:k], 0.0)
+                else:
+                    with np.errstate(invalid="ignore", divide="ignore"):
+                        cos = np.where(na > 0, _seq_dot(mat, qv) / (na * nb),
+                                       0.0)
+                    # Spark sorts NaN as LARGEST in desc order; the stable
+                    # sort keeps id order among equal cosines
+                    o = np.argsort(-np.where(np.isnan(cos), np.inf, cos),
+                                   kind="stable")[:k]
+                    emit(qid, rows[o], cos[o].tolist())
+        return (np.concatenate(take), [out_q, out_cos]) if take else None
+
+    cand = arrow_map(corpus.select(id_col, vec_col), body,
+                     [queries.schema[query_id_col],
+                      StructField("cosine", DoubleType())], keep=[id_col])
     w = Window.partitionBy(query_id_col).orderBy(
         F.desc("cosine"), F.col(id_col))
     return (

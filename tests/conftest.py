@@ -15,7 +15,11 @@ def spark():
                   shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
-    s.stop()
+    try:
+        # every test that starts a streaming query stops it
+        assert s.streams.active == [], s.streams.active
+    finally:
+        s.stop()
 
 
 @pytest.fixture(scope="session")

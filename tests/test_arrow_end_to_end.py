@@ -1,7 +1,8 @@
-"""Reverse geocode runs Arrow end to end.
+"""Worker-side operators run Arrow end to end.
 
-* kept input columns come back exactly through both fused entry points
-  (no pandas dtype round trip: a nullable bigint stays an exact bigint);
+* kept input columns come back exactly through both fused reverse-geocode
+  entry points and the four multimodal operators (no pandas dtype round
+  trip: a nullable bigint stays an exact bigint, a NaN stays a NaN);
 * ``geocode_documents`` has one Python stage, and its ``tile_id`` is the
   Catalyst-derived resolution-8 ancestor of ``cell_id``.
 """
@@ -17,13 +18,16 @@ import pytest
 from geocode_spark.cells import cell_of
 from geocode_spark.functions.udfs import cell_parent
 from geocode_spark.operators.forward_geocode import prepare_cpo
+from geocode_spark.operators.multimodal import (extract_features,
+                                                frame_sample, resize_media,
+                                                with_media_meta)
 from geocode_spark.operators.pipeline import geocode_documents
 from geocode_spark.operators.reverse_geocode import (_get_index, _ray_cast,
                                                      reverse_geocode,
                                                      reverse_geocode_multi)
 from geocode_spark.regions import load_prepared
 
-KEPT = ["doc_id", "tags", "ts", "price", "latitude", "longitude"]
+KEPT = ["doc_id", "tags", "ts", "price", "latitude", "longitude", "html"]
 
 
 @pytest.fixture(scope="module")
@@ -42,11 +46,11 @@ def test_kept_columns_pass_through_exactly(spark, preps):
     ts = dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
     # one partition: the NULL id and the big ids share one Arrow batch
     pts = spark.createDataFrame(
-        [(2**62 + 1, [1, None, 3], ts, Decimal("12.34"), 53.9, -1.3),
-         (None, [None], None, Decimal("-0.01"), None, -1.3),
-         (2**62 + 3, [], ts, None, float("nan"), -1.3)],
+        [(2**62 + 1, [1, None, 3], ts, Decimal("12.34"), 53.9, -1.3, b"abcd"),
+         (None, [None], None, Decimal("-0.01"), None, -1.3, b"xy"),
+         (2**62 + 3, [], ts, None, float("nan"), -1.3, b"z")],
         "doc_id bigint, tags array<int>, ts timestamp, price decimal(10,2), "
-        "latitude double, longitude double").coalesce(1)
+        "latitude double, longitude double, html binary").coalesce(1)
     want = _rows(pts)
     assert "4611686018427387907" in want[2]
 
@@ -61,6 +65,15 @@ def test_kept_columns_pass_through_exactly(spark, preps):
         assert all(v is None for r in tail for v in r)
     assert fused.columns == KEPT + ["region_id", "cell_id", "knn_dist"]
     assert multi.columns == KEPT + ["llsoa", "gsp", "cell_id"]
+
+    for out in (with_media_meta(pts), extract_features(pts),
+                resize_media(pts)):
+        assert _rows(out) == want
+    # the byte-slice fallback gives 2, 2 and 1 frames: each input row's
+    # values repeat once per frame
+    frames = frame_sample(pts, n_frames=2)
+    assert _rows(frames) == [want[0]] * 2 + [want[1]] * 2 + [want[2]]
+    assert [r.frame_idx for r in frames.collect()] == [0, 1, 0, 1, 0]
 
 
 def test_ray_cast_empty_and_bbox(preps):

@@ -7,7 +7,9 @@ on `.explain` output so a refactor can't silently reintroduce a shuffle.
 * parquet scans: filters pushed down, columns pruned
 """
 
+import ast
 import re
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
@@ -80,17 +82,22 @@ def test_whole_stage_codegen_covers_text_ops(spark, fixture_dir):
 
 def test_multimodal_plans_are_arrow_not_row_python(spark, fixture_dir):
     """The COVERAGE.md claim 'no row-at-a-time Python' extended to the
-    multimodal module: every Python stage must be an Arrow-vectorized
-    mapInPandas / pandas UDF (MapInPandas / ArrowEvalPython), never a
+    multimodal module: each operator is one Arrow pass-through map
+    (MapInArrow), never a pandas conversion (MapInPandas) or a
     row-at-a-time BatchEvalPython."""
-    from geocode_spark.operators.multimodal import (frame_sample,
+    from geocode_spark.operators.multimodal import (extract_features,
+                                                    frame_sample,
+                                                    resize_media,
                                                     with_media_meta)
 
     pages = spark.read.parquet(str(fixture_dir / "pages.parquet"))
     for df in (frame_sample(pages, binary_col="html", n_frames=3),
-               with_media_meta(pages, binary_col="html")):
+               with_media_meta(pages, binary_col="html"),
+               extract_features(pages, binary_col="html"),
+               resize_media(pages, binary_col="html")):
         plan = plan_of(df, mode="simple")
-        assert "BatchEvalPython" not in plan, plan
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
     # source-level guard: no pandas row iteration anywhere in the module
     import inspect
 
@@ -98,3 +105,26 @@ def test_multimodal_plans_are_arrow_not_row_python(spark, fixture_dir):
 
     src = inspect.getsource(mm)
     assert "iterrows" not in src and "itertuples" not in src
+
+
+def _users_of(attr):
+    """(module, top-level definition) pairs in ``geocode_spark/`` whose code
+    reads the attribute ``attr``."""
+    import geocode_spark
+
+    found = []
+    for p in sorted(Path(geocode_spark.__file__).parent.rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if any(isinstance(n, ast.Attribute) and n.attr == attr
+                   for n in ast.walk(node)):
+                found.append((p.stem, getattr(node, "name", None)))
+    return found
+
+
+def test_worker_maps_go_through_arrow_map():
+    """Every worker-side map is ``functions.udfs.arrow_map``, except the
+    MinHash bucket walk (it carries the open bucket across batches) and
+    the connected-components contraction, the one pandas map left."""
+    assert _users_of("mapInPandas") == [("dedup", "_local_contract")]
+    assert sorted(_users_of("mapInArrow")) == [
+        ("dedup", "minhash_dedup_pairs"), ("udfs", "arrow_map")]

@@ -64,6 +64,27 @@ class TestRasterizeRegions:
             cells, _ = covering_cells(xs, ys, np.array([0, len(xs)]), RES)
             assert counts[rec["region_id"]] == len(cells)
 
+    def test_region_id_survives_explode(self, spark):
+        """The region id is the input's own column, repeated once per
+        covering cell: a nullable bigint id comes back exact and typed."""
+        xs = [0.01, 0.09, 0.09, 0.01]
+        ys = [50.01, 50.01, 50.09, 50.09]
+        ids = [2**62 + 1, None, 2**62 + 3]
+        df = spark.createDataFrame(
+            [(rid, [x + k for x in xs], ys, [0, 4])
+             for k, rid in enumerate(ids)],
+            "region_id bigint, xs array<double>, ys array<double>, "
+            "ring_offsets array<int>").coalesce(1)
+        out = rasterize_regions(df, RES)
+        assert out.schema["region_id"].dataType.simpleString() == "bigint"
+        got = {}
+        for r in out.collect():
+            got.setdefault(r.region_id, set()).add(r.cell_id)
+        want = {rid: set(covering_cells(np.array(xs) + k, np.array(ys),
+                                        np.array([0, 4]), RES)[0].tolist())
+                for k, rid in enumerate(ids)}
+        assert got == want
+
     def test_bad_res_rejected(self, spark):
         with pytest.raises(ValueError, match=r"\[0, 26\]"):
             rasterize_regions(_square_df(spark), 27)

@@ -170,6 +170,10 @@ class TestBruteForceTopkBitParity:
         rows.append((41, [0.0] * 16))                   # zero norm
         rows.append((42, [float(x) for x in rng.standard_normal(12)]))  # ragged
         rows.append((43, rows[0][1]))                   # exact duplicate of 0
+        # ids past 2^53 and a NULL id, tied on cosine with query 5: the
+        # window's id order (NULL first) must break the tie
+        for big in (2**62 + 1, None, 2**62 + 3):
+            rows.append((big, rows[5][1]))
         corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         queries = corpus.filter(F.col("vec_id").isin(0, 5, 41)).select(
             F.col("vec_id").alias("query_id"), "embedding")

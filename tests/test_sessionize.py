@@ -22,8 +22,11 @@ def test_sessionize_stream(spark, tmp_path):
     q = (out.writeStream.outputMode("append")
          .format("memory").queryName("sessions")
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    rows = spark.sql("select * from sessions").collect()
+    try:
+        q.awaitTermination(300)
+        rows = spark.sql("select * from sessions").collect()
+    finally:
+        q.stop()
     # sessions only close when a later event exceeds the gap; the stream has
     # enough users/time-spread that some must close
     assert len(rows) > 0

@@ -31,7 +31,10 @@ def test_stream_pipeline_available_now(spark, fixture_dir, tmp_path,
     q = geocode_pages_stream(pages_stream, cpo, llsoa,
                              checkpoint_dir=str(tmp_path / "ckpt"),
                              output_dir=out_dir)
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     result = spark.read.parquet(out_dir)
     assert result.count() > 0
     assert "llsoa" in result.columns
@@ -43,7 +46,10 @@ def test_windowed_mention_counts(spark, pages_stream, tmp_path):
     q = (agg.writeStream.outputMode("complete")
          .format("memory").queryName("mention_counts")
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    rows = spark.sql("select * from mention_counts").collect()
+    try:
+        q.awaitTermination(300)
+        rows = spark.sql("select * from mention_counts").collect()
+    finally:
+        q.stop()
     assert len(rows) > 0
     assert all(r.n_mentions >= 1 for r in rows)
