@@ -10,7 +10,11 @@ columns, writes CSV or parquet):
         --prepared fixtures/prepared
 
 All jobs run unchanged on a multi-executor cluster: the only driver-side
-work is broadcast construction.
+work is broadcast construction. Reference tables are prepared once and
+loaded at run time: region sets under ``--prepared/<name>`` and the CPO
+forward-geocode dimensions under ``--prepared/cpo`` (both written by the
+``setup`` job; ``prepare_regions`` adds a region set), so no runtime job
+aggregates the CPO or runs the BNG conversion over it.
 """
 
 from __future__ import annotations
@@ -67,11 +71,12 @@ def latlons2gsp(spark, args):
 def postcodes2latlon(spark, args):
     """postcode CSV -> + latitude/longitude/match_status
     (reference postcodes2latlon.py:67-81)."""
-    from .operators.forward_geocode import forward_geocode, prepare_cpo
+    from .operators.forward_geocode import forward_geocode, load_dims
 
     df = _read_csv(spark, args.infile)
-    cpo = prepare_cpo(spark.read.parquet(f"{args.fixtures}/cpo_raw.parquet"))
-    _write(forward_geocode(df, cpo, dedup_keys=True), args.outfile)
+    dims = load_dims(spark, args.prepared)
+    _write(forward_geocode(df, None, dedup_keys=True, dims=dims),
+           args.outfile)
 
 
 def bng2latlon(spark, args):
@@ -90,8 +95,14 @@ def geocode_pages(spark, args):
     """North-star pipeline as a resumable job: pages -> extract -> geocode
     -> LLSOA+GSP, executed bucket-by-bucket with per-partition lineage
     manifests (plans/lineage.py). Re-running after an interruption skips
-    committed buckets; output is overwrite-idempotent."""
-    from .operators.forward_geocode import prepare_cpo
+    committed buckets; output is overwrite-idempotent.
+
+    Every reference table is loaded, not built: the LLSOA and GSP region
+    sets and the CPO exact/prefix dimensions (``load_dims``) come from
+    ``--prepared``, so each bucket's plan is pages scan -> extract -> two
+    broadcast joins -> one Arrow reverse-geocode pass -> write, with no
+    BNG UDF, aggregation or shuffle."""
+    from .operators.forward_geocode import load_dims
     from .operators.pipeline import geocode_documents
     from .plans.lineage import run_with_lineage
     from .regions import load_prepared
@@ -131,12 +142,13 @@ def geocode_pages(spark, args):
         snapshot, pin = (user_sid if user_sid is not None
                          else "snapshot-0"), None
     pages = read_pages(spark, args.infile, snapshot_id=pin)
-    cpo = prepare_cpo(spark.read.parquet(f"{args.fixtures}/cpo_raw.parquet"))
+    dims = load_dims(spark, args.prepared)
     llsoa = load_prepared("llsoa", args.prepared)
     gsp = load_prepared("gsp", args.prepared)
     results = run_with_lineage(
         pages, args.outfile, key_col="url",
-        transform=lambda df: geocode_documents(df, cpo, llsoa, gsp),
+        transform=lambda df: geocode_documents(df, None, llsoa, gsp,
+                                               dims=dims),
         n_buckets=args.buckets, snapshot_id=snapshot,
         operator_version="1")
     done = sum(1 for r in results if not r.skipped)
@@ -177,11 +189,18 @@ def setup_job(spark, args):
     """CLI lifecycle parity with the reference's ``--setup <entities>``
     (geocode.py:521-557 / force_setup geocode.py:380-392): (re)build the
     synthetic fixture tables + every prepared region artifact under
-    --fixtures. With real data, prepare_regions is the per-dataset
-    equivalent; this is the one-shot everything path."""
+    --fixtures, then the CPO forward-geocode dimensions under
+    --prepared/cpo (built from the fresh cpo_raw.parquet; this step needs
+    the session, which build_all does not). With real data,
+    prepare_regions is the per-dataset equivalent; this is the one-shot
+    everything path."""
+    from .operators.forward_geocode import prepare_cpo, save_dims
     from .sources.fixtures import build_all, checksum
 
     build_all(args.fixtures, prepared_dir=args.prepared)
+    save_dims(prepare_cpo(
+        spark.read.parquet(f"{args.fixtures}/cpo_raw.parquet")),
+        args.prepared)
     print(f"setup: fixtures -> {args.fixtures}, prepared -> {args.prepared} "
           f"(sha256 {checksum(args.fixtures)[:16]}...)")
 

@@ -293,12 +293,18 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                 continue
             cols = rb.schema.names
             ids_pa = rb.column(cols.index(id_col))
+            sig_pa = rb.column(cols.index("signature"))
+            bh_pa = rb.column(cols.index("__bh"))
+            # flatten() drops null lists, so one would misalign the reshape
+            for name, arr in (("signature", sig_pa), ("__bh", bh_pa)):
+                if arr.null_count:
+                    raise ValueError(
+                        f"minhash_dedup_pairs: {arr.null_count} null "
+                        f"'{name}' list(s) reached the bucket walk")
             # fixed-length list columns: the Arrow values buffer reshaped,
             # no per-row objects (flatten honors the array's offset)
-            S = np.asarray(rb.column(cols.index("signature")).flatten()) \
-                .reshape(n, -1)
-            H = np.asarray(rb.column(cols.index("__bh")).flatten()) \
-                .reshape(n, -1)
+            S = np.asarray(sig_pa.flatten()).reshape(n, -1)
+            H = np.asarray(bh_pa.flatten()).reshape(n, -1)
             bands_a = np.asarray(rb.column(cols.index("band")))
             hashes_a = np.asarray(rb.column(cols.index("band_hash")))
             if carry is not None:

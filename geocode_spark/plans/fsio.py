@@ -87,30 +87,36 @@ class _JvmFile:
 
 class FsPath:
     """A path on whatever filesystem its scheme names, with the small set
-    of operations lineage/metadata bookkeeping needs. One Hadoop
-    ``FileSystem`` handle is resolved per root and shared by children."""
+    of operations lineage/metadata bookkeeping needs. The Hadoop
+    ``FileSystem`` handle and ``Path`` class are resolved once per root and
+    shared by children."""
 
-    def __init__(self, spark: "SparkSession", path: str, _fs=None):
-        self._spark = spark
+    def __init__(self, spark: "SparkSession", path: str):
         self._jvm = spark._jvm
-        self._jpath = self._jvm.org.apache.hadoop.fs.Path(str(path))
-        if _fs is None:
-            hconf = spark._jsc.hadoopConfiguration()
-            _fs = self._jpath.getFileSystem(hconf)
-        self._fs = _fs
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        jpath = self._Path(str(path))
+        self._fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
         # fully qualified (scheme + authority resolved) — what Spark sees
-        self._jpath = self._fs.makeQualified(self._jpath)
+        self._jpath = self._fs.makeQualified(jpath)
+        self._str = None
 
     def __str__(self) -> str:
-        return self._jpath.toString()
+        if self._str is None:
+            self._str = self._jpath.toString()
+        return self._str
 
     @property
     def name(self) -> str:
         return self._jpath.getName()
 
     def child(self, name: str) -> "FsPath":
-        return FsPath(self._spark, f"{self._jpath.toString()}/{name}",
-                      _fs=self._fs)
+        """``<self>/<name>`` in one py4j call: the parent is qualified, so
+        the child parsed from its string is too."""
+        c = object.__new__(FsPath)
+        c._jvm, c._Path, c._fs = self._jvm, self._Path, self._fs
+        c._jpath = self._Path(f"{self}/{name}")
+        c._str = None
+        return c
 
     def exists(self) -> bool:
         return bool(self._fs.exists(self._jpath))
@@ -134,8 +140,7 @@ class FsPath:
         hdfs/s3a failure into "no files", and for the lineage layer that
         silent empty answer is the difference between "resume correctly"
         and "skip the stale-dir sweep / recompute everything"."""
-        glob = self._jvm.org.apache.hadoop.fs.Path(
-            f"{self._jpath.toString()}/{pattern}")
+        glob = self._Path(f"{self}/{pattern}")
         statuses = self._fs.globStatus(glob)
         if statuses is None:
             return []

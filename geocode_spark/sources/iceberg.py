@@ -16,8 +16,9 @@ the metadata layer:
 * ``read_iceberg`` resolves the CURRENT snapshot (or a caller-given
   ``snapshot_id`` — time travel) through metadata json -> manifest list ->
   manifests -> live data files (status != DELETED), then hands the exact
-  file list to ``spark.read.parquet``: scan parallelism, predicate
-  pushdown and column pruning are all Spark-native from there.
+  file list, with the snapshot's own schema, to ``spark.read.parquet``:
+  scan parallelism, predicate pushdown and column pruning are all
+  Spark-native from there.
 * ``write_iceberg`` commits append/overwrite snapshots: data files written
   by a normal distributed Spark job, per-file record counts taken from
   parquet FOOTERS (no re-scan), then manifest -> manifest list -> new
@@ -45,6 +46,8 @@ import json
 import time
 import uuid
 from typing import TYPE_CHECKING
+
+from pyspark.sql import types as T
 
 from ..plans.fsio import FsPath
 from .avro_ocf import read_ocf, write_ocf
@@ -92,6 +95,15 @@ _SPARK_TO_ICEBERG = {
     "double": "double", "float": "float", "boolean": "boolean",
     "binary": "binary", "date": "date", "timestamp": "timestamptz",
     "timestamp_ntz": "timestamp", "short": "int", "byte": "int",
+}
+# the inverse, for reads: int is Iceberg's narrowest integer, so short and
+# byte columns come back as int
+_ICEBERG_TO_SPARK = {
+    "string": T.StringType(), "long": T.LongType(), "int": T.IntegerType(),
+    "double": T.DoubleType(), "float": T.FloatType(),
+    "boolean": T.BooleanType(), "binary": T.BinaryType(),
+    "date": T.DateType(), "timestamptz": T.TimestampType(),
+    "timestamp": T.TimestampNTZType(),
 }
 
 
@@ -178,12 +190,14 @@ def _snapshot(md: dict, snapshot_id: int | None) -> dict:
                        f"(have {[s['snapshot-id'] for s in snaps]})")
 
 
-def data_files(spark, table_path, snapshot_id: int | None = None
-               ) -> list[dict]:
+def data_files(spark, table_path, snapshot_id: int | None = None,
+               md: dict | None = None) -> list[dict]:
     """Live data-file entries (dicts with file_path/record_count/...) of a
     snapshot: metadata json -> manifest list OCF -> manifest OCFs, DELETED
-    entries dropped."""
-    md = load_table_metadata(spark, table_path)
+    entries dropped. ``md`` is the table metadata when the caller already
+    loaded it."""
+    if md is None:
+        md = load_table_metadata(spark, table_path)
     snap = _snapshot(md, snapshot_id)
     mlist_path = FsPath(spark, snap["manifest-list"])
     _, _, manifest_files = read_ocf(mlist_path.read_bytes())
@@ -202,11 +216,36 @@ def read_iceberg(spark: "SparkSession", table_path,
                  snapshot_id: int | None = None) -> "DataFrame":
     """Snapshot-isolated read: exactly the snapshot's live files reach the
     parquet scan, so a concurrent append never bleeds rows into a running
-    job (the property lineage resume depends on)."""
-    files = data_files(spark, table_path, snapshot_id)
+    job (the property lineage resume depends on).
+
+    The scan takes the snapshot's schema from table metadata, so no
+    footer-inference job runs. Iceberg's narrowest integer is ``int``:
+    short and byte columns written by :func:`write_iceberg` come back as
+    int. A schema with no fields, or with a type outside
+    ``_ICEBERG_TO_SPARK`` (decimal, nested, ...), falls back to the
+    schema parquet infers from the files."""
+    md = load_table_metadata(spark, table_path)
+    files = data_files(spark, table_path, snapshot_id, md=md)
     if not files:
         raise IcebergError("snapshot has no data files")
-    return spark.read.parquet(*[f["file_path"] for f in files])
+    schema = _spark_schema(md, _snapshot(md, snapshot_id))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[f["file_path"] for f in files])
+
+
+def _spark_schema(md: dict, snap: dict) -> "T.StructType | None":
+    """The snapshot's Iceberg schema as a Spark schema (v1 ``schema`` or
+    the v2 ``schemas`` entry the snapshot names), None if unmappable."""
+    sid = snap.get("schema-id", md.get("current-schema-id"))
+    schema = next((s for s in md.get("schemas", [])
+                   if s.get("schema-id") == sid), md.get("schema"))
+    fields = (schema or {}).get("fields") or []
+    types = [_ICEBERG_TO_SPARK.get(f["type"]) if isinstance(f["type"], str)
+             else None for f in fields]
+    if not fields or any(t is None for t in types):
+        return None
+    return T.StructType([T.StructField(f["name"], t)
+                         for f, t in zip(fields, types)])
 
 
 def _iceberg_schema(df: "DataFrame") -> dict:

@@ -175,6 +175,17 @@ def _is_missing_runtime(e: Exception) -> bool:
                          msg) is not None)
 
 
+_ICEBERG_SOURCE = "org.apache.iceberg.spark.source.IcebergSource"
+
+
+def _iceberg_runtime_loadable(spark: SparkSession) -> bool:
+    """Whether the Iceberg runtime's data source class is on the driver
+    classpath: one lookup, no exception raised and converted when it is
+    not."""
+    return bool(spark._jvm.org.apache.spark.util.Utils.classIsLoadable(
+        _ICEBERG_SOURCE))
+
+
 def read_pages(spark: SparkSession, source: str,
                snapshot_id: int | None = None) -> DataFrame:
     """S11: the 10^12-row fact scan. Resolution order:
@@ -191,9 +202,10 @@ def read_pages(spark: SparkSession, source: str,
     DataFrame and every downstream operator is storage-agnostic.
     ``snapshot_id`` pins a historical snapshot (paths 1-2 only).
 
-    Fallback discipline: only the no-runtime-installed error
-    (DATA_SOURCE_NOT_FOUND) falls through. When a runtime IS present, its
-    real failures (missing snapshot, corrupt manifests) RAISE rather than
+    Fallback discipline: ``format("iceberg")`` is tried only when the
+    runtime's class is loadable, and then only the no-runtime-installed
+    error (DATA_SOURCE_NOT_FOUND) falls through. When a runtime IS
+    present, its real failures (missing snapshot, corrupt manifests) RAISE rather than
     silently degrading to a plain parquet read of something else — and a
     ``snapshot_id`` that cannot be honored is an error, never a silent
     full-table read."""
@@ -205,38 +217,41 @@ def read_pages(spark: SparkSession, source: str,
             reader = reader.option("snapshot-id", str(snapshot_id))
         return reader.load(source)
 
+    runtime = _iceberg_runtime_loadable(spark)
     if iceberg.is_iceberg_table(spark, source):
         # hadoop-layout table path: the runtime reader if installed
         # (manifest-level pruning), else the built-in metadata layer
+        if runtime:
+            try:
+                return _runtime_read()
+            except Exception as e:
+                if not _is_missing_runtime(e):
+                    raise
+        return iceberg.read_iceberg(spark, source, snapshot_id)
+    # not a metadata-layout path: a catalog table name (needs the runtime)
+    # or a plain parquet path
+    if runtime:
         try:
             return _runtime_read()
         except Exception as e:
             if not _is_missing_runtime(e):
-                raise
-        return iceberg.read_iceberg(spark, source, snapshot_id)
-    # not a metadata-layout path: a catalog table name (needs the runtime)
-    # or a plain parquet path
-    try:
-        return _runtime_read()
-    except Exception as e:
-        if not _is_missing_runtime(e):
-            # a runtime IS installed. If the source exists as a filesystem
-            # path it is plausibly plain parquet — fall through. A
-            # non-path source is a catalog table name: the runtime's
-            # failure (permissions, corrupt catalog, missing branch) is
-            # the real error and must surface, not be masked by a
-            # nonsensical parquet read of the table NAME. The probe
-            # itself may throw on a name Hadoop Path cannot parse
-            # ('cat:db.tbl') — that too means "not a path": surface the
-            # ORIGINAL runtime error, not the probe's.
-            from ..plans.fsio import FsPath
+                # a runtime IS installed. If the source exists as a filesystem
+                # path it is plausibly plain parquet — fall through. A
+                # non-path source is a catalog table name: the runtime's
+                # failure (permissions, corrupt catalog, missing branch) is
+                # the real error and must surface, not be masked by a
+                # nonsensical parquet read of the table NAME. The probe
+                # itself may throw on a name Hadoop Path cannot parse
+                # ('cat:db.tbl') — that too means "not a path": surface the
+                # ORIGINAL runtime error, not the probe's.
+                from ..plans.fsio import FsPath
 
-            try:
-                is_path = FsPath(spark, source).exists()
-            except Exception:
-                is_path = False
-            if not is_path:
-                raise
+                try:
+                    is_path = FsPath(spark, source).exists()
+                except Exception:
+                    is_path = False
+                if not is_path:
+                    raise
     if snapshot_id is not None:
         raise ValueError(
             f"snapshot_id={snapshot_id} given, but {source!r} is not an "

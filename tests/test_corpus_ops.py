@@ -296,3 +296,24 @@ class TestLineage:
         manifests = read_lineage(out)
         assert len(manifests) == 4
         assert all(m["committed"] for m in manifests)
+
+
+def test_minhash_null_signature_fails_by_name(spark, monkeypatch):
+    """A null signature list reaching the bucket walk raises a ValueError
+    naming the column instead of failing inside the reshape."""
+    from geocode_spark.operators import dedup
+
+    real = dedup.minhash_signatures
+
+    def one_null(df, *a, **kw):
+        sigs = real(df, *a, **kw)
+        return sigs.withColumn(
+            "signature",
+            F.when(F.col("doc_id") == 1, F.lit(None)).otherwise(
+                F.col("signature")))
+
+    monkeypatch.setattr(dedup, "minhash_signatures", one_null)
+    df = spark.createDataFrame([(i, f"text number {i % 2}") for i in range(4)],
+                               "doc_id long, text string")
+    with pytest.raises(Exception, match="null 'signature'"):
+        dedup.minhash_dedup_pairs(df).collect()

@@ -41,6 +41,32 @@ def test_stream_pipeline_available_now(spark, fixture_dir, tmp_path,
     assert result.filter(F.col("match_status") == 1).count() > 0
 
 
+def test_stream_pipeline_with_prepared_dims(spark, fixture_dir, tmp_path,
+                                            pages_stream):
+    """With the prepared CPO dimensions no batch needs the CPO: the stream
+    writes the same rows as the batch pipeline over the same pages."""
+    from geocode_spark.operators.forward_geocode import load_dims
+    from geocode_spark.operators.pipeline import geocode_documents
+    from geocode_spark.regions import load_prepared
+
+    dims = load_dims(spark, fixture_dir / "prepared")
+    llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+    out_dir = str(tmp_path / "out")
+    q = geocode_pages_stream(pages_stream, None, llsoa,
+                             checkpoint_dir=str(tmp_path / "ckpt"),
+                             output_dir=out_dir, dims=dims)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
+    got = spark.read.parquet(out_dir).drop("batch")
+    want = geocode_documents(
+        spark.read.parquet(str(fixture_dir / "pages.parquet")), None, llsoa,
+        dims=dims)
+    assert sorted(map(repr, got.select(*want.columns).collect())) == \
+        sorted(map(repr, want.collect()))
+
+
 def test_windowed_mention_counts(spark, pages_stream, tmp_path):
     agg = windowed_mention_counts(pages_stream, window="1 day")
     q = (agg.writeStream.outputMode("complete")
