@@ -108,13 +108,12 @@ def prepare_dims(cpo: DataFrame, max_len: int = 3
 
 # The prepared dimensions' fixed schemas: load_dims reads the files with
 # them, so no footer-inference job runs
-EXACT_DIM_SCHEMA = "__pc string, __lat1 double, __lon1 double"
-PREFIX_DIM_SCHEMA = ("__ow string, __iw string, __iwlen int, "
-                     "__lat2 double, __lon2 double")
+_EXACT_DIM_SCHEMA = "__pc string, __lat1 double, __lon1 double"
+_PREFIX_DIM_SCHEMA = ("__ow string, __iw string, __iwlen int, "
+                      "__lat2 double, __lon2 double")
 
 
-def save_dims(cpo: DataFrame, base_dir: str | Path,
-              max_len: int = 3) -> None:
+def save_dims(cpo: DataFrame, base_dir: str | Path) -> None:
     """One-time prep: write :func:`exact_dim` and :func:`prefix_dim` of the
     prepared CPO (:func:`prepare_cpo`) as single parquet files under
     ``<base_dir>/cpo/``, next to the prepared region sets, plus a
@@ -127,14 +126,12 @@ def save_dims(cpo: DataFrame, base_dir: str | Path,
     rows = {}
     for fname, dim, keys in (
             ("exact.parquet", exact_dim(cpo), ["__pc"]),
-            ("prefix.parquet", prefix_dim(cpo, max_len),
-             ["__ow", "__iw", "__iwlen"])):
+            ("prefix.parquet", prefix_dim(cpo), ["__ow", "__iw", "__iwlen"])):
         table = dim.toArrow().sort_by([(k, "ascending") for k in keys])
         pq.write_table(table, base / fname)
         rows[fname] = table.num_rows
     (base / "meta.json").write_text(json.dumps({
-        "name": "cpo", "max_len": max_len,
-        "exact_rows": rows["exact.parquet"],
+        "name": "cpo", "exact_rows": rows["exact.parquet"],
         "prefix_rows": rows["prefix.parquet"],
     }))
 
@@ -153,13 +150,13 @@ def load_dims(spark: SparkSession, base_dir: str | Path
             f"prepared CPO dimensions missing ({', '.join(missing)}); "
             "build them with the `setup` job (python -m geocode_spark.jobs "
             "setup --prepared <dir>)")
-    return (spark.read.schema(EXACT_DIM_SCHEMA).parquet(str(paths[0])),
-            spark.read.schema(PREFIX_DIM_SCHEMA).parquet(str(paths[1])))
+    return (spark.read.schema(_EXACT_DIM_SCHEMA).parquet(str(paths[0])),
+            spark.read.schema(_PREFIX_DIM_SCHEMA).parquet(str(paths[1])))
 
 
 def forward_geocode(
     postcodes: DataFrame,
-    cpo: DataFrame,
+    cpo: DataFrame | None,
     postcode_col: str = "postcode",
     dedup_keys: bool = False,
     dims: tuple[DataFrame, DataFrame] | None = None,
