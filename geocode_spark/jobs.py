@@ -11,10 +11,13 @@ columns, writes CSV or parquet):
 
 All jobs run unchanged on a multi-executor cluster: the only driver-side
 work is broadcast construction. Reference tables are prepared once and
-loaded at run time: region sets under ``--prepared/<name>`` and the CPO
-forward-geocode dimensions under ``--prepared/cpo`` (both written by the
-``setup`` job; ``prepare_regions`` adds a region set), so no runtime job
-aggregates the CPO or runs the BNG conversion over it.
+loaded at run time: region sets under ``--prepared/<name>``
+(``prepare_regions`` builds one) and the CPO forward-geocode dimensions
+under ``--prepared/cpo`` (``prepare_cpo`` builds them from
+``--fixtures/cpo_raw.parquet``; ``setup`` rebuilds the synthetic fixtures
+and all of these), so no runtime job aggregates the CPO or runs the BNG
+conversion over it. A job refuses CPO dimensions that were built from a
+different ``cpo_raw.parquet`` than its ``--fixtures`` holds.
 """
 
 from __future__ import annotations
@@ -28,6 +31,10 @@ import pyspark.sql.functions as F
 
 def _read_csv(spark, path, schema_hint=None):
     return spark.read.csv(path, header=True, inferSchema=True)
+
+
+def _cpo_raw(args):
+    return f"{args.fixtures}/cpo_raw.parquet"
 
 
 def _write(df, path):
@@ -74,7 +81,7 @@ def postcodes2latlon(spark, args):
     from .operators.forward_geocode import forward_geocode, load_dims
 
     df = _read_csv(spark, args.infile)
-    dims = load_dims(spark, args.prepared)
+    dims = load_dims(spark, args.prepared, _cpo_raw(args))
     _write(forward_geocode(df, None, dedup_keys=True, dims=dims),
            args.outfile)
 
@@ -98,10 +105,11 @@ def geocode_pages(spark, args):
     committed buckets; output is overwrite-idempotent.
 
     Every reference table is loaded, not built: the LLSOA and GSP region
-    sets and the CPO exact/prefix dimensions (``load_dims``) come from
-    ``--prepared``, so each bucket's plan is pages scan -> extract -> two
-    broadcast joins -> one Arrow reverse-geocode pass -> write, with no
-    BNG UDF, aggregation or shuffle."""
+    sets and the CPO exact/prefix dimensions (``load_dims``, checked
+    against ``--fixtures/cpo_raw.parquet``) come from ``--prepared``, so
+    each bucket's plan is pages scan -> extract -> two broadcast joins ->
+    one Arrow reverse-geocode pass -> write, with no BNG UDF, aggregation
+    or shuffle."""
     from .operators.forward_geocode import load_dims
     from .operators.pipeline import geocode_documents
     from .plans.lineage import run_with_lineage
@@ -142,13 +150,12 @@ def geocode_pages(spark, args):
         snapshot, pin = (user_sid if user_sid is not None
                          else "snapshot-0"), None
     pages = read_pages(spark, args.infile, snapshot_id=pin)
-    dims = load_dims(spark, args.prepared)
+    dims = load_dims(spark, args.prepared, _cpo_raw(args))
     llsoa = load_prepared("llsoa", args.prepared)
     gsp = load_prepared("gsp", args.prepared)
     results = run_with_lineage(
         pages, args.outfile, key_col="url",
-        transform=lambda df: geocode_documents(df, None, llsoa, gsp,
-                                               dims=dims),
+        transform=lambda df: geocode_documents(df, dims, llsoa, gsp),
         n_buckets=args.buckets, snapshot_id=snapshot,
         operator_version="1")
     done = sum(1 for r in results if not r.skipped)
@@ -185,22 +192,31 @@ def prepare_regions_job(spark, args):
           f"({prep.cover.interior.mean():.0%} interior)")
 
 
+def prepare_cpo_job(spark, args):
+    """One-time prep: --fixtures/cpo_raw.parquet -> the CPO exact and
+    prefix dimensions under --prepared/cpo, with the raw CPO's sha256 in
+    meta.json. The runtime jobs then just load + broadcast them; rerun
+    this whenever cpo_raw.parquet changes."""
+    from .operators.forward_geocode import save_dims
+
+    save_dims(spark, _cpo_raw(args), args.prepared)
+    print(f"prepared cpo: {_cpo_raw(args)} -> {args.prepared}/cpo")
+
+
 def setup_job(spark, args):
     """CLI lifecycle parity with the reference's ``--setup <entities>``
     (geocode.py:521-557 / force_setup geocode.py:380-392): (re)build the
     synthetic fixture tables + every prepared region artifact under
     --fixtures, then the CPO forward-geocode dimensions under
-    --prepared/cpo (built from the fresh cpo_raw.parquet; this step needs
-    the session, which build_all does not). With real data,
-    prepare_regions is the per-dataset equivalent; this is the one-shot
-    everything path."""
-    from .operators.forward_geocode import prepare_cpo, save_dims
+    --prepared/cpo from the fresh cpo_raw.parquet (this step needs the
+    session, which build_all does not). It overwrites --fixtures, so with
+    real data run prepare_regions and prepare_cpo instead; this is the
+    one-shot synthetic path."""
+    from .operators.forward_geocode import save_dims
     from .sources.fixtures import build_all, checksum
 
     build_all(args.fixtures, prepared_dir=args.prepared)
-    save_dims(prepare_cpo(
-        spark.read.parquet(f"{args.fixtures}/cpo_raw.parquet")),
-        args.prepared)
+    save_dims(spark, _cpo_raw(args), args.prepared)
     print(f"setup: fixtures -> {args.fixtures}, prepared -> {args.prepared} "
           f"(sha256 {checksum(args.fixtures)[:16]}...)")
 
@@ -272,14 +288,15 @@ JOBS = {
     "bng2latlon": bng2latlon,
     "geocode_pages": geocode_pages,
     "prepare_regions": prepare_regions_job,
+    "prepare_cpo": prepare_cpo_job,
     "setup": setup_job,
     "clear-cache": clear_cache_job,
     "debug": debug_job,
     "rasterize": rasterize_job,
 }
 
-# lifecycle jobs take no input/output files
-_NO_IO_JOBS = {"setup", "clear-cache", "debug"}
+# lifecycle jobs and prepare_cpo take no input/output files
+_NO_IO_JOBS = {"setup", "prepare_cpo", "clear-cache", "debug"}
 
 # --snapshot defaults to None ("flag not given") so an explicitly typed
 # value — any value, including the literal "snapshot-0" that geocode_pages

@@ -19,9 +19,10 @@ ops — no per-row Python anywhere:
 Physical plan at any scale: scan -> codegen'd normalize -> two
 BroadcastHashJoins -> project. The fact side never shuffles. The dimensions
 are static per CPO vintage, so :func:`save_dims` writes them once (the
-``setup`` job does, under ``<prepared>/cpo/``) and runtime jobs pass
-:func:`load_dims` as ``dims=``: two fixed-schema parquet scans on the
-broadcast side, with no BNG UDF pass, aggregation or shuffle per job.
+``prepare_cpo`` and ``setup`` jobs do, under ``<prepared>/cpo/``) and
+runtime jobs pass :func:`load_dims` as ``dims=``: two fixed-schema parquet
+scans on the broadcast side, with no BNG UDF pass, aggregation or shuffle
+per job.
 """
 
 from __future__ import annotations
@@ -111,47 +112,78 @@ def prepare_dims(cpo: DataFrame, max_len: int = 3
 _EXACT_DIM_SCHEMA = "__pc string, __lat1 double, __lon1 double"
 _PREFIX_DIM_SCHEMA = ("__ow string, __iw string, __iwlen int, "
                       "__lat2 double, __lon2 double")
+_DIM_FILES = ("exact.parquet", "prefix.parquet", "meta.json")
 
 
-def save_dims(cpo: DataFrame, base_dir: str | Path) -> None:
-    """One-time prep: write :func:`exact_dim` and :func:`prefix_dim` of the
-    prepared CPO (:func:`prepare_cpo`) as single parquet files under
-    ``<base_dir>/cpo/``, next to the prepared region sets, plus a
-    ``meta.json``. Rows are sorted by key so a rebuild writes the same
-    rows in the same order; doubles round-trip through parquet exactly."""
+def _cpo_digest(spark: SparkSession, cpo_raw: str | Path) -> str:
+    """sha256 of the raw CPO's bytes: the file itself, or a directory's
+    data files in name order (``_``/``.`` metadata files skipped). Read
+    through the Hadoop filesystem, so any path Spark reads works."""
+    import hashlib
+
+    from ..plans.fsio import FsPath
+
+    root = FsPath(spark, str(cpo_raw))
+    if not root.exists():
+        raise FileNotFoundError(f"raw CPO {cpo_raw} does not exist")
+    names = [n for n in root.list_names() if not n.startswith(("_", "."))]
+    h = hashlib.sha256()
+    for f in [root.child(n) for n in names] or [root]:
+        h.update(f.read_bytes())
+    return h.hexdigest()
+
+
+def save_dims(spark: SparkSession, cpo_raw: str | Path,
+              base_dir: str | Path) -> None:
+    """One-time prep: read the raw CPO parquet at ``cpo_raw``, prepare it
+    (:func:`prepare_cpo`) and write its :func:`exact_dim` and
+    :func:`prefix_dim` as single parquet files under ``<base_dir>/cpo/``,
+    next to the prepared region sets. ``meta.json`` records the sha256 of
+    the raw CPO, which :func:`load_dims` checks. Rows are sorted by key so
+    a rebuild writes the same rows in the same order; doubles round-trip
+    through parquet exactly."""
     import pyarrow.parquet as pq
 
+    digest = _cpo_digest(spark, cpo_raw)
+    cpo = prepare_cpo(spark.read.parquet(str(cpo_raw)))
     base = Path(base_dir) / "cpo"
     base.mkdir(parents=True, exist_ok=True)
-    rows = {}
     for fname, dim, keys in (
             ("exact.parquet", exact_dim(cpo), ["__pc"]),
             ("prefix.parquet", prefix_dim(cpo), ["__ow", "__iw", "__iwlen"])):
         table = dim.toArrow().sort_by([(k, "ascending") for k in keys])
         pq.write_table(table, base / fname)
-        rows[fname] = table.num_rows
-    (base / "meta.json").write_text(json.dumps({
-        "name": "cpo", "exact_rows": rows["exact.parquet"],
-        "prefix_rows": rows["prefix.parquet"],
-    }))
+    (base / "meta.json").write_text(json.dumps({"cpo_sha256": digest}))
 
 
-def load_dims(spark: SparkSession, base_dir: str | Path
-              ) -> tuple[DataFrame, DataFrame]:
+def load_dims(spark: SparkSession, base_dir: str | Path,
+              cpo_raw: str | Path) -> tuple[DataFrame, DataFrame]:
     """(exact_dim, prefix_dim) as written by :func:`save_dims`, read with
     their fixed schemas: a lazy scan each, no Spark job until the query
     that broadcasts them runs. Pass the pair as ``dims=`` to
-    :func:`forward_geocode`."""
+    :func:`forward_geocode`.
+
+    ``cpo_raw`` is the raw CPO the caller geocodes against. It must be
+    the one the files were built from (same sha256), so dimensions of a
+    stale or different CPO raise ValueError instead of geocoding
+    silently."""
     base = Path(base_dir) / "cpo"
-    paths = [base / "exact.parquet", base / "prefix.parquet"]
-    missing = [str(p) for p in paths if not p.exists()]
+    missing = [str(base / f) for f in _DIM_FILES if not (base / f).exists()]
     if missing:
         raise FileNotFoundError(
             f"prepared CPO dimensions missing ({', '.join(missing)}); "
-            "build them with the `setup` job (python -m geocode_spark.jobs "
-            "setup --prepared <dir>)")
-    return (spark.read.schema(_EXACT_DIM_SCHEMA).parquet(str(paths[0])),
-            spark.read.schema(_PREFIX_DIM_SCHEMA).parquet(str(paths[1])))
+            "build them with the `prepare_cpo` job (python -m "
+            "geocode_spark.jobs prepare_cpo --fixtures <dir with "
+            "cpo_raw.parquet> --prepared <dir>) or the `setup` job, which "
+            "also rebuilds the synthetic fixtures")
+    built = json.loads((base / "meta.json").read_text()).get("cpo_sha256")
+    if built != _cpo_digest(spark, cpo_raw):
+        raise ValueError(
+            f"prepared CPO dimensions under {base} were not built from "
+            f"{cpo_raw}; rebuild them with the `prepare_cpo` job")
+    exact, prefix = (str(base / f) for f in _DIM_FILES[:2])
+    return (spark.read.schema(_EXACT_DIM_SCHEMA).parquet(exact),
+            spark.read.schema(_PREFIX_DIM_SCHEMA).parquet(prefix))
 
 
 def forward_geocode(

@@ -10,11 +10,10 @@ byte-identical per url (invariant).
 
 Plan shape: scan -> codegen'd extract+explode -> two BroadcastHashJoins
 (exact and prefix CPO dimensions) -> one MapInArrow (cell+PIP) -> codegen'd
-tile_id -> sink. The fact side never shuffles. With prepared dimensions
-(``dims=``, from ``forward_geocode.load_dims``) the broadcast side is two
-parquet scans; without them the small CPO dimension aggregations run on
-the broadcast side — either way, at 10^12 docs the job is embarrassingly
-parallel and skew-free.
+tile_id -> sink. The fact side never shuffles. The CPO dimensions come
+in prepared (``forward_geocode.load_dims`` files, or ``prepare_dims`` of a
+CPO frame), so the broadcast side is two small scans; at 10^12 docs the
+job is embarrassingly parallel and skew-free.
 """
 
 from __future__ import annotations
@@ -38,20 +37,18 @@ def extract_postcode_mentions(pages: DataFrame, text_col: str = "text") -> DataF
 
 def geocode_documents(
     pages: DataFrame,
-    cpo: DataFrame | None,
+    dims: tuple[DataFrame, DataFrame],
     llsoa_prep: PreparedRegions | None = None,
     gsp_prep: PreparedRegions | None = None,
-    dims: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Full pipeline. Returns one row per (url, extracted postcode) with
     latitude/longitude/match_status, plus llsoa/cell_id/tile_id when
     ``llsoa_prep`` is given and gsp/gsp_group when ``gsp_prep`` is.
     Mentions are forward-geocoded directly through the broadcast CPO
-    dimensions (one pass over the pages, no distinct-key pre-pass): the
-    prepared ``dims`` when given (``cpo`` may then be None), otherwise
-    aggregated from ``cpo``. Every given region set is assigned in one
-    reverse_geocode_multi pass, so the points cross the JVM/Python
-    boundary once. ``tile_id`` is the resolution-8 ancestor of
+    dimensions ``dims`` (``forward_geocode.load_dims`` or
+    ``prepare_dims``; one pass over the pages, no distinct-key pre-pass).
+    Every given region set is assigned in one reverse_geocode_multi pass,
+    so the points cross the JVM/Python boundary once. ``tile_id`` is the resolution-8 ancestor of
     ``cell_id``, derived in Catalyst (NULL where ``cell_id`` is), so
     ``llsoa_prep`` must have resolution >= 8 (ValueError otherwise).
     """
@@ -59,7 +56,7 @@ def geocode_documents(
     # test_geocode_documents_schema_unchanged pins
     mentions = extract_postcode_mentions(pages).select(
         "postcode", "url", "warc_ts", "lang")
-    geo = forward_geocode(mentions, cpo, dims=dims)
+    geo = forward_geocode(mentions, None, dims=dims)
 
     assignments = [(p, c) for p, c in ((llsoa_prep, "llsoa"),
                                        (gsp_prep, "gsp")) if p is not None]

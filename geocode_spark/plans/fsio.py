@@ -92,12 +92,17 @@ class FsPath:
     shared by children."""
 
     def __init__(self, spark: "SparkSession", path: str):
-        self._jvm = spark._jvm
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
-        jpath = self._Path(str(path))
-        self._fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        jvm = spark._jvm
+        Path = jvm.org.apache.hadoop.fs.Path
+        jpath = Path(str(path))
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
         # fully qualified (scheme + authority resolved) — what Spark sees
-        self._jpath = self._fs.makeQualified(jpath)
+        self._set(jvm, Path, fs, fs.makeQualified(jpath))
+
+    def _set(self, jvm, Path, fs, jpath) -> None:
+        """The one place an FsPath's state is assigned, for ``__init__``
+        and ``child`` alike."""
+        self._jvm, self._Path, self._fs, self._jpath = jvm, Path, fs, jpath
         self._str = None
 
     def __str__(self) -> str:
@@ -113,9 +118,7 @@ class FsPath:
         """``<self>/<name>`` in one py4j call: the parent is qualified, so
         the child parsed from its string is too."""
         c = object.__new__(FsPath)
-        c._jvm, c._Path, c._fs = self._jvm, self._Path, self._fs
-        c._jpath = self._Path(f"{self}/{name}")
-        c._str = None
+        c._set(self._jvm, self._Path, self._fs, self._Path(f"{self}/{name}"))
         return c
 
     def exists(self) -> bool:

@@ -7,10 +7,10 @@ Structured Streaming:
 * ``geocode_pages_stream`` — a streaming pages source (files/Kafka/Iceberg
   CDC) through the full document pipeline via ``foreachBatch``. Reused
   across micro-batches: the prepared region sets (their broadcast
-  variables and each worker's cell index are cached) and, when given,
-  the prepared CPO dimension files (``dims=``). Each batch plans and
-  broadcasts afresh; without ``dims`` it also re-aggregates the CPO. Each
-  batch is the same fact-side shuffle-free plan as batch mode.
+  variables and each worker's cell index are cached) and the prepared CPO
+  dimensions ``dims``, so no batch aggregates the CPO. Each batch plans
+  and broadcasts afresh, and is the same fact-side shuffle-free plan as
+  batch mode.
 * ``windowed_mention_counts`` — a native streaming windowed aggregation
   (watermark + tumbling window) over extracted postcode mentions: the
   'streaming analytics' surface (late data handled by the watermark).
@@ -24,22 +24,20 @@ from pyspark.sql import DataFrame
 from ..operators.pipeline import extract_postcode_mentions, geocode_documents
 
 
-def geocode_pages_stream(pages_stream: DataFrame, cpo: DataFrame,
+def geocode_pages_stream(pages_stream: DataFrame,
+                         dims: tuple[DataFrame, DataFrame],
                          llsoa_prep=None, gsp_prep=None,
                          checkpoint_dir: str = None, output_dir: str = None,
-                         trigger_available_now: bool = True,
-                         dims=None):
+                         trigger_available_now: bool = True):
     """Run the document pipeline over a streaming pages DataFrame.
 
     Returns the started StreamingQuery. Output is parquet (append) —
     idempotent per micro-batch via the checkpoint. ``dims`` (from
-    ``forward_geocode.load_dims``) goes to every batch's
-    ``geocode_documents``, so no batch aggregates the CPO; ``cpo`` may
-    then be None.
+    ``forward_geocode.load_dims`` or ``prepare_dims``) goes to every
+    batch's ``geocode_documents``.
     """
     def process(batch_df: DataFrame, batch_id: int):
-        out = geocode_documents(batch_df, cpo, llsoa_prep, gsp_prep,
-                                dims=dims)
+        out = geocode_documents(batch_df, dims, llsoa_prep, gsp_prep)
         # batch_id-keyed overwrite: a micro-batch replayed after a crash
         # rewrites its own directory instead of appending duplicates —
         # this, not the checkpoint alone, is what makes the sink idempotent

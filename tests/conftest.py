@@ -26,13 +26,10 @@ def spark():
 def fixture_dir(spark):
     base = fixtures.FIXTURE_DIR
     if not (base / "pages.parquet").exists():
-        from geocode_spark.operators.forward_geocode import (prepare_cpo,
-                                                             save_dims)
+        from geocode_spark.operators.forward_geocode import save_dims
 
         fixtures.build_all(base)
         # the prepared CPO dimensions are a Spark aggregation, so they
         # are built here (as the setup job does), not in build_all
-        save_dims(prepare_cpo(
-            spark.read.parquet(str(base / "cpo_raw.parquet"))),
-            base / "prepared")
+        save_dims(spark, base / "cpo_raw.parquet", base / "prepared")
     return base

@@ -17,7 +17,7 @@ import pytest
 
 from geocode_spark.cells import cell_of
 from geocode_spark.functions.udfs import cell_parent
-from geocode_spark.operators.forward_geocode import prepare_cpo
+from geocode_spark.operators.forward_geocode import prepare_cpo, prepare_dims
 from geocode_spark.operators.multimodal import (extract_features,
                                                 frame_sample, resize_media,
                                                 with_media_meta)
@@ -100,7 +100,8 @@ def docs(spark, fixture_dir, preps):
     miss = spark.createDataFrame(
         [("https://example.org/nowhere", dt.datetime(2024, 1, 1), b"",
           "write to ZZ9 9ZZ for nothing", "en")], pages.schema)
-    return geocode_documents(pages.unionByName(miss), cpo, *preps)
+    return geocode_documents(pages.unionByName(miss), prepare_dims(cpo),
+                             *preps)
 
 
 def test_tile_id_is_res8_cell(docs):
@@ -146,4 +147,5 @@ def test_llsoa_res_below_8_raises(spark, fixture_dir, preps):
         spark.read.parquet(str(fixture_dir / "cpo_raw.parquet")))
     pages = spark.read.parquet(str(fixture_dir / "pages.parquet"))
     with pytest.raises(ValueError, match="resolution"):
-        geocode_documents(pages, cpo, dataclasses.replace(llsoa, res=7), gsp)
+        geocode_documents(pages, prepare_dims(cpo),
+                          dataclasses.replace(llsoa, res=7), gsp)

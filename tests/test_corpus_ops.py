@@ -255,14 +255,16 @@ class TestPipeline:
         assert all(" " not in r.postcode for r in rows)
 
     def test_end_to_end_docs(self, spark, pages, fixture_dir):
-        from geocode_spark.operators.forward_geocode import prepare_cpo
+        from geocode_spark.operators.forward_geocode import (prepare_cpo,
+                                                             prepare_dims)
         from geocode_spark.regions import load_prepared
 
         cpo = prepare_cpo(
             spark.read.parquet(str(fixture_dir / "cpo_raw.parquet")))
         llsoa = load_prepared("llsoa", fixture_dir / "prepared")
         gsp = load_prepared("gsp", fixture_dir / "prepared")
-        out = geocode_documents(pages.limit(200), cpo, llsoa, gsp)
+        out = geocode_documents(pages.limit(200), prepare_dims(cpo), llsoa,
+                                gsp)
         rows = out.collect()
         assert len(rows) > 0
         # every geocoded row has a cell assignment; statuses are valid

@@ -1,7 +1,8 @@
 """Prepared CPO dimensions: ``save_dims``/``load_dims`` give the same rows,
 bit for bit, as aggregating the CPO in the session, the committed
-``fixtures/prepared/cpo/`` matches a fresh build, and the jobs that load
-them plan no Python UDF over the CPO."""
+``fixtures/prepared/cpo/`` matches a fresh build, the jobs that load them
+plan no Python UDF over the CPO, and dimensions built from one raw CPO are
+refused for another."""
 
 from types import SimpleNamespace
 
@@ -51,29 +52,37 @@ KEYS = (["__pc"], ["__ow", "__iw", "__iwlen"])
 
 
 @pytest.fixture(scope="module")
-def cpo(spark, fixture_dir):
-    return prepare_cpo(spark.read.parquet(str(fixture_dir / "cpo_raw.parquet")))
+def raw(fixture_dir):
+    return fixture_dir / "cpo_raw.parquet"
 
 
-def test_load_dims_equals_prepare_dims(spark, cpo, tmp_path):
-    save_dims(cpo, tmp_path)
-    for loaded, built, keys in zip(load_dims(spark, tmp_path),
+@pytest.fixture(scope="module")
+def cpo(spark, raw):
+    return prepare_cpo(spark.read.parquet(str(raw)))
+
+
+def test_load_dims_equals_prepare_dims(spark, raw, cpo, tmp_path):
+    save_dims(spark, raw, tmp_path)
+    for loaded, built, keys in zip(load_dims(spark, tmp_path, raw),
                                    prepare_dims(cpo), KEYS):
         assert loaded.schema.simpleString() == \
             built.schema.simpleString()
         _assert_same(_sorted(loaded, keys), _sorted(built, keys))
 
 
-def test_committed_dims_match_fresh_build(cpo, fixture_dir, tmp_path):
-    save_dims(cpo, tmp_path)
+def test_committed_dims_match_fresh_build(spark, raw, fixture_dir, tmp_path):
+    save_dims(spark, raw, tmp_path)
+    committed = fixture_dir / "prepared" / "cpo"
     for fname in ("exact.parquet", "prefix.parquet"):
-        _assert_same(pq.read_table(fixture_dir / "prepared" / "cpo" / fname),
+        _assert_same(pq.read_table(committed / fname),
                      pq.read_table(tmp_path / "cpo" / fname))
+    assert (committed / "meta.json").read_text() == \
+        (tmp_path / "cpo" / "meta.json").read_text()
 
 
-def test_load_dims_missing_names_setup(spark, tmp_path):
-    with pytest.raises(FileNotFoundError, match="setup"):
-        load_dims(spark, tmp_path)
+def test_load_dims_missing_names_jobs(spark, raw, tmp_path):
+    with pytest.raises(FileNotFoundError, match="prepare_cpo.*setup"):
+        load_dims(spark, tmp_path, raw)
 
 
 def _python_nodes(df):
@@ -81,40 +90,84 @@ def _python_nodes(df):
     return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
 
 
-def test_loaded_dims_geocode_like_built_dims(spark, cpo, fixture_dir):
-    """geocode_documents with the loaded dims and no CPO: same rows as
-    the CPO path, and no Python UDF evaluation in the plan."""
+def test_loaded_dims_geocode_like_built_dims(spark, raw, cpo, fixture_dir):
+    """geocode_documents with the loaded dims: same rows as with the dims
+    aggregated in the session, and no Python UDF evaluation in the plan
+    (aggregating the CPO inline plans one)."""
     prepared = fixture_dir / "prepared"
     llsoa, gsp = (load_prepared(n, prepared) for n in ("llsoa", "gsp"))
     pages = spark.read.parquet(str(fixture_dir / "pages.parquet"))
-    loaded = geocode_documents(pages, None, llsoa, gsp,
-                               dims=load_dims(spark, prepared))
+    loaded = geocode_documents(pages, load_dims(spark, prepared, raw),
+                               llsoa, gsp)
     assert _python_nodes(loaded) == []
-    built = geocode_documents(pages, cpo, llsoa, gsp)
-    assert _python_nodes(built) == ["ArrowEvalPython"]
+    inline = forward_geocode(
+        spark.createDataFrame([("RG1 3PE",)], "postcode string"), cpo)
+    assert _python_nodes(inline) == ["ArrowEvalPython"]
+    built = geocode_documents(pages, prepare_dims(cpo), llsoa, gsp)
     assert loaded.schema == built.schema
     assert sorted(map(repr, loaded.collect())) == \
         sorted(map(repr, built.collect()))
 
 
-def test_postcodes2latlon_loads_dims(spark, fixture_dir, tmp_path):
+def _postcodes2latlon(spark, tmp_path, fixtures, prepared):
     from geocode_spark.jobs import postcodes2latlon
 
     src = tmp_path / "pcs.csv"
     src.write_text("postcode\nRG1 3PE\nS10 2FR\nZZ9 9ZZ\n")
     out = tmp_path / "out.parquet"
     postcodes2latlon(spark, SimpleNamespace(
-        infile=str(src), outfile=str(out),
-        prepared=str(fixture_dir / "prepared"), fixtures=str(fixture_dir)))
-    got = {r.postcode: r for r in spark.read.parquet(str(out)).collect()}
+        infile=str(src), outfile=str(out), prepared=str(prepared),
+        fixtures=str(fixtures)))
+    return src, {r.postcode: r
+                 for r in spark.read.parquet(str(out)).collect()}
+
+
+def _want(spark, src, raw):
+    want = forward_geocode(spark.read.csv(str(src), header=True), cpo=None,
+                           dims=prepare_dims(prepare_cpo(
+                               spark.read.parquet(str(raw)))))
+    return {r.postcode: (r.latitude, r.longitude, r.match_status)
+            for r in want.collect()}
+
+
+def test_postcodes2latlon_loads_dims(spark, raw, fixture_dir, tmp_path):
+    src, got = _postcodes2latlon(spark, tmp_path, fixture_dir,
+                                 fixture_dir / "prepared")
     # golden: RG1 3PE -> (51.4551, -0.9407, status 1)
     assert got["RG1 3PE"].match_status == 1
     assert round(got["RG1 3PE"].latitude, 4) == 51.4551
     assert round(got["RG1 3PE"].longitude, 4) == -0.9407
     assert got["ZZ9 9ZZ"].match_status == 0
-    want = forward_geocode(spark.read.csv(str(src), header=True), cpo=None,
-                           dims=prepare_dims(prepare_cpo(spark.read.parquet(
-                               str(fixture_dir / "cpo_raw.parquet")))))
-    assert {r.postcode: (r.latitude, r.longitude, r.match_status)
-            for r in want.collect()} == \
+    assert _want(spark, src, raw) == \
+        {k: (r.latitude, r.longitude, r.match_status) for k, r in got.items()}
+
+
+def test_other_cpo_needs_its_own_dims(spark, raw, fixture_dir, tmp_path):
+    """A --fixtures whose cpo_raw differs from the one the dimensions were
+    built from is refused (both ways round); the prepare_cpo job builds
+    dimensions for it without touching any other fixture, and
+    postcodes2latlon then geocodes against that CPO."""
+    from geocode_spark.jobs import prepare_cpo_job
+
+    # another CPO vintage: the fixture CPO without RG1 3PE, written by
+    # Spark as a directory of part files
+    other = tmp_path / "other_fixtures"
+    (spark.read.parquet(str(raw))
+     .where("upper(replace(Postcode, ' ', '')) != 'RG13PE'")
+     .coalesce(2).write.parquet(str(other / "cpo_raw.parquet")))
+    committed = fixture_dir / "prepared"
+    with pytest.raises(ValueError, match="prepare_cpo"):
+        _postcodes2latlon(spark, tmp_path, other, committed)
+
+    prepared = tmp_path / "prepared"
+    prepare_cpo_job(spark, SimpleNamespace(fixtures=str(other),
+                                           prepared=str(prepared)))
+    assert sorted(p.name for p in other.iterdir()) == ["cpo_raw.parquet"]
+    with pytest.raises(ValueError, match="not built from"):
+        load_dims(spark, prepared, raw)
+
+    src, got = _postcodes2latlon(spark, tmp_path, other, prepared)
+    assert got["RG1 3PE"].match_status != 1
+    assert got["S10 2FR"].match_status == 1
+    assert _want(spark, src, other / "cpo_raw.parquet") == \
         {k: (r.latitude, r.longitude, r.match_status) for k, r in got.items()}

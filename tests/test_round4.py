@@ -266,7 +266,8 @@ class TestPipelineFixedCostCuts:
         assert a[2] is None  # far point stays unassigned
 
     def test_geocode_documents_schema_unchanged(self, spark, fixture_dir):
-        from geocode_spark.operators.forward_geocode import prepare_cpo
+        from geocode_spark.operators.forward_geocode import (prepare_cpo,
+                                                             prepare_dims)
         from geocode_spark.operators.pipeline import geocode_documents
         from geocode_spark.regions import load_prepared
 
@@ -276,7 +277,7 @@ class TestPipelineFixedCostCuts:
         gsp = load_prepared("gsp", fixture_dir / "prepared")
         pages = spark.read.parquet(str(fixture_dir / "pages.parquet")) \
             .limit(100)
-        out = geocode_documents(pages, cpo, llsoa, gsp)
+        out = geocode_documents(pages, prepare_dims(cpo), llsoa, gsp)
         # the chained-call column order is the public schema; the fused
         # multi path must not reorder it
         # (postcode leads after gsp: geocode_documents selects it first)
@@ -293,7 +294,8 @@ class TestPipelineFixedCostCuts:
         from collections import Counter
 
         from geocode_spark.operators.forward_geocode import (forward_geocode,
-                                                             prepare_cpo)
+                                                             prepare_cpo,
+                                                             prepare_dims)
         from geocode_spark.operators.pipeline import (
             extract_postcode_mentions, geocode_documents)
         from geocode_spark.operators.reverse_geocode import reverse_geocode
@@ -316,7 +318,8 @@ class TestPipelineFixedCostCuts:
         }
         outs = {}
         for (use_llsoa, use_gsp), cols in want.items():
-            out = geocode_documents(pages, cpo, llsoa if use_llsoa else None,
+            out = geocode_documents(pages, prepare_dims(cpo),
+                                    llsoa if use_llsoa else None,
                                     gsp if use_gsp else None)
             assert out.columns == cols, (use_llsoa, use_gsp)
             outs[use_llsoa, use_gsp] = out

@@ -22,13 +22,14 @@ def pages_stream(spark, fixture_dir, tmp_path):
 
 def test_stream_pipeline_available_now(spark, fixture_dir, tmp_path,
                                        pages_stream):
-    from geocode_spark.operators.forward_geocode import prepare_cpo
+    from geocode_spark.operators.forward_geocode import (prepare_cpo,
+                                                         prepare_dims)
     from geocode_spark.regions import load_prepared
 
     cpo = prepare_cpo(spark.read.parquet(str(fixture_dir / "cpo_raw.parquet")))
     llsoa = load_prepared("llsoa", fixture_dir / "prepared")
     out_dir = str(tmp_path / "out")
-    q = geocode_pages_stream(pages_stream, cpo, llsoa,
+    q = geocode_pages_stream(pages_stream, prepare_dims(cpo), llsoa,
                              checkpoint_dir=str(tmp_path / "ckpt"),
                              output_dir=out_dir)
     try:
@@ -49,20 +50,20 @@ def test_stream_pipeline_with_prepared_dims(spark, fixture_dir, tmp_path,
     from geocode_spark.operators.pipeline import geocode_documents
     from geocode_spark.regions import load_prepared
 
-    dims = load_dims(spark, fixture_dir / "prepared")
+    dims = load_dims(spark, fixture_dir / "prepared",
+                     fixture_dir / "cpo_raw.parquet")
     llsoa = load_prepared("llsoa", fixture_dir / "prepared")
     out_dir = str(tmp_path / "out")
-    q = geocode_pages_stream(pages_stream, None, llsoa,
+    q = geocode_pages_stream(pages_stream, dims, llsoa,
                              checkpoint_dir=str(tmp_path / "ckpt"),
-                             output_dir=out_dir, dims=dims)
+                             output_dir=out_dir)
     try:
         q.awaitTermination(300)
     finally:
         q.stop()
     got = spark.read.parquet(out_dir).drop("batch")
     want = geocode_documents(
-        spark.read.parquet(str(fixture_dir / "pages.parquet")), None, llsoa,
-        dims=dims)
+        spark.read.parquet(str(fixture_dir / "pages.parquet")), dims, llsoa)
     assert sorted(map(repr, got.select(*want.columns).collect())) == \
         sorted(map(repr, want.collect()))
 
