@@ -42,14 +42,10 @@ Headline workload (mirrors the north-star pipeline at bench scale):
                          as a LATENCY metric so it can't masquerade as
                          throughput in either direction
 
-Set SPARK_STREAM_SRC to a pre-built corpus directory (scripts/scaling.py
-does this once per run) so both parallelism levels of a scaling pair read
-byte-identical input files.
-
 Derived metrics reported: points/sec for the reverse geocode, docs/sec for
 the pipeline, plus hw_miters_per_s — a ~2 s raw-CPU burn at 1 and $CPUS
-processes (the scripts/scaling.py probe kernel) embedded in the JSON so
-every recorded bench carries the hardware state it ran under. This host
+processes embedded in the JSON so every recorded bench carries the
+hardware state it ran under. This host
 is multi-tenant and its per-core speed moves ±30-50% between rounds
 (e.g. 2026-08-17: 8.45→6.06 Miters/s single-core, 157→72 at 32 procs
 after a host restart); cross-round query-time comparisons are only
@@ -73,9 +69,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-# Raw-CPU probe kernel + iteration count, shared with scripts/scaling.py
-# (which imports BOTH from here) so the bench-embedded probe and the
-# scaling gate always measure the identical kernel.
+# Raw-CPU probe kernel + iteration count (perfbench/run.py runs the same
+# kernel through _hw_probe).
 BURN_N = 3_000_000
 
 
@@ -89,10 +84,10 @@ def _burn(n: int) -> float:
 
 def _hw_probe(levels: tuple = (1,), n: int = BURN_N) -> dict:
     """Raw-CPU throughput (total million-iterations/s) of this host at each
-    process count — the same burn kernel scripts/scaling.py gates on. Runs
-    once per bench (~2 s) and is embedded in the output JSON so recorded
-    benches disclose the hardware state they ran under (this host is
-    multi-tenant; per-core speed varies ±30-50% across rounds)."""
+    process count. Runs once per bench (~2 s) and is embedded in the
+    output JSON so recorded benches disclose the hardware state they ran
+    under (this host is multi-tenant; per-core speed varies ±30-50% across
+    rounds)."""
     import multiprocessing as mp
     out = {}
     for procs in levels:
@@ -117,7 +112,6 @@ N_STREAM = int(os.environ.get("BENCH_STREAM_DOCS", str(16 * N_DOCS)))
 # splits, so the drain's map side parallelizes at any core count <= 16
 STREAM_FILES = int(os.environ.get("BENCH_STREAM_FILES", "64"))
 STREAM_BATCHES = int(os.environ.get("BENCH_STREAM_BATCHES", "4"))
-STREAM_SRC = os.environ.get("SPARK_STREAM_SRC")
 WARMUP = os.environ.get("BENCH_WARMUP", "1") != "0"
 
 
@@ -333,26 +327,21 @@ def main():
         return len(res)
 
     # ---- streaming drain: steady-state micro-batch throughput ----------
-    # Corpus laid out as STREAM_FILES parquet files (pre-built via
-    # SPARK_STREAM_SRC for scaling runs so both levels read identical
-    # bytes); drained in STREAM_BATCHES batches via maxFilesPerTrigger.
+    # Corpus laid out as STREAM_FILES parquet files, drained in
+    # STREAM_BATCHES batches via maxFilesPerTrigger.
     # Metric = sum of triggerExecution for batches 1..K-1 read from the
     # query's progress telemetry — batch 0 (plan compile + state-store
     # init) and query start/stop are excluded by measurement and metered
     # separately as stream_startup.
     startup_src = tempfile.mkdtemp(prefix="bench_stream_tiny_")
     stream_cp = tempfile.mkdtemp(prefix="bench_stream_cp_")
-    if STREAM_SRC:
-        stream_src, stream_src_tmp = STREAM_SRC, False
-    else:
-        stream_src, stream_src_tmp = \
-            tempfile.mkdtemp(prefix="bench_stream_src_"), True
-        make_pages(spark, N_STREAM).repartition(STREAM_FILES) \
-            .write.mode("overwrite").parquet(stream_src)
+    stream_src = tempfile.mkdtemp(prefix="bench_stream_src_")
+    make_pages(spark, N_STREAM).repartition(STREAM_FILES) \
+        .write.mode("overwrite").parquet(stream_src)
     pipeline_corpus.limit(1).write.mode("overwrite").parquet(startup_src)
     n_stream_files = sum(1 for f in os.listdir(stream_src)
                          if f.endswith(".parquet"))
-    # parquet-footer count: cheap, and exact even for a pre-built corpus
+    # parquet-footer count: cheap and exact
     n_stream = spark.read.parquet(stream_src).count()
     stream_schema = spark.read.parquet(stream_src).schema
     stream_seq = iter(range(10**6))
@@ -442,8 +431,7 @@ def main():
     queries["stream_drain"], stream_rows_metered = best_drain
     queries["stream_startup"], _ = bench(run_stream_startup)
     shutil.rmtree(lineage_out, ignore_errors=True)
-    if stream_src_tmp:
-        shutil.rmtree(stream_src, ignore_errors=True)
+    shutil.rmtree(stream_src, ignore_errors=True)
     shutil.rmtree(startup_src, ignore_errors=True)
     shutil.rmtree(stream_cp, ignore_errors=True)
 

@@ -41,6 +41,7 @@ from .operators.centroid_lookup import centroid_lookup, datazone_relabel
 from .operators.forward_geocode import forward_geocode, prepare_cpo
 from .operators.reverse_geocode import reverse_geocode
 from .regions import load_prepared
+from .sources.fixtures import FIXTURE_DIR
 
 ENGINE_VERSION = "1"
 
@@ -63,7 +64,7 @@ def status_string(col):
 
 class GeocoderSpark:
     def __init__(self, spark: SparkSession,
-                 data_dir: str = "/root/repo/fixtures",
+                 data_dir: str | Path = FIXTURE_DIR,
                  prepared_dir: str | None = None):
         self.spark = spark
         self.data_dir = Path(data_dir)
@@ -74,8 +75,10 @@ class GeocoderSpark:
     # --- context manager parity (geocode.py:87-91): the reference's
     # __exit__ flushes the gmaps cache; gmaps here is the deliberate
     # no-API-key stub (gmaps.py:104-168 semantics, SURVEY §2.10) with no
-    # cache to flush, so exit only drops the broadcast-backed prepared
-    # handles. ``with GeocoderSpark(spark) as g:`` is drop-in.
+    # cache to flush, so exit drops the prepared handles, and with them
+    # their broadcasts: each prep holds its own, so once no plan uses it
+    # Spark's ContextCleaner frees it. ``with GeocoderSpark(spark) as g:``
+    # is drop-in.
 
     def __enter__(self) -> "GeocoderSpark":
         return self

@@ -295,8 +295,9 @@ JOBS = {
     "rasterize": rasterize_job,
 }
 
-# lifecycle jobs and prepare_cpo take no input/output files
-_NO_IO_JOBS = {"setup", "prepare_cpo", "clear-cache", "debug"}
+# the file flags each job reads (every other job: --infile and --outfile)
+_FILE_FLAGS = {"prepare_regions": ("infile",), "setup": (),
+               "prepare_cpo": (), "clear-cache": (), "debug": ()}
 
 # --snapshot defaults to None ("flag not given") so an explicitly typed
 # value — any value, including the literal "snapshot-0" that geocode_pages
@@ -306,14 +307,16 @@ _SNAPSHOT_DEFAULT = None
 
 
 def main(argv=None):
+    from .sources.fixtures import FIXTURE_DIR
+
     p = argparse.ArgumentParser(prog="geocode_spark.jobs")
     p.add_argument("job", choices=sorted(JOBS))
     p.add_argument("--infile")
     p.add_argument("--outfile")
     p.add_argument("--keep-version", dest="keep_version", default="")
     p.add_argument("--member", default="")
-    p.add_argument("--prepared", default="/root/repo/fixtures/prepared")
-    p.add_argument("--fixtures", default="/root/repo/fixtures")
+    p.add_argument("--prepared", default=str(FIXTURE_DIR / "prepared"))
+    p.add_argument("--fixtures", default=str(FIXTURE_DIR))
     p.add_argument("--datazones", action="store_true")
     p.add_argument("--buckets", type=int, default=8)
     p.add_argument("--snapshot", default=_SNAPSHOT_DEFAULT)
@@ -324,8 +327,10 @@ def main(argv=None):
     p.add_argument("--res", type=int, default=13)
     p.add_argument("--spans", action="store_true")
     args = p.parse_args(argv)
-    if args.job not in _NO_IO_JOBS and not (args.infile and args.outfile):
-        p.error(f"job {args.job!r} requires --infile and --outfile")
+    need = _FILE_FLAGS.get(args.job, ("infile", "outfile"))
+    if not all(getattr(args, f) for f in need):
+        p.error(f"job {args.job!r} requires "
+                + " and ".join(f"--{f}" for f in need))
 
     from .session import get_spark
 

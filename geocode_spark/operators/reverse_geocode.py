@@ -22,23 +22,28 @@ batch's own Arrow arrays, never through pandas) over one ray-cast helper,
 ``_ray_cast``:
 
 * ``fused`` (default): one ``mapInArrow`` pass per partition — cell encode,
-  candidate probe against the broadcast cover map, ray-cast, dedup, and kNN
-  fallback all inside a single Arrow batch. Zero shuffles; the plan is
+  candidate probe against the broadcast cover index, ray-cast, dedup, and
+  kNN fallback all inside a single Arrow batch. Zero shuffles; the plan is
   scan -> MapInArrow -> (sink). Skew-proof: no shuffle keys exist. Single-
   and multi-set calls run the same batch loop (``_fused``, one spec per set).
 * ``join``: Catalyst-visible BroadcastHashJoin of points vs the covering-cell
-  map, then mapInArrow PIP on candidates (against the same per-worker
+  map, then mapInArrow PIP on candidates (against the same broadcast
   ``_CoverIndex`` the fused loop probes), then one aggregation shuffle per
   row_id. Useful when the candidate set should be materialized / audited.
+
+Each prepared set is broadcast as one ``_CoverIndex``, and the prep holds
+that broadcast for its context (``_broadcast_index``): every call with the
+same prep reuses it, and it is freed with the prep like any unreferenced
+broadcast. A python worker unpickles the index when it loads the
+broadcast, and PySpark keeps a loaded broadcast in the worker for as long
+as the tasks it runs use it, so the probe arrays are built once per worker
+and run of such tasks, never per batch.
 
 At 100 TB the fused path streams straight off the scan with per-partition
 Python workers doing vectorized numpy; nothing is collected to the driver.
 """
 
 from __future__ import annotations
-
-import threading
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -56,19 +61,19 @@ from ..regions import PreparedRegions
 
 
 class _CoverIndex:
-    """Executor-side probe structure over one broadcast (cover, geoms) pair,
-    built ONCE per python worker and reused across every Arrow batch.
+    """Probe structure over one region set's (cover, geoms): the value a
+    prepared set broadcasts.
 
-    Cover rows are sorted by cell once at build time; a probe is a
-    ``searchsorted`` + ragged gather over int arrays, so per-batch work is
-    proportional to the batch, not to the cover map. Regions are addressed
-    by position: ``rids[i]`` is the id, ``code`` maps id -> i. Each
-    region's geometry is edge-decomposed lazily, once (PreparedPolygon
-    y-bucket tables). Both strategies probe it: the fused loop for the
-    whole lookup, the join strategy for its ray-casts.
-
-    Everything is derived from the broadcast values, so the index is pure
-    cache: same candidates, same keep-first ordering, same kernels.
+    It pickles as its ``(cover, geoms)`` pair, so the broadcast ships the
+    same bytes as the two tables, and a worker builds the probe arrays
+    once, when it unpickles the broadcast. Cover rows are sorted by cell
+    at build time; a probe is a ``searchsorted`` + ragged gather over int
+    arrays, so per-batch work is proportional to the batch, not to the
+    cover map. Regions are addressed by position: ``rids[i]`` is the id,
+    ``code`` maps id -> i. Each region's geometry is edge-decomposed
+    lazily, once (PreparedPolygon y-bucket tables). Both strategies probe
+    it: the fused loop for the whole lookup, the join strategy for its
+    ray-casts.
     """
 
     __slots__ = ("cover", "geoms", "cells", "starts", "cand_rid", "cand_seq",
@@ -76,7 +81,7 @@ class _CoverIndex:
                  "_edges")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
-        self.cover = cover    # strong refs pin the id()-based cache key
+        self.cover = cover
         self.geoms = geoms
         if cover is None or len(cover) == 0:
             z = np.empty(0, np.int64)
@@ -103,6 +108,9 @@ class _CoverIndex:
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
         self._knn = None
         self._edges = None
+
+    def __reduce__(self):
+        return _CoverIndex, (self.cover, self.geoms)
 
     def prepared(self, r: int) -> PreparedPolygon:
         pp = self._pp[r]
@@ -156,28 +164,6 @@ class _CoverIndex:
             self._edges = EdgeTable([self.prepared(r)
                                      for r in range(len(self.rids))])
         return self._edges
-
-
-# Per-worker index cache: (id(cover), id(geoms)) -> _CoverIndex. Strong refs
-# inside the index pin both id()s (no stale-alias risk); python workers are
-# single-threaded per process, so no lock. FIFO-bounded — the index is a few
-# MB (ints parallel to the cover rows + edge tables), entries only turn over
-# when a worker serves many distinct region sets.
-_INDEX_CACHE: OrderedDict = OrderedDict()
-_INDEX_CACHE_SIZE = 4
-
-
-def _get_index(cover: pd.DataFrame, geoms: dict) -> _CoverIndex:
-    key = (id(cover), id(geoms))
-    hit = _INDEX_CACHE.get(key)
-    if hit is not None and hit.cover is cover and hit.geoms is geoms:
-        _INDEX_CACHE.move_to_end(key)
-        return hit
-    idx = _CoverIndex(cover, geoms)
-    _INDEX_CACHE[key] = idx
-    while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
-        _INDEX_CACHE.popitem(last=False)
-    return idx
 
 
 def _ray_cast(index: _CoverIndex, px: np.ndarray, py: np.ndarray,
@@ -342,88 +328,27 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
     return miss_pos[valid], index.rids[out_rid[valid]], out_dist[valid]
 
 
-# (SparkContext id, PreparedRegions id) -> (sc, prep, cover b., geoms b.).
-# Re-broadcasting the SAME prepared table on every reverse_geocode call
-# re-serializes the cover map + geometries driver-side each time — a pure
-# per-run serial floor that caps scaling efficiency of short pipeline
-# runs. BOUNDED LRU, by ESTIMATED BYTES with an entry-count backstop: at
-# high cell resolutions a single cover map can reach GBs, so an
-# entry-count bound alone could pin several of them driver-side; eviction
-# runs until the cached estimate fits the byte budget (the newest entry
-# always stays, however large). Eviction unpersists (executors drop their
-# copies; a still-lazy plan holding an evicted broadcast just re-fetches
-# from the driver on next use — unpersist, never destroy). The cache
-# holds STRONG refs to both sc and prep: that pins their id()s, so a
-# recycled address can never alias a cache key (id reuse requires the old
-# object freed). All mutation is under a lock — drivers may submit jobs
-# from several threads (ADVICE round 4).
-_BCAST_CACHE: OrderedDict = OrderedDict()
-_BCAST_CACHE_SIZE = 8
-_BCAST_CACHE_BYTES = 512 * 1024 * 1024
-_BCAST_LOCK = threading.Lock()
-
-
-def _prep_nbytes(prep: "PreparedRegions") -> int:
-    """Driver-side estimate of what broadcasting this prep pins: the
-    cover DataFrame (deep) + every geometry array."""
-    n = 0
-    if prep.cover is not None:
-        n += int(prep.cover.memory_usage(deep=True).sum())
-    for xs, ys, offs, _bbox in prep.geoms.values():
-        n += xs.nbytes + ys.nbytes + getattr(offs, "nbytes", 64) + 64
-    return n
-
-
-def _broadcast_prep(sc, prep: "PreparedRegions"):
-    key = (id(sc), id(prep))
-    with _BCAST_LOCK:
-        hit = _BCAST_CACHE.get(key)
-        if hit is not None and hit[0] is sc and hit[1] is prep:
-            _BCAST_CACHE.move_to_end(key)
-            return hit[2], hit[3]
-    # broadcast outside the lock (serialization can take seconds); a rare
-    # concurrent double-build of the same prep just wastes one broadcast,
-    # which the insert below detects and unpersists
-    b_cover = sc.broadcast(prep.cover)
-    b_geoms = sc.broadcast(prep.geoms)
-    # size the entry OUTSIDE the lock too: memory_usage(deep=True) walks
-    # every object in the cover map — seconds on GB-scale preps, which
-    # would stall every other thread's cache-hit fast path
-    nbytes = _prep_nbytes(prep)
-    stale = []
-    with _BCAST_LOCK:
-        hit = _BCAST_CACHE.get(key)
-        if hit is not None and hit[0] is sc and hit[1] is prep:
-            stale = [b_cover, b_geoms]  # lost the race: keep the winner
-            b_cover, b_geoms = hit[2], hit[3]
-        else:
-            _BCAST_CACHE[key] = (sc, prep, b_cover, b_geoms, nbytes)
-            while len(_BCAST_CACHE) > 1 and (
-                    len(_BCAST_CACHE) > _BCAST_CACHE_SIZE
-                    or sum(e[4] for e in _BCAST_CACHE.values())
-                    > _BCAST_CACHE_BYTES):
-                _, _, old_c, old_g, _ = _BCAST_CACHE.popitem(last=False)[1]
-                stale.extend((old_c, old_g))
-    for b in stale:
-        try:
-            b.unpersist(blocking=False)
-        except Exception:
-            pass  # stopped context: nothing to free
-    return b_cover, b_geoms
+def _broadcast_index(sc, prep: PreparedRegions):
+    """The broadcast ``_CoverIndex`` of ``prep``, made once per context and
+    held on the prep."""
+    held = prep._bcast
+    if held is None or held[0] is not sc:
+        held = prep._bcast = (sc, sc.broadcast(
+            _CoverIndex(prep.cover, prep.geoms)))
+    return held[1]
 
 
 def _spec(sc, prep: PreparedRegions, out_col: str,
           max_distance: float | None, distance_unit: str | None,
           dist_col: str | None = None) -> tuple:
-    """One fused-loop lookup: ``(b_cover, b_geoms, res, out_col,
-    max_distance, metric, dist_col)``. The unit defaults to the regions'
-    source CRS units (utilities.py:253-255)."""
+    """One fused-loop lookup: ``(b_index, res, out_col, max_distance,
+    metric, dist_col)``. The unit defaults to the regions' source CRS units
+    (utilities.py:253-255)."""
     if distance_unit is None:
         distance_unit = "m" if prep.crs == "EPSG:27700" else "deg"
     if distance_unit not in ("m", "deg"):
         raise ValueError("distance_unit must be 'm' or 'deg'")
-    b_cover, b_geoms = _broadcast_prep(sc, prep)
-    return (b_cover, b_geoms, prep.res, out_col, max_distance,
+    return (_broadcast_index(sc, prep), prep.res, out_col, max_distance,
             distance_unit == "m", dist_col)
 
 
@@ -435,20 +360,14 @@ def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
     those in ``output_cols``): every ``out_col``, ``cell_id`` (first spec's
     resolution) when ``keep_cell``, every ``dist_col``.
     """
-    new_fields = [StructField(s[3], StringType()) for s in specs]
+    new_fields = [StructField(s[2], StringType()) for s in specs]
     if keep_cell:
         new_fields.append(StructField("cell_id", LongType()))
-    new_fields += [StructField(s[6], DoubleType())
-                   for s in specs if s[6] is not None]
-    cell_res = specs[0][2]
-    # Every spec's index is fetched on a task's first batch and held: with
-    # more specs than the FIFO cache holds, per-batch _get_index calls
-    # would thrash it and re-sort every cover map on every batch.
-    indexes = []
+    new_fields += [StructField(s[5], DoubleType())
+                   for s in specs if s[5] is not None]
+    cell_res = specs[0][1]
 
     def body(rb):
-        if not indexes:
-            indexes.extend(_get_index(s[0].value, s[1].value) for s in specs)
         # NULL -> NaN, so the finite test covers both
         lat_all = rb.column(lat_col).cast(pa.float64()).to_numpy(
             zero_copy_only=False)
@@ -457,8 +376,8 @@ def _fused(points: DataFrame, specs: list, lat_col: str, lon_col: str,
         finite = np.isfinite(lat_all) & np.isfinite(lon_all)
         vpos = np.flatnonzero(finite)
         cols, dist_cols = [], []
-        for (_, _, res, _, max_d, metric, dist_col), index in zip(
-                specs, indexes):
+        for b_index, res, _, max_d, metric, dist_col in specs:
+            index = b_index.value
             rid = np.full(rb.num_rows, None, dtype=object)
             if vpos.size:
                 rid[vpos] = _assign_batch(index, lat_all[vpos],
@@ -599,7 +518,7 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     min(region_seq) aggregation per input row."""
     spark = points.sparkSession
     sc = spark.sparkContext
-    b_cover, b_geoms = _broadcast_prep(sc, prep)
+    b_index = _broadcast_index(sc, prep)
 
     cover_df = spark.createDataFrame(prep.cover)
     # Deterministic per-row key: xxhash64 of the hashable columns under two
@@ -640,13 +559,9 @@ def _reverse_geocode_join(points, prep, lat_col, lon_col, out_col, keep_cell):
     cand = pts.join(F.broadcast(cover_df),
                     pts["cell_id"] == cover_df["cell"], "left")
 
-    held = []   # (index, its region ids), fetched on a task's first batch
-
     def pip(rb):
-        if not held:
-            ix = _get_index(b_cover.value, b_geoms.value)
-            held.append((ix, pa.array(ix.rids, pa.string())))
-        index, rids = held[0]
+        index = b_index.value
+        rids = pa.array(index.rids, pa.string())
         # no candidate (left join miss): NULL region_id and interior
         keep = pc.fill_null(rb.column("interior"), False).to_numpy(
             zero_copy_only=False, writable=True)

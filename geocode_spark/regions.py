@@ -6,13 +6,13 @@ boundary loaders ons_nrs.py:167-257, neso.py:97-216, eurostat.py:51-115).
 
 Here, preparation is a one-time driver-side job (the analogue of the
 reference's pickle-cache prep, cache_manager.py:22-119) that turns polygons
-into two *broadcastable* artifacts:
+into two artifacts, shipped to executors together as one Spark broadcast
+(reverse_geocode's cover index, held on the prep):
 
-* ``geoms``: {region_id: (xs, ys, ring_offsets, bbox)} numpy dict, shipped to
-  executors as a Spark broadcast variable for exact ray-cast / distance
-  kernels;
+* ``geoms``: {region_id: (xs, ys, ring_offsets, bbox)} numpy dict for exact
+  ray-cast / distance kernels;
 * ``cover``: a covering-cell table (cell -> region_id, region_seq, interior)
-  used as the broadcast side of the candidate equi-join — our distributed
+  used as the build side of the candidate equi-join — our distributed
   replacement for the R-tree. ``interior`` cells are wholly inside their
   region, so points hashing there skip the exact point-in-polygon test
   entirely (raster/vector tiling shortcut, SURVEY.md §4).
@@ -51,6 +51,10 @@ class PreparedRegions:
     seq: dict = field(default_factory=dict)
     # optional extra attribute columns per region (e.g. GSPs / GSPGroup)
     attrs: pd.DataFrame = None
+    # (SparkContext, Broadcast of the cover index): reverse_geocode's
+    # broadcast of this set, rebuilt only for another context
+    _bcast: tuple = field(default=None, init=False, repr=False,
+                          compare=False)
 
     @property
     def n_regions(self) -> int:

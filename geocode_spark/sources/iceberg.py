@@ -148,12 +148,11 @@ def _current_version(meta: FsPath) -> int:
 
 
 def is_iceberg_table(spark, table_path) -> bool:
-    meta = _meta_dir(spark, table_path)
+    """Whether ``<table_path>/metadata`` lists a ``v<N>.metadata.json``
+    (one listing; which version is current is left to the reader)."""
     try:
-        if not meta.exists():
-            return False
-        _current_version(meta)
-        return True
+        return bool(_meta_dir(spark, table_path)
+                    .list_names("v*.metadata.json"))
     except Exception:
         return False
 

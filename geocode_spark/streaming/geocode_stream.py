@@ -6,11 +6,12 @@ Structured Streaming:
 
 * ``geocode_pages_stream`` — a streaming pages source (files/Kafka/Iceberg
   CDC) through the full document pipeline via ``foreachBatch``. Reused
-  across micro-batches: the prepared region sets (their broadcast
-  variables and each worker's cell index are cached) and the prepared CPO
-  dimensions ``dims``, so no batch aggregates the CPO. Each batch plans
-  and broadcasts afresh, and is the same fact-side shuffle-free plan as
-  batch mode.
+  across micro-batches: the prepared region sets, each holding its one
+  broadcast cover index (a worker keeps it loaded while its tasks use
+  it), and the prepared CPO dimensions ``dims``, so no batch aggregates
+  the CPO or re-broadcasts a region set. Each batch
+  plans afresh, with its own broadcast joins of ``dims``, and is the same
+  fact-side shuffle-free plan as batch mode.
 * ``windowed_mention_counts`` — a native streaming windowed aggregation
   (watermark + tumbling window) over extracted postcode mentions: the
   'streaming analytics' surface (late data handled by the watermark).

@@ -22,7 +22,7 @@ from geocode_spark.operators.multimodal import (extract_features,
                                                 frame_sample, resize_media,
                                                 with_media_meta)
 from geocode_spark.operators.pipeline import geocode_documents
-from geocode_spark.operators.reverse_geocode import (_get_index, _ray_cast,
+from geocode_spark.operators.reverse_geocode import (_CoverIndex, _ray_cast,
                                                      reverse_geocode,
                                                      reverse_geocode_multi)
 from geocode_spark.regions import load_prepared
@@ -78,7 +78,7 @@ def test_kept_columns_pass_through_exactly(spark, preps):
 
 def test_ray_cast_empty_and_bbox(preps):
     llsoa, _ = preps
-    index = _get_index(llsoa.cover, llsoa.geoms)
+    index = _CoverIndex(llsoa.cover, llsoa.geoms)
     none = _ray_cast(index, np.empty(0), np.empty(0), np.empty(0, np.int64))
     assert none.dtype == bool and none.size == 0
     # a point 10 degrees east of a vertex and a NaN point are outside

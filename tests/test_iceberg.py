@@ -160,6 +160,26 @@ class TestIcebergTable:
         assert read_pages(spark, str(tbl)).count() == 105
         assert read_pages(spark, str(tbl), snapshot_id=1).count() == 100
 
+    def test_read_pages_resolves_version_once(self, spark, tmp_path,
+                                              pages_df, monkeypatch):
+        """Detecting the table is one listing; only the read resolves
+        the current version (hint read plus the upward probe)."""
+        from geocode_spark.sources import iceberg
+        from geocode_spark.sources.loaders import read_pages
+
+        tbl = tmp_path / "tbl"
+        iceberg.write_iceberg(spark, pages_df, tbl)
+        calls = []
+        real = iceberg._current_version
+
+        def counted(meta):
+            calls.append(str(meta))
+            return real(meta)
+
+        monkeypatch.setattr(iceberg, "_current_version", counted)
+        assert read_pages(spark, str(tbl)).count() == 100
+        assert len(calls) == 1
+
 
 class TestSnapshotAwareLineage:
     def test_geocode_pages_iceberg_resume_and_append(self, spark, tmp_path,

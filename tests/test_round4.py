@@ -1,6 +1,6 @@
 """Round-4 regression tests: IVF sample bias, minhash cache lifecycle,
 Iceberg optimistic-concurrency commits, stale-hint healing, legacy lineage
-manifests."""
+manifests, the lifetime of a prepared set's broadcast."""
 
 import gc
 import json
@@ -379,20 +379,84 @@ class TestPipelineFixedCostCuts:
                 == (None, None, None)
 
 
-class TestBroadcastPrepCache:
-    def test_reuse_and_bounded_eviction(self, spark, fixture_dir):
+class TestPrepBroadcast:
+    """A prepared set holds its own broadcast cover index: reused for the
+    same prep and context, rebuilt for a fresh prep or another context,
+    and freed with the prep (the module keeps no reference)."""
+
+    def test_same_prep_and_context_reuse(self, spark, fixture_dir):
         from geocode_spark.operators import reverse_geocode as rg
         from geocode_spark.regions import load_prepared
 
         sc = spark.sparkContext
         llsoa = load_prepared("llsoa", fixture_dir / "prepared")
-        a1 = rg._broadcast_prep(sc, llsoa)
-        a2 = rg._broadcast_prep(sc, llsoa)
-        assert a1[0] is a2[0] and a1[1] is a2[1], \
-            "same prep must reuse the same broadcasts"
-        # a fresh prep object per call (per-batch reload pattern) must not
-        # grow the cache past its bound
-        for _ in range(rg._BCAST_CACHE_SIZE + 3):
-            rg._broadcast_prep(sc, load_prepared("llsoa",
-                                                 fixture_dir / "prepared"))
-        assert len(rg._BCAST_CACHE) <= rg._BCAST_CACHE_SIZE
+        assert rg._broadcast_index(sc, llsoa) \
+            is rg._broadcast_index(sc, llsoa)
+
+    def test_fresh_prep_gets_new_broadcast(self, spark, fixture_dir):
+        from geocode_spark.operators import reverse_geocode as rg
+        from geocode_spark.regions import load_prepared
+
+        sc = spark.sparkContext
+        a = rg._broadcast_index(sc, load_prepared("llsoa",
+                                                  fixture_dir / "prepared"))
+        b = rg._broadcast_index(sc, load_prepared("llsoa",
+                                                  fixture_dir / "prepared"))
+        assert a is not b
+
+    def test_other_context_rebroadcasts(self, spark, fixture_dir):
+        from geocode_spark.operators import reverse_geocode as rg
+        from geocode_spark.regions import load_prepared
+
+        class StubContext:
+            def broadcast(self, value):
+                self.sent = value
+                return object()
+
+        sc = spark.sparkContext
+        llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+        real = rg._broadcast_index(sc, llsoa)
+        stub = StubContext()
+        other = rg._broadcast_index(stub, llsoa)
+        assert other is not real
+        assert isinstance(stub.sent, rg._CoverIndex)
+        assert rg._broadcast_index(stub, llsoa) is other
+
+    def test_dropped_prep_frees_broadcast(self, spark, fixture_dir):
+        import weakref
+
+        from geocode_spark.operators import reverse_geocode as rg
+        from geocode_spark.regions import load_prepared
+
+        llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+        ref = weakref.ref(rg._broadcast_index(spark.sparkContext, llsoa))
+        gc.collect()
+        assert ref() is not None, "the prep holds its broadcast"
+        del llsoa
+        gc.collect()
+        assert ref() is None, "nothing else may pin a dropped prep's broadcast"
+
+    def test_index_pickles_as_its_tables(self, fixture_dir):
+        import pickle
+
+        from geocode_spark.cells import cell_of
+        from geocode_spark.operators import reverse_geocode as rg
+        from geocode_spark.regions import load_prepared
+
+        llsoa = load_prepared("llsoa", fixture_dir / "prepared")
+        index = rg._CoverIndex(llsoa.cover, llsoa.geoms)
+        back = pickle.loads(pickle.dumps(index))
+        for name in ("cells", "starts", "cand_rid", "cand_seq",
+                     "cand_interior", "rids"):
+            np.testing.assert_array_equal(getattr(back, name),
+                                          getattr(index, name))
+        assert back.code == index.code and back.bbox == index.bbox
+        rng = np.random.default_rng(7)
+        boxes = np.array(index.bbox)   # points around every region
+        pick = rng.integers(0, len(boxes), 2000)
+        lon = rng.uniform(boxes[pick, 0], boxes[pick, 2])
+        lat = rng.uniform(boxes[pick, 1], boxes[pick, 3])
+        pcells = cell_of(lat, lon, llsoa.res)
+        for got, want in zip(back.lookup(pcells), index.lookup(pcells)):
+            np.testing.assert_array_equal(got, want)
+        assert len(index.lookup(pcells)[0]) > 0

@@ -1,7 +1,8 @@
 """Round-5 additions: multi-probe recall lift for bucketed cosine pairs,
 driver-side argument validation (frame_sample / reverse_geocode_multi),
-thread-safe + byte-bounded broadcast cache, identifier quoting."""
+concurrent broadcast of one prepared set, identifier quoting."""
 
+import sys
 import threading
 
 import numpy as np
@@ -114,42 +115,36 @@ class TestDriverSideValidation:
             reverse_geocode_multi(pts, [(prep, "x", {"max_dist": 2000})])
 
 
-class TestBroadcastCacheBounds:
+class TestBroadcastConcurrency:
     def test_concurrent_calls_no_corruption(self, spark):
+        """Threads broadcasting one prep at once each get a valid
+        broadcast; no lock is needed."""
         from geocode_spark.operators import reverse_geocode as rg
         from geocode_spark.regions import load_prepared
 
         prep = load_prepared("llsoa", f"{FIX}/prepared")
         sc = spark.sparkContext
-        errs = []
+        errs, got = [], []
 
         def hammer():
             try:
                 for _ in range(20):
-                    rg._broadcast_prep(sc, prep)
+                    got.append(rg._broadcast_index(sc, prep))
             except Exception as e:  # pragma: no cover
                 errs.append(e)
 
         threads = [threading.Thread(target=hammer) for _ in range(8)]
-        [t.start() for t in threads]
-        [t.join() for t in threads]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            [t.start() for t in threads]
+            [t.join(timeout=120) for t in threads]
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
         assert not errs
-        assert len(rg._BCAST_CACHE) <= rg._BCAST_CACHE_SIZE
-
-    def test_byte_budget_evicts(self, spark, monkeypatch):
-        from geocode_spark.operators import reverse_geocode as rg
-        from geocode_spark.regions import load_prepared
-
-        prep_a = load_prepared("llsoa", f"{FIX}/prepared")
-        prep_b = load_prepared("gsp", f"{FIX}/prepared")
-        assert rg._prep_nbytes(prep_a) > 0
-        monkeypatch.setattr(rg, "_BCAST_CACHE_BYTES", 1)  # force eviction
-        rg._broadcast_prep(spark.sparkContext, prep_a)
-        rg._broadcast_prep(spark.sparkContext, prep_b)
-        # newest entry always survives; the over-budget older one is gone
-        assert len(rg._BCAST_CACHE) == 1
-        (_, kept, *_rest), = rg._BCAST_CACHE.values()
-        assert kept is prep_b
+        assert len(got) == 160
+        assert all(isinstance(b.value, rg._CoverIndex) for b in got)
 
 
 class TestIdentifierQuoting:
