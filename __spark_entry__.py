@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Each ``queries()`` entry runs a geocode_spark operator over the driver's
-testdata (plus the committed fixture tables under /root/repo/fixtures);
+testdata (plus the committed fixture tables under this checkout's
+``fixtures/``);
 ``oracle_sql()`` carries the independent DuckDB formulation. Geospatial
 oracles exploit that fixture polygons are axis-aligned squares, so exact
 bbox containment in SQL is an independent check of the engine's
@@ -18,7 +19,9 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-FIX = "/root/repo/fixtures"
+from geocode_spark.sources.fixtures import FIXTURE_DIR
+
+FIX = str(FIXTURE_DIR)
 
 UK_POSTCODE_REGEX = r"\b([A-Z]{1,2}[0-9][A-Z0-9]?)\s?([0-9][A-Z]{2})\b"
 
@@ -770,7 +773,10 @@ def q_sessionize(spark, sf_dir):
     name = f"sessions_{uuid.uuid4().hex[:8]}"
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName(name).trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
     return spark.table(name).select(
         "user_id", "session_start", "session_end", "n_events",
         F.round("total_value", 6).alias("total_value"))

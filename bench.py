@@ -64,7 +64,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import pyspark.sql.functions as F  # noqa: E402
 
-FIX = "/root/repo/fixtures"
+from geocode_spark.sources.fixtures import FIXTURE_DIR  # noqa: E402
+
+FIX = str(FIXTURE_DIR)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -296,9 +298,9 @@ def main():
                          (F.col("id") + 1).alias("id_b"))
                  .repartition(CPUS * 2))
         # at the default size the residue left by the partition-local
-        # contraction fits GEOCODE_CC_DRIVER_MAX_EDGES, so the driver's
-        # union-find finishes it; max_iters bounds only the distributed
-        # fallback loop (set the cap to 0 to time that loop instead)
+        # contraction fits dedup._DRIVER_MAX_EDGES, so the driver's
+        # components kernel finishes it; max_iters bounds only the
+        # distributed fallback loop
         return dup_clusters(nodes, pairs, max_iters=12).count()
 
     # ---- lineage no-op resume: recovery latency, not throughput --------

@@ -162,13 +162,7 @@ def points_in_polygon_prepared(px, py, pp: PreparedPolygon,
         pyc = py[s:e]
         ib = np.clip(((pyc - pp.by0) / pp.bh).astype(np.int64), 0, pp.nb - 1)
         bs = pp.boffs[ib]
-        cnt = pp.boffs[ib + 1] - bs
-        tot = int(cnt.sum())
-        if tot == 0:
-            continue
-        slot = np.repeat(bs - np.r_[np.int64(0), np.cumsum(cnt)[:-1]], cnt) \
-            + np.arange(tot, dtype=np.int64)
-        pr = np.repeat(np.arange(e - s), cnt)
+        pr, slot = _ragged(bs, pp.boffs[ib + 1] - bs)
         y1 = pp.by1[slot]
         y2 = pp.by2[slot]
         pyy = pyc[pr]

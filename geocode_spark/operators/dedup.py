@@ -25,6 +25,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
@@ -227,9 +229,6 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
 
     def bucket_pairs(batches):
         settle_worker_imports()
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         triu_cache: dict = {}
         carry = None  # (ids, S, H, band, hash) of the last (open) bucket
 
@@ -587,57 +586,89 @@ def ngram_jaccard_all_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-def _union_find(pairs) -> dict:
-    """Components of the graph given as ``(a, b)`` edges: ``{node: min id
-    of its component}`` for every node an edge touches. Union-by-min with
-    path compression, dict-based so any orderable id type works (the
-    declared query clusters string urls)."""
-    parent: dict = {}
+def _min_labels(a: np.ndarray, b: np.ndarray, n: int):
+    """Components of the graph over nodes ``0..n-1`` with edges
+    ``(a[i], b[i])``: ``(lab, rounds)``, ``lab[v]`` the smallest node of
+    ``v``'s component.
 
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
+    Each round hooks, for every edge whose endpoints carry different
+    labels, the larger of the two labels onto the smaller
+    (``np.minimum.at``, both directions), then pointer-jumps
+    (``lab = lab[lab]``) until the labels stop changing, so every node
+    again points at a node that points at itself (a root).
 
-    for a, b in pairs:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra < rb:
-            parent[rb] = ra
-        elif rb < ra:
-            parent[ra] = rb
-    return {k: find(k) for k in parent}
+    Invariants: ``lab[v] <= v`` and ``lab[v]`` lies in ``v``'s component.
+    Labels never increase, so a node that stops being a root never becomes
+    one again. A round that does not terminate has an edge between two
+    different roots and lowers the larger root's label: it removes at least
+    one root. Hence the loop ends after at most ``n - c`` rounds for ``c``
+    components, with no edge left between different labels: each component
+    carries one label, a node of that component that is its own label,
+    which is its smallest node (the smallest node ``m`` has ``lab[m] <= m``
+    and ``lab[m]`` in its component). No tighter bound is claimed; the
+    tests pin a round ceiling on a shuffled path."""
+    lab = np.arange(n, dtype=np.int64)
+    rounds = 0
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            return lab, rounds
+        rounds += 1
+        la, lb = la[cross], lb[cross]
+        np.minimum.at(lab, la, lb)
+        np.minimum.at(lab, lb, la)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _components(src: pa.Array, dst: pa.Array):
+    """Components of the graph given as ``(src[i], dst[i])`` edges:
+    ``(nodes, labels)``, every node an edge touches and the min id of its
+    component, both Arrow arrays of the input id type.
+
+    Ids get dense ranks that keep their order (``pc.rank``), so string and
+    bigint ids take one path and the min rank is the min id;
+    :func:`_min_labels` labels the ranks, and both outputs are ``take``s
+    from the input ids, so no id passes through pandas or float64."""
+    ids = pa.concat_arrays([src, dst])
+    r = np.asarray(pc.rank(ids, tiebreaker="dense"), np.int64) - 1
+    n = int(r.max()) + 1 if len(r) else 0
+    first = np.empty(n, np.int64)
+    first[r] = np.arange(len(r))   # any position of a rank holds its id
+    lab, _ = _min_labels(r[:len(src)], r[len(src):], n)
+    return ids.take(first), ids.take(first[lab])
 
 
 def _local_contract(edges: DataFrame, id_type) -> DataFrame:
     """Partition-local contraction: for every node appearing in a
     partition's ``(src, dst)`` edges, emit ``(src=node, label=min id of the
-    node's PARTITION-LOCAL component)`` (``_union_find`` over the
-    partition's edges).
+    node's PARTITION-LOCAL component)`` (:func:`_components` over all of
+    the partition's edges at once).
 
     The emitted rows preserve global connectivity exactly: every original
     edge (a, b) in partition p collapses to (a, l_p) and (b, l_p) through
     the shared local root l_p, and a node seen in several partitions links
     its per-partition roots. Labels are ids of real nodes, and the global
     min id of a component is always one of the local roots (its own
-    partition's union-find can only label it with itself)."""
+    partition can only label it with itself)."""
     schema = StructType([StructField("src", id_type),
                          StructField("label", id_type)])
 
-    def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def contract(batches: Iterator[pa.RecordBatch]):
         settle_worker_imports()
-        labels = _union_find(
-            pair for pdf in batches
-            for pair in zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-        if labels:
-            yield pd.DataFrame({"src": list(labels),
-                                "label": list(labels.values())})
+        parts = [rb for rb in batches if rb.num_rows]
+        if parts:
+            t = pa.Table.from_batches(parts)
+            nodes, labels = _components(t.column("src").combine_chunks(),
+                                        t.column("dst").combine_chunks())
+            yield pa.RecordBatch.from_arrays([nodes, labels],
+                                             names=["src", "label"])
 
-    return edges.mapInPandas(contract, schema)
+    return edges.mapInArrow(contract, schema)
 
 
 def _propagate_loop(nodes_ids: DataFrame, pairs: DataFrame,
@@ -710,6 +741,11 @@ def _propagate_loop(nodes_ids: DataFrame, pairs: DataFrame,
     return labels
 
 
+# residue edges the driver labels itself (phase 3 of dup_clusters); a
+# larger residue runs the distributed fallback loop
+_DRIVER_MAX_EDGES = 2_000_000
+
+
 def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
                  max_iters: int = 20) -> DataFrame:
     """Connected components over duplicate pairs: every node gets
@@ -724,25 +760,29 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     1. **Partition-local contraction** — edges are range-partitioned by
        ``src`` (duplicate-pair endpoints are id-correlated in practice, so
        ranges maximize the edges each task can resolve alone) and each
-       task union-finds its own edges (``_local_contract``), emitting
-       (node, local min root). One shuffle + one Python pass, no loop.
+       task labels its own edges' components (``_local_contract``),
+       emitting (node, local min root). One shuffle + one Arrow pass, no
+       loop.
     2. **Contracted roots graph** — nodes' per-partition roots are reduced
        to a global candidate label (min) and the residual edges BETWEEN
        roots are materialized. This graph is typically orders of magnitude
        smaller than the input (for range-local components it holds only
        partition-boundary links).
     3. **Solve the residue** — if the contracted edge count is within
-       ``$GEOCODE_CC_DRIVER_MAX_EDGES`` (default 2M; a bounded
-       ``limit(cap+1)`` probe collected as Arrow, never an unbounded
-       collect), ``_union_find`` finishes it on the driver in one pass.
-       Larger residues fall back to the distributed pointer-doubling loop
-       (``_propagate_loop``) on the CONTRACTED graph.
+       ``_DRIVER_MAX_EDGES`` (a bounded ``limit(cap+1)`` probe collected
+       as Arrow, never an unbounded collect), the driver labels it in one
+       call. Larger residues fall back to the distributed pointer-doubling
+       loop (``_propagate_loop``) on the CONTRACTED graph.
+
+    Phases 1 and 3 run the same vectorized kernel, :func:`_components`:
+    dense order-keeping ranks of the ids, then min-label hooking with full
+    pointer jumping until no edge joins two labels. Labels never increase
+    and each round that does not end removes at least one root, so it
+    ends within (nodes - components) rounds (:func:`_min_labels`).
 
     ``max_iters`` bounds the fallback loop only, which raises
     ``RuntimeError`` if it does not converge; the driver finish is exact
     and always converges. No session config is changed."""
-    import os
-
     spark = nodes.sparkSession
     id_type = nodes.schema[id_col].dataType
 
@@ -756,7 +796,7 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
              .join(ids_b, "id_b", "leftsemi")
              .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
 
-    # phase 1: one range shuffle + partition-local union-find. Ranges
+    # phase 1: one range shuffle + partition-local components. Ranges
     # (not hash) so id-correlated duplicate chains land whole in one
     # task. (The range sampling pass recomputes the edge pipeline once;
     # measured CHEAPER than materializing it with a checkpoint first.)
@@ -766,7 +806,7 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 
     # phase 2: residual links between local roots — (node min root, other
     # appearance root) for every node seen in >1 partition. NOT
-    # deduplicated: the driver union-find dedupes for free and a distinct
+    # deduplicated: the driver kernel dedupes for free and a distinct
     # here costs an extra exchange (the cap below therefore counts
     # appearance rows, a conservative over-estimate).
     resid = (M.join(lab0, "src")
@@ -776,21 +816,21 @@ def dup_clusters(nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 
     # phase 3: bounded probe — driver finish when the residue is small
     # (the overwhelmingly common case), distributed loop otherwise.
-    cap = int(os.environ.get("GEOCODE_CC_DRIVER_MAX_EDGES", "2000000"))
-    probe = resid.limit(cap + 1).toArrow()
-    if probe.num_rows <= cap:
-        found = _union_find(zip(probe.column("src").to_pylist(),
-                                probe.column("dst").to_pylist()))
-        remap = [(k, v) for k, v in found.items() if k != v]
-        if remap:
+    probe = resid.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if probe.num_rows <= _DRIVER_MAX_EDGES:
+        found, cl = _components(probe.column("src").combine_chunks(),
+                                probe.column("dst").combine_chunks())
+        moved = pc.not_equal(found, cl)
+        labels = lab0.select("src", F.col("__lbl0").alias("label"))
+        if pc.any(moved).as_py():
             rdf = spark.createDataFrame(
-                remap, StructType([StructField("__lbl0", id_type),
-                                   StructField("__cl", id_type)]))
+                pa.table({"__lbl0": found.filter(moved),
+                          "__cl": cl.filter(moved)}),
+                StructType([StructField("__lbl0", id_type),
+                            StructField("__cl", id_type)]))
             labels = (lab0.join(F.broadcast(rdf), "__lbl0", "left")
                       .select("src",
                               F.coalesce("__cl", "__lbl0").alias("label")))
-        else:
-            labels = lab0.select("src", F.col("__lbl0").alias("label"))
     else:
         roots = (resid.select("src").unionByName(
             resid.select(F.col("dst").alias("src"))).distinct())

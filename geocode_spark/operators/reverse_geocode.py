@@ -55,7 +55,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField
 
 from ..cells import cell_of, cell_to_ij, cell_from_ij
 from ..functions.udfs import arrow_map, cell_udf
-from ..geometry import (METERS_PER_DEG, EdgeTable, PreparedPolygon,
+from ..geometry import (METERS_PER_DEG, EdgeTable, PreparedPolygon, _ragged,
                         dist_to_polygons_pairs, points_in_polygon_prepared)
 from ..regions import PreparedRegions
 
@@ -77,8 +77,7 @@ class _CoverIndex:
     """
 
     __slots__ = ("cover", "geoms", "cells", "starts", "cand_rid", "cand_seq",
-                 "cand_interior", "rids", "code", "bbox", "_pp", "_knn",
-                 "_edges")
+                 "cand_interior", "rids", "code", "bbox", "_pp", "_edges")
 
     def __init__(self, cover: pd.DataFrame, geoms: dict):
         self.cover = cover
@@ -106,7 +105,6 @@ class _CoverIndex:
         self.code = {r: i for i, r in enumerate(self.rids)}
         self.bbox = [geoms[r][3] for r in self.rids]
         self._pp: list = [None] * len(self.rids)  # lazy PreparedPolygon
-        self._knn = None
         self._edges = None
 
     def __reduce__(self):
@@ -129,34 +127,8 @@ class _CoverIndex:
         np.minimum(loc, len(self.cells) - 1, out=loc)
         h = np.flatnonzero(self.cells[loc] == pcells)
         s = self.starts[loc[h]]
-        cnt = self.starts[loc[h] + 1] - s
-        tot = int(cnt.sum())
-        if tot == 0:
-            z = np.empty(0, np.int64)
-            return z, z
-        slot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]], cnt) \
-            + np.arange(tot, dtype=np.int64)
-        return np.repeat(h, cnt), slot
-
-    def knn_table(self):
-        """Deduplicated (cell -> region) table for the ring expansion,
-        cover-row order preserved within each cell (tie parity with the
-        previous merge-based probe)."""
-        if self._knn is None:
-            if self.cover is None or len(self.cover) == 0:
-                z = np.empty(0, np.int64)
-                self._knn = (z, np.zeros(1, np.int64), z)
-            else:
-                small = self.cover[["cell", "region_id"]].drop_duplicates()
-                kcells = small["cell"].to_numpy(np.int64)
-                krid = small["region_id"].map(self.code).to_numpy(np.int64)
-                order = np.argsort(kcells, kind="stable")
-                sc = kcells[order]
-                first = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-                self._knn = (sc[first],
-                             np.r_[first, len(sc)].astype(np.int64),
-                             krid[order])
-        return self._knn
+        row, slot = _ragged(s, self.starts[loc[h] + 1] - s)
+        return h[row], slot
 
     def edge_table(self) -> EdgeTable:
         """Every region's y-bucket edges in one table (kNN pair scoring)."""
@@ -233,7 +205,8 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
     BNG-sourced dataset, utilities.py:253-255).
 
     Each round k expands every unresolved point's ring of neighbour cells
-    at once and probes the index's (cell -> region) table. The round's
+    at once and probes the cover index (``lookup``), whose candidates
+    within a cell keep cover-row order. The round's distinct
     (point, region) pairs not scored in an earlier round (a re-score can
     never win: updates need a strictly smaller distance) are scored in one
     pass over the index's edge table, each pair only against the edges
@@ -265,11 +238,10 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
     worst = float(ring_scale.min()) if len(miss_pos) else 1.0
     max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
     max_k = min(max(max_k, 1), 4096)
-    kcells, kstarts, krid = index.knn_table()
     n_rids = max(len(index.rids), 1)
     seen = np.empty(0, np.int64)   # sorted keys of the pairs scored so far
     for k in range(1, max_k + 1):
-        if len(unresolved) == 0 or len(kcells) == 0:
+        if len(unresolved) == 0 or len(index.cells) == 0:
             break
         # probe only the NEW cells of round k: the full 3x3 disc on the
         # first round, the 8k-cell perimeter ring afterwards. Best distances
@@ -288,23 +260,14 @@ def _knn_fallback(miss_pos: np.ndarray, px: np.ndarray, py: np.ndarray,
             ])
         ii = (ci[unresolved, None] + dij[None, :, 0]) % n
         jj = np.clip(cj[unresolved, None] + dij[None, :, 1], 0, n - 1)
-        u_rep = np.broadcast_to(unresolved[:, None], ii.shape).ravel()
-        ring_cells = cell_from_ij(ii.ravel(), jj.ravel(), res)
-        loc = np.searchsorted(kcells, ring_cells)
-        np.minimum(loc, len(kcells) - 1, out=loc)
-        h = np.flatnonzero(kcells[loc] == ring_cells)
-        if h.size:
-            s = kstarts[loc[h]]
-            cnt = kstarts[loc[h] + 1] - s
-            tot = int(cnt.sum())
-            kslot = np.repeat(s - np.r_[np.int64(0), np.cumsum(cnt)[:-1]],
-                              cnt) + np.arange(tot, dtype=np.int64)
-            prid = krid[kslot]
+        pt, slot = index.lookup(cell_from_ij(ii.ravel(), jj.ravel(), res))
+        if pt.size:
+            prid = index.cand_rid[slot]
             # visit order: regions ranked by first appearance in the round
             urf, rfirst = np.unique(prid, return_index=True)
             rank = np.empty(n_rids, np.int64)
             rank[urf[np.argsort(rfirst)]] = np.arange(len(urf))
-            key = np.unique(np.repeat(u_rep[h], cnt) * n_rids + prid)
+            key = np.unique(unresolved[pt // len(dij)] * n_rids + prid)
             if seen.size:
                 at = np.searchsorted(seen, key)
                 np.minimum(at, seen.size - 1, out=at)

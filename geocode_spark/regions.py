@@ -74,8 +74,15 @@ def prepare_regions(
     where x = lon / easting, y = lat / northing in ``crs``. Multipolygons are
     multiple outer rings; holes are additional rings (even-odd semantics).
     Record order is significant: it defines ``region_seq`` for keep-first
-    dedup parity with GeoPandas (utilities.py:268-269).
+    dedup parity with GeoPandas (utilities.py:268-269). Each ``region_id``
+    must appear once: ``ValueError`` names the first repeated one.
     """
+    seen = set()
+    for rec in records:
+        if rec["region_id"] in seen:
+            raise ValueError(f"prepare_regions({name!r}): duplicate "
+                             f"region_id {rec['region_id']!r}")
+        seen.add(rec["region_id"])
     if crs == "EPSG:27700":
         # geometry is normalized to WGS84 at prep time (one-time driver cost)
         # so the cell index and exact kernels run in a single space; the

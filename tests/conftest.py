@@ -22,6 +22,19 @@ def spark():
         s.stop()
 
 
+@pytest.fixture
+def spread_shuffles(spark):
+    """Keep every shuffle partition for one test: adaptive execution would
+    coalesce a small test's shuffle into one task, and then, for example,
+    ``dup_clusters``' local contraction leaves no residue for its fallback
+    loop."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def fixture_dir(spark):
     base = fixtures.FIXTURE_DIR

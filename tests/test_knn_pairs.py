@@ -25,6 +25,22 @@ from geocode_spark.operators import reverse_geocode as rg
 from geocode_spark.regions import load_prepared, prepare_regions
 
 
+def _knn_table(index):
+    """The (cell -> region) table the reference probes: the cover
+    deduplicated on (cell, region), sorted by cell, cover-row order kept
+    within each cell."""
+    if index.cover is None or len(index.cover) == 0:
+        z = np.empty(0, np.int64)
+        return z, np.zeros(1, np.int64), z
+    small = index.cover[["cell", "region_id"]].drop_duplicates()
+    kcells = small["cell"].to_numpy(np.int64)
+    krid = small["region_id"].map(index.code).to_numpy(np.int64)
+    order = np.argsort(kcells, kind="stable")
+    sc = kcells[order]
+    first = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+    return sc[first], np.r_[first, len(sc)].astype(np.int64), krid[order]
+
+
 def _reference_knn(miss_pos, px, py, index, res, max_distance, metric=False):
     n = np.int64(1) << res
     out_rid = np.full(len(miss_pos), None, dtype=object)
@@ -40,7 +56,7 @@ def _reference_knn(miss_pos, px, py, index, res, max_distance, metric=False):
     worst = float(ring_scale.min()) if len(miss_pos) else 1.0
     max_k = int(np.ceil(2.0 * max_distance / (cell_deg * worst) + 0.5)) + 1
     max_k = min(max(max_k, 1), 4096)
-    kcells, kstarts, krid = index.knn_table()
+    kcells, kstarts, krid = _knn_table(index)
     n_rids = max(len(index.rids), 1)
     dist_fn = dist_to_polygon_m_prepared if metric else dist_to_polygon_prepared
     for k in range(1, max_k + 1):
@@ -193,6 +209,22 @@ class TestMatchesRegionByRegion:
         lon = rng.uniform(-0.5, 3.5, 400)
         got, want = _both(index, lat, lon, prep.res, 0.4, False)
         assert len(want[0]) > 0 and "D" not in set(want[1])
+        _assert_same(got, want)
+
+    def test_duplicate_cover_rows(self):
+        # a (cell, region) row repeated in the cover: the probe sees it
+        # twice, the reference's table once; the results must not differ
+        prep = prepare_regions([_rect("A", 0.0, 1.0, 0.0, 1.0),
+                                _rect("B", 2.0, 3.0, 0.0, 1.0)], "dup")
+        cover = pd.concat([prep.cover, prep.cover.iloc[::3]],
+                          ignore_index=True)
+        index = rg._CoverIndex(cover, prep.geoms)
+        assert len(index.cand_rid) > len(_knn_table(index)[2])
+        rng = np.random.default_rng(5)
+        lat = rng.uniform(-0.5, 1.5, 400)
+        lon = rng.uniform(-0.5, 3.5, 400)
+        got, want = _both(index, lat, lon, prep.res, 0.4, False)
+        assert len(want[0]) > 0
         _assert_same(got, want)
 
     def test_empty_cover_and_unreachable_bound(self, complex_set):

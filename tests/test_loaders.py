@@ -79,6 +79,22 @@ def test_geojson_records():
         == [True, True, False]
 
 
+def test_duplicate_region_id_rejected():
+    """Two features sharing an id would leave one geometry but both covers
+    in the prepared set: prepare_regions refuses them by name."""
+    from geocode_spark.regions import prepare_regions
+
+    square = [[[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]]]
+    fc = {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"code": c},
+         "geometry": {"type": "Polygon", "coordinates": square}}
+        for c in ("R1", "R2", "R1")]}
+    recs = geojson_to_records(fc, "code", ())
+    with pytest.raises(ValueError, match="duplicate region_id 'R1'"):
+        prepare_regions(recs, "dup")
+    assert len(prepare_regions(recs[:2], "dup").geoms) == 2
+
+
 class Test7z:
     """S2/S3 on the built-in from-scratch 7z codec (sources/sevenzip.py:
     py7zr is absent here, so the fallback IS the path under test). Writer

@@ -124,7 +124,9 @@ def _users_of(attr):
 def test_worker_maps_go_through_arrow_map():
     """Every worker-side map is ``functions.udfs.arrow_map``, except the
     MinHash bucket walk (it carries the open bucket across batches) and
-    the connected-components contraction, the one pandas map left."""
-    assert _users_of("mapInPandas") == [("dedup", "_local_contract")]
+    the connected-components contraction (it needs the whole partition),
+    both direct ``mapInArrow``s; no pandas map is left."""
+    assert _users_of("mapInPandas") == []
     assert sorted(_users_of("mapInArrow")) == [
-        ("dedup", "minhash_dedup_pairs"), ("udfs", "arrow_map")]
+        ("dedup", "_local_contract"), ("dedup", "minhash_dedup_pairs"),
+        ("udfs", "arrow_map")]

@@ -217,27 +217,34 @@ class TestDedupGuards:
                          F.col("dst").alias("id_b")), max_iters=1)
         assert {r.cluster_id for r in pub.collect()} == {0}
 
-    def test_dup_clusters_fallback_loop_path(self, spark, monkeypatch):
+    def test_dup_clusters_fallback_loop_path(self, spark, spread_shuffles,
+                                             monkeypatch):
         """Force the contracted residue over the driver cap so the
         distributed fallback path runs, and check it matches the driver
-        finish on a cross-partition graph (single-partition edge layout
-        guarantees a non-empty residue is impossible, so spread edges)."""
+        finish on a graph whose components span every range partition
+        (chains within one range leave no residue)."""
         import pyspark.sql.functions as F
 
+        from geocode_spark.operators import dedup
         from geocode_spark.operators.dedup import dup_clusters
 
         nodes = spark.range(64).select(F.col("id").alias("doc_id"))
-        pairs = (spark.range(63).filter((F.col("id") + 1) % 8 != 0)
+        pairs = (spark.range(56)
                  .select(F.col("id").alias("id_a"),
-                         (F.col("id") + 1).alias("id_b"))
+                         (F.col("id") + 8).alias("id_b"))
                  .repartition(8))
         base = {(r.doc_id, r.cluster_id)
                 for r in dup_clusters(nodes, pairs).collect()}
-        monkeypatch.setenv("GEOCODE_CC_DRIVER_MAX_EDGES", "0")
+        loops = []
+        loop = dedup._propagate_loop
+        monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+        monkeypatch.setattr(dedup, "_propagate_loop",
+                            lambda *a: loops.append(a) or loop(*a))
         forced = {(r.doc_id, r.cluster_id)
                   for r in dup_clusters(nodes, pairs).collect()}
+        assert loops
         assert forced == base
-        assert base == {(i, (i // 8) * 8) for i in range(64)}
+        assert base == {(i, i % 8) for i in range(64)}
 
     def test_dup_clusters_ignores_edges_outside_nodes(self, spark):
         """Legacy semantics: a pair endpoint absent from ``nodes`` never

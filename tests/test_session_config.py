@@ -25,16 +25,28 @@ def test_dup_clusters_driver_path_keeps_conf(spark):
     assert got == {(i, (i // 8) * 8) for i in range(64)}
 
 
-def test_dup_clusters_fallback_path_keeps_conf(spark, monkeypatch):
+def test_dup_clusters_fallback_path_keeps_conf(spark, spread_shuffles,
+                                               monkeypatch):
+    from geocode_spark.operators import dedup
     from geocode_spark.operators.dedup import dup_clusters
 
-    monkeypatch.setenv("GEOCODE_CC_DRIVER_MAX_EDGES", "0")
-    nodes, pairs = _chains(spark)
+    loops = []
+    loop = dedup._propagate_loop
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "_propagate_loop",
+                        lambda *a: loops.append(a) or loop(*a))
+    # components that span every range partition leave a residue
+    nodes = spark.range(64).select(F.col("id").alias("doc_id"))
+    pairs = (spark.range(56)
+             .select(F.col("id").alias("id_a"),
+                     (F.col("id") + 8).alias("id_b"))
+             .repartition(8))
     before = spark.conf.getAll
     got = {(r.doc_id, r.cluster_id)
            for r in dup_clusters(nodes, pairs).collect()}
     assert spark.conf.getAll == before
-    assert got == {(i, (i // 8) * 8) for i in range(64)}
+    assert loops
+    assert got == {(i, i % 8) for i in range(64)}
 
 
 def test_lineage_resume_keeps_conf(spark, tmp_path):
