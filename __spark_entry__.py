@@ -745,7 +745,12 @@ def q_stream_mention_counts(spark, sf_dir):
     name = f"mentions_{uuid.uuid4().hex[:8]}"
     q = (counts.writeStream.format("memory").queryName(name)
          .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    try:
+        if not q.awaitTermination(120):
+            raise RuntimeError(f"stream_mention_counts: stream {name!r} "
+                               "did not end within 120 s")
+    finally:
+        q.stop()
     return spark.table(name)
 
 
@@ -774,7 +779,9 @@ def q_sessionize(spark, sf_dir):
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName(name).trigger(availableNow=True).start())
     try:
-        q.awaitTermination(300)
+        if not q.awaitTermination(120):
+            raise RuntimeError(f"sessionize: stream {name!r} did not end "
+                               "within 120 s")
     finally:
         q.stop()
     return spark.table(name).select(

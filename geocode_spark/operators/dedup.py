@@ -141,9 +141,9 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     """Full MinHash-LSH near-dup: signatures -> banded buckets -> candidate
     pairs -> signature-estimated Jaccard filter.
 
-    Signatures are persisted: they feed the band explode twice (self-join)
-    and the verification joins twice — recomputing the shingle UDF 4x would
-    quadruple the only Python-side cost in the plan.
+    Signatures are persisted: they feed the hot-bucket pre-job (only when
+    ``max_bucket_size`` is set) and the one bucket walk, so the shingle
+    UDF, the only Python-side cost in the plan, runs once.
 
     Cache lifecycle: persisted signature sets live in a BOUNDED FIFO
     (newest ``_SIG_CACHE_SIZE``); admitting a new set unpersists the

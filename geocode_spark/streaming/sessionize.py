@@ -3,9 +3,12 @@
 Spark lacks natively (SURVEY.md §2.9 note; the engine's only stateful op).
 
 Groups an event stream by user, maintains per-user session state (start,
-last-seen, count, value sum) and emits a session row whenever a gap larger
-than ``gap_seconds`` closes the session (or the state times out). Works
-identically over the testdata ``events`` table replayed as a stream.
+last-seen, count, value sum) and emits a session row whenever an event
+arrives more than ``gap_seconds`` after the user's last one. The event gap
+is the only rule that closes a session: there is no timeout, so each
+user's last session stays open in state and a bounded replay (such as the
+testdata ``events`` table under ``trigger(availableNow=True)``) ends after
+its data batches, having emitted exactly the closed sessions.
 """
 
 from __future__ import annotations
@@ -41,22 +44,13 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
                value_col: str = "value") -> DataFrame:
     """events (streaming or batch-test via ``foreachBatch``) -> closed
     sessions. State key = user_id; a session closes when a new event
-    arrives more than ``gap_seconds`` after the last, or on timeout."""
+    arrives more than ``gap_seconds`` after the last. Each user's last
+    session stays open in state."""
     gap_us = gap_seconds * 1_000_000
 
     def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
         settle_worker_imports()
         (user_id,) = key
-        if state.hasTimedOut:
-            start_us, last_us, n, total = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "user_id": user_id,
-                "session_start": pd.Timestamp(start_us, unit="us"),
-                "session_end": pd.Timestamp(last_us, unit="us"),
-                "n_events": n, "total_value": total,
-            }])
-            return
         rows = pd.concat(list(pdfs)).sort_values(ts_col)
         ts_us = rows[ts_col].astype("datetime64[us]").astype("int64")
         vals = rows[value_col].astype(float).to_numpy()
@@ -77,7 +71,6 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
             total += float(v)
             last_us = t
         state.update((start_us, last_us, n, total))
-        state.setTimeoutDuration(gap_seconds * 1000)
         if closed:
             yield pd.DataFrame([{
                 "user_id": user_id,
@@ -88,4 +81,4 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800,
 
     return (events.groupBy(user_col).applyInPandasWithState(
         fn, outputStructType=SESSION_SCHEMA, stateStructType=STATE_SCHEMA,
-        outputMode="append", timeoutConf=GroupStateTimeout.ProcessingTimeTimeout))
+        outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout))

@@ -3,11 +3,14 @@ path, facade lifecycle parity, dedup scale guards, single-pass lineage,
 ingest pagination."""
 
 import json
+from pathlib import Path
 
 import pytest
 import pyspark.sql.functions as F
 
 from geocode_spark.geocoder import GeocoderSpark
+
+SCRIPTS = Path(__file__).resolve().parents[1] / "scripts"
 
 
 @pytest.fixture(scope="module")
@@ -393,7 +396,7 @@ class TestCliLifecycle:
 class TestIngestScript:
     def test_paginate_merges_pages(self):
         import sys
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, str(SCRIPTS))
         from fetch_ons_geojson import paginate
 
         pages = {
@@ -412,7 +415,7 @@ class TestIngestScript:
 
     def test_retry_then_success(self):
         import sys
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, str(SCRIPTS))
         from fetch_ons_geojson import fetch_with_retry
 
         calls = []

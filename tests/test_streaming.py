@@ -33,7 +33,7 @@ def test_stream_pipeline_available_now(spark, fixture_dir, tmp_path,
                              checkpoint_dir=str(tmp_path / "ckpt"),
                              output_dir=out_dir)
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(120), "geocode_pages_stream query did not end"
     finally:
         q.stop()
     result = spark.read.parquet(out_dir)
@@ -58,7 +58,7 @@ def test_stream_pipeline_with_prepared_dims(spark, fixture_dir, tmp_path,
                              checkpoint_dir=str(tmp_path / "ckpt"),
                              output_dir=out_dir)
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(120), "geocode_pages_stream query did not end"
     finally:
         q.stop()
     got = spark.read.parquet(out_dir).drop("batch")
@@ -74,7 +74,7 @@ def test_windowed_mention_counts(spark, pages_stream, tmp_path):
          .format("memory").queryName("mention_counts")
          .trigger(availableNow=True).start())
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(120), "stream 'mention_counts' did not end"
         rows = spark.sql("select * from mention_counts").collect()
     finally:
         q.stop()
